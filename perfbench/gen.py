@@ -68,8 +68,17 @@ EPOCH = datetime(1970, 1, 1)
 START_DAY = date(2025, 1, 1)
 #: rows per day, inclusive bounds (the reference's API day is <= 10k rows)
 DAY_ROWS = (3500, 4500)
+# Replays are assumptions, not measurements: no source here records how
+# often ACLED re-delivers a day or how much of it changes.  ACLED does
+# revise past events after publication, so the loop replays an earlier day
+# every second call (one fresh day, then one replay) and revises
+# REPLAY_CORRECTED of its rows, plus a handful of late-reported events.
 #: every REPLAY_EVERY-th operation of the daily loop replays an earlier day
-REPLAY_EVERY = 3
+REPLAY_EVERY = 2
+#: share of a replayed day's rows whose fatalities and notes are corrected
+REPLAY_CORRECTED = 0.1
+#: late-reported events a replay adds, inclusive bounds
+REPLAY_LATE = (5, 40)
 
 
 def _zipf_weights(n: int, s: float = 1.2) -> list[float]:
@@ -178,13 +187,13 @@ class AcledFeed:
         rows = []
         for key in sorted(current):
             row = dict(current[key])
-            if rrng.random() < 0.1:
+            if rrng.random() < REPLAY_CORRECTED:
                 row["fatalities"] = str(int(row["fatalities"]) + 1)
                 row["notes"] = f"{row['notes']} (corrected v{version})"
             rows.append(row)
         late = [
             _acled_row(rrng, day, 60000 + version * 1000 + i)
-            for i in range(rrng.randint(5, 40))
+            for i in range(rrng.randint(*REPLAY_LATE))
         ]
         rows.extend(late)
         self.expected[day] = {r["event_id_cnty"]: r for r in rows}
@@ -272,11 +281,18 @@ class Release:
 class DocumentReleases:
     """A ``documents`` corpus and its seeded chain of releases.
 
-    Each release removes ~1% of the corpus, rewrites the text of ~2%,
-    adds ~2% new documents and plants ~0.2% added documents whose text
-    exactly repeats an unchanged document.  Every rewritten or new text
-    is unique, so the only exact duplicates in a delta are the planted
-    ones: ``appended == added + changed - planted``.
+    Each release has the shape of the release in
+    ``tests/test_release_e2e.py``, whose old and new snapshots are cut
+    from one table by ``doc_id`` moduli (old: ``% 11 != 3``; new:
+    ``% 13 != 5``, text rewritten where ``% 7 == 0``) plus one planted
+    duplicate in its 500 documents.  Against the old snapshot that is:
+    1/13 of the documents removed, the text of 1/7 of the survivors
+    rewritten, 12/130 of the corpus added as new documents, and one
+    added document per 500 whose text exactly repeats an unchanged one.
+    Here the documents are drawn at random (seeded) in those shares.
+    Every rewritten or new text is unique, so the only exact duplicates
+    in a delta are the planted ones: ``appended == added + changed -
+    planted``.
     """
 
     seed: int
@@ -303,9 +319,9 @@ class DocumentReleases:
         rng = random.Random(f"release-{self.seed}-{k}")
         n = len(self.current)
         ids = [d[0] for d in self.current]
-        touched = rng.sample(ids, max(1, n // 100) + max(1, n // 50))
-        removed = set(touched[: max(1, n // 100)])
-        changed = set(touched[max(1, n // 100) :])
+        removed = set(rng.sample(ids, max(1, n // 13)))
+        survivors = [i for i in ids if i not in removed]
+        changed = set(rng.sample(survivors, max(1, len(survivors) // 7)))
         docs = []
         for d in self.current:
             if d[0] in removed:
@@ -316,7 +332,7 @@ class DocumentReleases:
             docs.append(d)
         unchanged = [d for d in docs if d[0] not in changed]
         added = []
-        for _ in range(max(1, n // 50)):
+        for _ in range(max(1, n * 12 // 130)):
             t = self._fresh_text(rng)
             added.append(
                 (self._next_id, t, rng.choices(LANGS, weights=LANG_W)[0],

@@ -12,16 +12,18 @@ outside the timed region.
 Output: a human-readable report, then as the LAST stdout line one JSON
 object ``{"correct", "attempted", "failed", "metrics"}``.  With
 ``--trace 0`` the metrics are the end-to-end ones in BENCHMARK.json;
-with ``--trace 1`` cycles alternate traced/untraced and the metrics are
-the per-layer ones, plus the traced vs untraced operation medians
-(tracing overhead).  The exit code is 1 when any check failed, 2 when
-the program under test cannot be imported.
+with ``--trace 1`` the metrics are the per-layer ones, plus the traced
+vs untraced operation medians and their drift-cancelled ratio (tracing
+overhead); operations are traced in blocks ordered untraced, traced,
+traced, untraced (see :func:`is_traced`).  The exit code is 1 when any
+check failed, 2 when the program under test cannot be imported.
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+import math
 import os
 import shutil
 import sys
@@ -62,7 +64,7 @@ def _live_heap_mb(spark) -> float:
         # the second pass collects what Spark's cleaner released after the
         # first (blocks of frames whose handles died)
         jvm.java.lang.System.gc()
-        time.sleep(1.0)
+        time.sleep(0.5)
     heap = jvm.java.lang.management.ManagementFactory.getMemoryMXBean().getHeapMemoryUsage()
     return heap.getUsed() / 2**20
 
@@ -88,6 +90,57 @@ def _start_spark(work_dir: str, cores: int):
     )
 
 
+def trace_block(cycle: int) -> int:
+    """Operations in one untraced-traced-traced-untraced block: two cycles,
+    or four when a cycle is a single operation."""
+    return 2 * cycle if cycle > 1 else 4
+
+
+def is_traced(j: int, cycle: int) -> bool:
+    """Whether the ``j``-th measured operation of a traced run is traced:
+    the middle half of each block.  Every position of the cycle is then
+    traced once and untraced once per block (for a single-operation cycle,
+    twice each), half of them traced first and half untraced first."""
+    block = trace_block(cycle)
+    return block / 4 <= j % block < 3 * block / 4
+
+
+def position_p50(records: list[OpRecord], cycle: int, traced: bool) -> float:
+    """Median wall time of one operation: each cycle position (one query,
+    or one step of the write loop) first takes its median over the
+    cycles, then the median is taken over the positions."""
+    by_pos: dict[int, list[float]] = {}
+    for j, r in enumerate(records):
+        if r.ok and r.traced == traced:
+            by_pos.setdefault(j % cycle, []).append(r.wall_s)
+    return median([median(v) for v in by_pos.values()])
+
+
+def tracing_overhead(records: list[OpRecord], cycle: int) -> float:
+    """Traced over untraced wall time of the same operation, with warm-up
+    drift cancelled.
+
+    In each block a position runs untraced and traced in consecutive
+    pairs of its occurrences.  A pair traced second reads the overhead
+    times the drift between its two runs; a pair traced first, the
+    overhead over that drift.  The mean log-ratio of each group, averaged
+    over the two groups, cancels the drift even when the groups differ in
+    size (a cycle of three operations has two positions in one group and
+    one in the other)."""
+    block = trace_block(cycle)
+    groups: tuple[list[float], list[float]] = ([], [])  # traced second, traced first
+    for b0 in range(0, len(records) - block + 1, block):
+        for p in range(min(cycle, block)):
+            seen = records[b0 + p:b0 + block:cycle]
+            for first, second in zip(seen[::2], seen[1::2]):
+                if not (first.ok and second.ok):
+                    continue
+                traced, untraced = (second, first) if second.traced else (first, second)
+                groups[0 if second.traced else 1].append(math.log(traced.wall_s / untraced.wall_s))
+    means = [sum(g) / len(g) for g in groups if g]
+    return math.exp(sum(means) / len(means)) if means else 0.0
+
+
 def _tail_line(walls: list[float]) -> str:
     """The highest percentile above the median with >= 10 samples beyond it."""
     best = percentile_with_tail(walls)
@@ -107,8 +160,9 @@ def _layer_values(tracer, wl, records, untraced_p50: float, wall_offset: float) 
         "spark.executor_cpu_s_per_op": median([sum(s.cpu_s for s in t) for t in trees]),
         "spark.shuffle_write_bytes_per_op": median([sum(s.shuffle_write_bytes for s in t) for t in trees]),
         "spark.driver_gap_s": median([tracer.driver_gap_s(r.span, wall_offset) for r in ops]),
-        "trace.traced_op_p50_s": median([r.wall_s for r in ops]),
+        "trace.traced_op_p50_s": position_p50(records, wl.cycle, traced=True),
         "trace.untraced_op_p50_s": untraced_p50,
+        "trace.overhead_ratio": tracing_overhead(records, wl.cycle),
     }
     values.update(wl.layer_metrics(tracer, records))
     return values
@@ -148,9 +202,12 @@ def run(args) -> int:
         records = []
         start = time.perf_counter()
         cycle_no = 0
+        # a traced run stops on a block boundary
+        step = trace_block(wl.cycle) // wl.cycle if tracer else 1
+        min_cycles = max(step, wl.min_cycles)
         while True:
-            traced = tracer is not None and cycle_no % 2 == 1
             for _ in range(wl.cycle):
+                traced = tracer is not None and is_traced(len(records), wl.cycle)
                 try:
                     rec = wl.op(tracer if traced else None)
                 except Exception as exc:  # an operation that raised counts as failed
@@ -160,7 +217,7 @@ def run(args) -> int:
                     tracer.collect_jobs(tracer.subtree(rec.span))
             cycle_no += 1
             elapsed = time.perf_counter() - start
-            enough = elapsed >= args.seconds and (tracer is None or cycle_no >= 2)
+            enough = elapsed >= args.seconds and cycle_no >= min_cycles and cycle_no % step == 0
             if enough or elapsed >= args.seconds + OVERRUN_CAP_S:
                 break
         measured_s = time.perf_counter() - start
@@ -173,7 +230,7 @@ def run(args) -> int:
         correct = not problems and failed == 0 and all(r.ok for r in warm)
         timed = [r for r in records if r.ok and not r.traced]
         walls = [r.wall_s for r in timed]
-        op_p50 = median(walls)
+        op_p50 = position_p50(records, wl.cycle, traced=False)
         mix = median([
             sum(r.wall_s for r in records[i:i + wl.cycle])
             for i in range(0, len(records), wl.cycle)
@@ -207,9 +264,10 @@ def run(args) -> int:
             os.makedirs(trace_dir, exist_ok=True)
             trace_path = os.path.join(trace_dir, f"{args.workload}-seed{args.seed}.jsonl")
             tracer.dump(trace_path)
-            overhead = values["trace.traced_op_p50_s"] / op_p50 - 1 if op_p50 else 0.0
             print(f"  tracing overhead: traced op_p50 {values['trace.traced_op_p50_s']:.4f} s vs "
-                  f"untraced {op_p50:.4f} s ({overhead:+.1%}); spans in {os.path.relpath(trace_path, ROOT)}")
+                  f"untraced {op_p50:.4f} s; per operation, with warm-up drift cancelled, traced "
+                  f"runs {values['trace.overhead_ratio']:.3f}x untraced; "
+                  f"spans in {os.path.relpath(trace_path, ROOT)}")
             print("  note: Spark plans are lazy, so a layer that only builds a plan shows little time;"
                   " its execution lands in the span of whichever caller first runs an action on it")
             for k in sorted(values):

@@ -19,7 +19,9 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, HERE)
 
 import gen  # noqa: E402
+import run  # noqa: E402
 from spans import Span, percentile_with_tail, self_time, union_length  # noqa: E402
+from workloads import OpRecord  # noqa: E402
 
 
 class Pure(unittest.TestCase):
@@ -42,6 +44,43 @@ class Pure(unittest.TestCase):
         self.assertEqual(self_time(parent, kids), 5.0)
         self.assertEqual(self_time(parent, []), 10.0)
 
+    def test_trace_blocks_balance_traced_and_untraced(self):
+        for cycle in (1, 2, 3, 4, 7):
+            block = run.trace_block(cycle)
+            flags = [run.is_traced(j, cycle) for j in range(2 * block)]
+            self.assertEqual(flags[:block], flags[block:])
+            self.assertEqual(sum(flags[:block]), block // 2)
+            self.assertFalse(flags[0])  # untraced first ...
+            self.assertFalse(flags[block - 1])  # ... and last
+            for pos in range(cycle):  # each position traced as often as not
+                at = flags[pos:block:cycle]
+                self.assertEqual(at.count(True), at.count(False))
+        self.assertEqual([run.is_traced(j, 1) for j in range(4)], [False, True, True, False])
+
+    def test_position_p50_takes_per_position_medians_first(self):
+        def rec(wall, traced=False, ok=True):
+            return OpRecord("q", wall, 1, ok, traced)
+
+        # two passes over three queries; the first pass is slow
+        recs = [rec(9.0), rec(5.0), rec(1.0), rec(3.0), rec(4.0), rec(2.0)]
+        # per query: median(9, 3) = 6, median(5, 4) = 4.5, median(1, 2) = 1.5
+        self.assertEqual(run.position_p50(recs, 3, traced=False), 4.5)
+        recs[1] = rec(5.0, ok=False)  # failed operations are left out
+        self.assertEqual(run.position_p50(recs, 3, traced=False), 4.0)
+        recs = [rec(1.0), rec(2.0, True), rec(3.0, True), rec(4.0)]
+        self.assertEqual(run.position_p50(recs, 2, traced=True), 2.5)
+        self.assertEqual(run.position_p50(recs, 2, traced=False), 2.5)
+
+    def test_tracing_overhead_cancels_drift(self):
+        # every cycle runs 20% faster than the one before; tracing adds 10%
+        for cycle in (1, 3, 4):
+            recs = []
+            for j in range(2 * run.trace_block(cycle)):
+                traced = run.is_traced(j, cycle)
+                wall = (j % cycle + 1) * 0.8 ** (j // cycle) * (1.1 if traced else 1.0)
+                recs.append(OpRecord("op", wall, 1, True, traced))
+            self.assertAlmostEqual(run.tracing_overhead(recs, cycle), 1.1)
+
     def test_acled_feed_is_deterministic_per_seed(self):
         def run(seed):
             feed = gen.AcledFeed(seed, day_rows=(50, 80))
@@ -50,13 +89,13 @@ class Pure(unittest.TestCase):
         self.assertEqual(run(1), run(1))
         self.assertNotEqual(run(1), run(2))
         batches = run(1)
-        self.assertEqual([v for _, v, _ in batches].count(0), 5)  # every third op replays
+        self.assertEqual([v for _, v, _ in batches].count(0), 7 - 7 // gen.REPLAY_EVERY)
         sizes = {len(r) for d, v, r in batches if v == 0}
         self.assertGreater(len(sizes), 1)  # day sizes vary
 
     def test_replay_corrects_rows_and_keeps_keys(self):
         feed = gen.AcledFeed(4, day_rows=(200, 200))
-        fresh = {b.day: b for b in (feed.next_batch(), feed.next_batch())}
+        fresh = {b.day: b for b in (feed.next_batch() for _ in range(gen.REPLAY_EVERY - 1))}
         replay = feed.next_batch()
         self.assertEqual(replay.version, 1)
         self.assertLess(fresh[replay.day].keys, replay.keys)  # late events added
@@ -143,7 +182,8 @@ class TinyRun(unittest.TestCase):
         wl.prepare()
         wl.feed = gen.AcledFeed(1, day_rows=(60, 90))
         recs = [wl.op() for _ in range(4)]
-        self.assertEqual([r.kind for r in recs], ["fresh", "fresh", "replay", "fresh"])
+        kinds = ["replay" if i % gen.REPLAY_EVERY == 0 else "fresh" for i in range(1, 5)]
+        self.assertEqual([r.kind for r in recs], kinds)
         self.assertTrue(all(r.ok for r in recs), [r.problem for r in recs])
         self.assertEqual(wl.verify(recs), [])
 

@@ -162,7 +162,12 @@ class Tracer:
                     )
                 stage_ids.update(int(x) for x in job.stageIds().mkString(",").split(",") if x)
             for sid in stage_ids:
-                stage = store.lastStageAttempt(sid)
+                try:
+                    stage = store.lastStageAttempt(sid)
+                except Exception:
+                    # a stage this job skipped, submitted by an earlier job
+                    # whose record the store has since dropped
+                    continue
                 if stage.status().toString() != "SKIPPED":
                     s.cpu_s += stage.executorCpuTime() / 1e9
                     s.shuffle_write_bytes += stage.shuffleWriteBytes()
