@@ -26,9 +26,11 @@ import json
 import math
 import os
 import shutil
+import signal
 import sys
 import time
 
+from procs import become_subreaper, reap_all
 from spans import Tracer, median, percentile_with_tail
 from workloads import WORKLOADS, OpRecord
 
@@ -90,6 +92,27 @@ def _start_spark(work_dir: str, cores: int):
     )
 
 
+def _stop_spark(spark) -> None:
+    """Stop the session, then end its JVM and wait until it and every
+    process it started (Python workers) have ended.
+
+    ``spark.stop()`` alone leaves the JVM running until it sees its stdin
+    close when this process exits, so it would outlive the run."""
+    from pyspark import SparkContext
+
+    gateway = SparkContext._gateway
+    try:
+        if spark is not None:
+            spark.stop()
+    finally:
+        if gateway is not None:
+            gateway.shutdown()
+        jvm = getattr(gateway, "proc", None)
+        if jvm is not None:
+            jvm.stdin.close()  # the JVM exits when its stdin closes
+        reap_all(timeout=30)
+
+
 def trace_block(cycle: int) -> int:
     """Operations in one untraced-traced-traced-untraced block: two cycles,
     or four when a cycle is a single operation."""
@@ -105,15 +128,26 @@ def is_traced(j: int, cycle: int) -> bool:
     return block / 4 <= j % block < 3 * block / 4
 
 
-def position_p50(records: list[OpRecord], cycle: int, traced: bool) -> float:
-    """Median wall time of one operation: each cycle position (one query,
-    or one step of the write loop) first takes its median over the
-    cycles, then the median is taken over the positions."""
+def position_p50(records: list[OpRecord], cycle: int, traced: bool, field: str = "wall_s") -> float:
+    """Median wall (or, with ``field="cpu_s"``, CPU) time of one
+    operation: each cycle position (one query, or one step of the write
+    loop) first takes its median over the cycles, then the median is
+    taken over the positions."""
     by_pos: dict[int, list[float]] = {}
     for j, r in enumerate(records):
         if r.ok and r.traced == traced:
-            by_pos.setdefault(j % cycle, []).append(r.wall_s)
+            by_pos.setdefault(j % cycle, []).append(getattr(r, field))
     return median([median(v) for v in by_pos.values()])
+
+
+def cycle_p50(records: list[OpRecord], cycle: int, field: str = "wall_s") -> float:
+    """Median over the untraced, fully successful cycles of their summed
+    wall (or CPU) time."""
+    return median([
+        sum(getattr(r, field) for r in records[i:i + cycle])
+        for i in range(0, len(records), cycle)
+        if not any(r.traced or not r.ok for r in records[i:i + cycle])
+    ])
 
 
 def tracing_overhead(records: list[OpRecord], cycle: int) -> float:
@@ -183,6 +217,7 @@ def run(args) -> int:
     work_dir = os.path.join(ROOT, ".perfbench", f"{args.workload}-{args.seed}-{os.getpid()}")
     os.makedirs(work_dir)
     spark = None
+    become_subreaper()
     try:
         t0 = time.perf_counter()
         spark = _start_spark(work_dir, cores)
@@ -231,11 +266,9 @@ def run(args) -> int:
         timed = [r for r in records if r.ok and not r.traced]
         walls = [r.wall_s for r in timed]
         op_p50 = position_p50(records, wl.cycle, traced=False)
-        mix = median([
-            sum(r.wall_s for r in records[i:i + wl.cycle])
-            for i in range(0, len(records), wl.cycle)
-            if not any(r.traced or not r.ok for r in records[i:i + wl.cycle])
-        ])
+        op_cpu = position_p50(records, wl.cycle, traced=False, field="cpu_s")
+        mix = cycle_p50(records, wl.cycle)
+        mix_cpu = cycle_p50(records, wl.cycle, field="cpu_s")
         peak = _peak_rss_mb(spark)
         live = _live_heap_mb(spark)
 
@@ -249,13 +282,16 @@ def run(args) -> int:
               f"{[(r.kind, round(r.wall_s, 2)) for r in timed]}")
         print(f"  {_tail_line(walls)}")
         print(f"  mix_s        {mix:.4f} s    one cycle of {wl.cycle} operations")
+        print(f"  op_cpu_s     {op_cpu:.4f} s    CPU time of the process tree: "
+              f"{[(r.kind, round(r.cpu_s, 2)) for r in timed]}")
+        print(f"  mix_cpu_s    {mix_cpu:.4f} s    one cycle")
         for name, value, unit in wl.rates(timed):
             print(f"  {name:12s} {value:.4f} {unit}")
         print(f"  error_rate   {failed / max(len(records), 1):.4f} ratio  {failed} of {len(records)} failed")
         print(f"  heap_live_mb {live:.1f} MB   peak_rss_mb {peak:.1f} MB")
 
         if tracer is None:
-            values = {"setup_s": setup_s, "op_p50_s": op_p50, "mix_s": mix, "heap_live_mb": live}
+            values = {"setup_s": setup_s, "op_cpu_s": op_cpu, "mix_cpu_s": mix_cpu, "heap_live_mb": live}
             metrics = {m["name"]: {"value": values[m["name"]], "unit": m["unit"]}
                        for m in spec["end_to_end"]}
         else:
@@ -283,9 +319,10 @@ def run(args) -> int:
         sys.stdout.flush()
         return 0 if correct else 1
     finally:
-        if spark is not None:
-            spark.stop()
-        shutil.rmtree(work_dir, ignore_errors=True)
+        try:
+            _stop_spark(spark)  # also when the session failed to start
+        finally:
+            shutil.rmtree(work_dir, ignore_errors=True)
 
 
 def main(argv=None) -> int:
@@ -294,6 +331,8 @@ def main(argv=None) -> int:
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
+    # a terminated run still stops its JVM and removes its work directory
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
     return run(ap.parse_args(argv))
 
 

@@ -11,14 +11,17 @@ from __future__ import annotations
 
 import os
 import shutil
+import subprocess
 import sys
 import tempfile
+import time
 import unittest
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, HERE)
 
 import gen  # noqa: E402
+import procs  # noqa: E402
 import run  # noqa: E402
 from spans import Span, percentile_with_tail, self_time, union_length  # noqa: E402
 from workloads import OpRecord  # noqa: E402
@@ -70,6 +73,26 @@ class Pure(unittest.TestCase):
         recs = [rec(1.0), rec(2.0, True), rec(3.0, True), rec(4.0)]
         self.assertEqual(run.position_p50(recs, 2, traced=True), 2.5)
         self.assertEqual(run.position_p50(recs, 2, traced=False), 2.5)
+
+    def test_cycle_p50_sums_whole_successful_untraced_cycles(self):
+        recs = [OpRecord("q", 1.0, 1, True, cpu_s=2.0) for _ in range(6)]
+        recs[4].cpu_s = 5.0
+        self.assertEqual(run.cycle_p50(recs, 3, field="cpu_s"), 7.5)  # median(6, 9)
+        self.assertEqual(run.position_p50(recs, 3, traced=False, field="cpu_s"), 2.0)
+        recs[0].ok = False  # a cycle with a failed operation is left out
+        self.assertEqual(run.cycle_p50(recs, 3, field="cpu_s"), 9.0)
+        recs[3].traced = True
+        self.assertEqual(run.cycle_p50(recs, 3), 0.0)
+
+    def test_process_tree_is_found_and_reaped(self):
+        child = subprocess.Popen([sys.executable, "-c", "import time; time.sleep(60)"])
+        self.assertIn(child.pid, procs.descendants(os.getpid()))
+        procs.reap_all(timeout=0.2)  # kills the child once the timeout passed
+        self.assertNotIn(child.pid, procs.descendants(os.getpid()))
+        c0, t0 = procs.tree_cpu_s(), time.process_time()
+        while time.process_time() - t0 < 0.3:
+            pass
+        self.assertGreater(procs.tree_cpu_s() - c0, 0.2)
 
     def test_tracing_overhead_cancels_drift(self):
         # every cycle runs 20% faster than the one before; tracing adds 10%
@@ -172,7 +195,7 @@ class TinyRun(unittest.TestCase):
 
     @classmethod
     def tearDownClass(cls):
-        cls.spark.stop()
+        run._stop_spark(cls.spark)
         shutil.rmtree(cls.tmp, ignore_errors=True)
 
     def test_daily_feed_matches_silver(self):

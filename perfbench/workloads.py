@@ -22,6 +22,7 @@ import time
 from dataclasses import dataclass
 
 import gen
+from procs import tree_cpu_s
 from spans import median, self_time
 
 
@@ -35,6 +36,7 @@ class OpRecord:
     problem: str = ""
     span: object = None
     pages: int = 0  # pages fetched, for run_day operations
+    cpu_s: float = 0.0  # CPU time of the process tree during the call
 
 
 class Workload:
@@ -76,15 +78,20 @@ class Workload:
         return [self.op() for _ in range(self.warmup_ops)]
 
     def _timed(self, kind: str, tracer, fn):
-        """Run ``fn`` as one operation; returns (wall seconds, result, span)."""
+        """Run ``fn`` as one operation; returns (wall seconds, CPU seconds,
+        result, span).  The CPU time is the whole process tree's (see
+        :func:`procs.tree_cpu_s`), read just outside the wall clock."""
         self.n_ops += 1
+        c0 = tree_cpu_s()
         if tracer is None:
             t0 = time.perf_counter()
             out = fn()
-            return time.perf_counter() - t0, out, None
-        with tracer.span("op", kind=kind) as s:
-            out = fn()
-        return s.wall_s, out, s
+            wall, s = time.perf_counter() - t0, None
+        else:
+            with tracer.span("op", kind=kind) as s:
+                out = fn()
+            wall = s.wall_s
+        return wall, tree_cpu_s() - c0, out, s
 
 
 def _rate(records, kinds) -> float:
@@ -148,7 +155,7 @@ class DailyElt(Workload):
         pages: list[int] = []
         fetch = self.feed.fetcher(batch, pages)
         kind = "replay" if batch.version else "fresh"
-        wall, res, span = self._timed(
+        wall, cpu, res, span = self._timed(
             kind, tracer,
             lambda: run_day(self.spark, fetch, batch.day, self.bronze, self.silver, page_limit=1000),
         )
@@ -157,7 +164,7 @@ class DailyElt(Workload):
             problem = f"{batch.day}: a check suite failed"
         elif res.rows != len(batch.rows):
             problem = f"{batch.day}: run_day reported {res.rows} rows, fetched {len(batch.rows)}"
-        rec = OpRecord(kind, wall, res.rows, not problem, span is not None, problem, span, len(pages))
+        rec = OpRecord(kind, wall, res.rows, not problem, span is not None, problem, span, len(pages), cpu_s=cpu)
         self.day_ops.setdefault(batch.day, []).append(rec)
         return rec
 
@@ -246,7 +253,7 @@ class CorpusReleaseFlow(Workload):
         old = self.spark.read.parquet(self.snapshot)
         new = self.spark.read.parquet(new_path)
         export = self._path(f"export-{rel.number}")
-        wall, res, span = self._timed(
+        wall, cpu, res, span = self._timed(
             "release", tracer,
             lambda: self.runner.apply(
                 self.spark, old, new, export_path=export,
@@ -266,7 +273,7 @@ class CorpusReleaseFlow(Workload):
         elif not res.drift_scores or not all(math.isfinite(r["psi"]) for r in res.drift_scores):
             problem = f"release {rel.number}: drift gate produced no finite scores"
         return OpRecord("release", wall, rel.delta_docs, not problem,
-                        span is not None, problem, span)
+                        span is not None, problem, span, cpu_s=cpu)
 
     def rates(self, records):
         return [("delta_docs_per_s", _rate(records, {"release"}), "docs/s")]
@@ -380,7 +387,7 @@ class AnalyticsRead(Workload):
     def op(self, tracer=None) -> OpRecord:
         name = MIX[self.n_ops % len(MIX)]
         builder = self.specs[name].builder
-        wall, (cols, rows), span = self._timed(name, tracer, lambda: self._collect(builder))
+        wall, cpu, (cols, rows), span = self._timed(name, tracer, lambda: self._collect(builder))
         problem = ""
         if name in self.expected:
             if canonical(cols, rows) != self.expected[name]:
@@ -389,7 +396,7 @@ class AnalyticsRead(Workload):
             problem = f"{name}: no rows"
         elif self.seen.setdefault(name, len(rows)) != len(rows):
             problem = f"{name}: row count changed between passes"
-        return OpRecord(name, wall, 1, not problem, span is not None, problem, span)
+        return OpRecord(name, wall, 1, not problem, span is not None, problem, span, cpu_s=cpu)
 
     def _collect(self, builder):
         df = builder(self.spark, self.data_dir)
