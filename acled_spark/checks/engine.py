@@ -54,10 +54,10 @@ class Check:
     standalone callable.  Fusable checks still carry a derived ``fn``
     so ``check.run(df)`` works in isolation.
 
-    ``n_distinct`` declares how many DISTINCT aggregate groups the
-    check's ``aggs`` carry (``count_distinct`` et al.) — the runner
-    uses it to keep each fused aggregation pass Expand-free (see
-    ``_expand_free_groups``)."""
+    ``has_distinct`` declares that the check's ``aggs`` carry a
+    DISTINCT aggregate group (``count_distinct`` et al.); a fusable
+    check carries at most one.  The runner uses it to keep each fused
+    aggregation pass Expand-free (see ``_expand_free_groups``)."""
 
     name: str
     fn: Callable[[DataFrame], CheckResult]
@@ -65,7 +65,7 @@ class Check:
     aggs: Mapping[str, Column] | None = None
     finalize: Callable[[dict], CheckResult] | None = None
     scan_free: bool = False  # True: touches schema only, runs no job
-    n_distinct: int = 0
+    has_distinct: bool = False
 
     def run(self, df: DataFrame) -> CheckResult:
         return self.fn(df)
@@ -86,11 +86,11 @@ def _fused(
     blocking: bool,
     aggs: Mapping[str, Column],
     finalize,
-    n_distinct: int = 0,
+    has_distinct: bool = False,
 ) -> Check:
     return Check(
         name, _standalone(aggs, finalize), blocking, aggs, finalize,
-        n_distinct=n_distinct,
+        has_distinct=has_distinct,
     )
 
 
@@ -114,7 +114,7 @@ def _expand_free_groups(fusable: Sequence[Check]) -> list[list[Check]]:
     """
     groups: list[list[Check]] = [[]]
     for c in fusable:
-        if c.n_distinct and any(x.n_distinct for x in groups[0]):
+        if c.has_distinct and any(x.has_distinct for x in groups[0]):
             groups.append([c])
         else:
             groups[0].append(c)
@@ -314,9 +314,9 @@ def domain_membership(
             f"{column} values within the declared domain",
         )
 
-    # n_distinct=1: the exact unknown-value count is a DISTINCT
-    # aggregate — declared so the runner keeps fused passes Expand-free
-    return _fused(f"domain[{column}]", blocking, aggs, finalize, n_distinct=1)
+    # the exact unknown-value count is a DISTINCT aggregate — declared
+    # so the runner keeps fused passes Expand-free
+    return _fused(f"domain[{column}]", blocking, aggs, finalize, has_distinct=True)
 
 
 def pk_unique(columns: Sequence[str], blocking: bool = False) -> Check:
@@ -351,11 +351,11 @@ def pk_unique(columns: Sequence[str], blocking: bool = False) -> Check:
             f"({', '.join(columns)}) unique and non-null",
         )
 
-    # n_distinct=1: distinct_keys is a DISTINCT aggregate (Expand-free
-    # pass partitioning in the runner)
+    # distinct_keys is a DISTINCT aggregate (Expand-free pass
+    # partitioning in the runner)
     return _fused(
         f"pk_unique[{', '.join(columns)}]", blocking, aggs, finalize,
-        n_distinct=1,
+        has_distinct=True,
     )
 
 

@@ -87,9 +87,7 @@ def a2_conditional_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def a3_null_empty_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Null+empty census with completeness pct (ref base_assets.py:242-263)."""
-    # spread=False (r15 A/B, same-session min-of-3: 0.57->0.41s): the payload
-    # exchange costs more than this plan's post-scan work saves
-    docs = load(spark, sf_dir, "documents", spread=False)
+    docs = load(spark, sf_dir, "documents")
     c = F.col
     return docs.agg(
         F.count("*").alias("n_rows"),

@@ -116,14 +116,8 @@ def cdc_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     (status, source)-sized.  At 100 TB the join can be made
     exchange-free entirely by storing snapshots bucketed by doc_id —
     same recipe as the dedup signature store's ``table:`` backend.
-
-    spread=False (measured opt-out, r14): both snapshot branches reduce
-    text to a digest AT the scan, so the default documents spread put a
-    full-payload round-robin exchange under each branch for a one-pass
-    md5 that was never the bottleneck (0.57s -> 1.06s in the r14 full
-    bench; same A/B direction as release_delta_audit's 1.63 -> 3.85).
     """
-    docs = load(spark, sf_dir, "documents", spread=False)
+    docs = load(spark, sf_dir, "documents")
     old = docs.filter(F.col("doc_id") % 11 != 3)
     new = docs.filter(F.col("doc_id") % 13 != 5).withColumn(
         "text",
@@ -210,16 +204,8 @@ def release_delta_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast on its own when the delta run is small.  Every join keys
     on doc_id or a digest — text never shuffles, same discipline as
     ``snapshot_diff``.
-
-    spread=False (measured opt-out, r14): this plan scans documents in
-    FOUR subtrees (snapshot_diff's two sides + new_fp + old_fp), each
-    reducing text to a digest scan-side, so the default documents
-    spread put four full-payload round-robin exchanges under a query
-    whose md5 passes were never the bottleneck — same-session A/B at
-    sf0.1: 3.85s spread vs 1.63s unspread.  At 100 TB the spread gate
-    never fires either way (multi-file corpus splits naturally).
     """
-    docs = load(spark, sf_dir, "documents", spread=False)
+    docs = load(spark, sf_dir, "documents")
     old = docs.filter(F.col("doc_id") % 11 != 3)
     new = docs.filter(F.col("doc_id") % 13 != 5).withColumn(
         "text",

@@ -26,9 +26,8 @@ from pyspark.sql.window import Window
 
 from acled_spark.queries.text import (
     FINGERPRINT_SQL,
-    WS,
+    _words_spark,
     fingerprint_spark,
-    ws_trim,
 )
 from acled_spark.registry import query
 from acled_spark.tables import load
@@ -64,7 +63,7 @@ def shingles_spark(text: Column) -> Column:
     (n-1) incomplete grams fall out of the ``filter``; docs with < NGRAM
     words yield an empty array with no special-casing.
     """
-    words = F.split(F.lower(ws_trim(text)), f"{WS}+")
+    words = _words_spark(text)
     grams = words
     for k in range(1, NGRAM):
         shifted = F.slice(words, k + 1, F.size(words))
@@ -96,9 +95,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB the exchange carries ~50 bytes/doc.  Canonical row = min
     doc_id per group (deterministic survivor policy).
     """
-    # spread=False (r15 A/B, same-session min-of-3: 0.67->0.31s): the payload
-    # exchange costs more than this plan's post-scan work saves
-    docs = load(spark, sf_dir, "documents", spread=False)
+    docs = load(spark, sf_dir, "documents")
     g = (
         docs.select("doc_id", fingerprint_spark(F.col("text")).alias("fingerprint"))
         .groupBy("fingerprint")
@@ -145,7 +142,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``max_doc_freq`` to :func:`ngram_jaccard_pairs` to drop stopword-grams
     and bound the join fan-out.
     """
-    docs = load(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents", spread=True)
     return (
         ngram_jaccard_pairs(docs)
         .orderBy(F.desc("jaccard"), "doc1", "doc2")
@@ -216,7 +213,7 @@ def dedup_ngram_novelty(
     approximation: capped verdicts re-rank by design.  Default None
     is the exact, oracle-certified face.
     """
-    docs = load(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents", spread=True)
     sh = docs.select(
         "doc_id", F.explode(shingles_spark(F.col("text"))).alias("s")
     ).select("doc_id", F.md5(F.col("s")).alias("g"))
@@ -399,7 +396,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     generation, cap semantics included); at 100 TB pass
     ``max_doc_freq`` through :func:`containment_pairs`.
     """
-    docs = load(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents", spread=True)
     return (
         containment_pairs(docs)
         .orderBy(F.desc("containment"), "jaccard", "doc1", "doc2")
@@ -493,7 +490,7 @@ def dedup_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`a.source < b.source` is NULL-false on both engines) — route
     those docs through drift_vocab_js's NULL-source bucket instead.
     """
-    docs = load(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents", spread=True)
     sh = (
         docs.select("source", F.explode(shingles_spark(F.col("text"))).alias("shingle"))
         .distinct()
@@ -645,7 +642,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: signatures are fixed-size rows; banding shuffles on the
     16-byte band key only.
     """
-    docs = load(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents", spread=True)
     bands = minhash_bands_spark(docs)
     buckets = bands.groupBy("band_id", "band_key").agg(
         F.count("*").alias("bucket_size")
@@ -715,11 +712,11 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup then groups by signature or hamming-neighborhood.  Signature
     values themselves are parity-checked against the oracle.
     """
-    docs = load(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents", spread=True)
     words = docs.select(
         "doc_id",
         F.explode(
-            F.array_distinct(F.split(F.lower(ws_trim(F.col("text"))), f"{WS}+"))
+            F.array_distinct(_words_spark(F.col("text")))
         ).alias("word"),
     )
     # One md5 + one hex->long conv per word, then 32 shift-and-mask bit
@@ -1192,7 +1189,7 @@ def dedup_components_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     vertex-keyed window aggregates over the candidate-edge frame,
     bucket-capped upstream at 100 TB.
     """
-    docs = load(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents", spread=True)
     bands = minhash_bands_spark(docs)
     # no caller-side localCheckpoint: star_contraction_components
     # materializes its input itself (a second checkpoint of the same
@@ -1276,7 +1273,7 @@ def dedup_cluster_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle round (labels are (v, lbl) pairs over bucketed vertices
     only, never corpus rows).
     """
-    docs = load(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents", spread=True)
     bands = minhash_bands_spark(docs)
     # localCheckpoint materializes the (tiny) edge set and truncates its
     # lineage — without it every propagation round re-evaluates the whole
@@ -1340,9 +1337,7 @@ def dedup_canonical_pick(spark: SparkSession, sf_dir: str) -> DataFrame:
     only source keys.  Same digest-only-exchange argument as
     dedup_exact (SCALE.md).
     """
-    # spread=False (r15 A/B, same-session min-of-3: 0.90->0.56s): the payload
-    # exchange costs more than this plan's post-scan work saves
-    docs = load(spark, sf_dir, "documents", spread=False)
+    docs = load(spark, sf_dir, "documents")
     w = Window.partitionBy("fingerprint").orderBy(F.desc("n_chars"), "doc_id")
     cw = Window.partitionBy("fingerprint")
     ranked = docs.select(
@@ -1588,9 +1583,7 @@ def dedup_incremental_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-batch shape at 100 TB (see acled_spark/dedup_store.py for the
     parquet-backed store lifecycle; this query oracle-pins the check
     semantics shared via incremental_classify)."""
-    # spread=False (r15 A/B, same-session min-of-3: 2.15->2.01s): the payload
-    # exchange costs more than this plan's post-scan work saves
-    docs = load(spark, sf_dir, "documents", spread=False)
+    docs = load(spark, sf_dir, "documents")
     # Per-half pipelines, deliberately NOT a shared materialized
     # signature frame: each half shingles only its own rows, so total
     # explode/aggregate work equals one full-corpus pass either way,

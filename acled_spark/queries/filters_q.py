@@ -205,9 +205,7 @@ def p7_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix against literal thresholds gives an exact, engine-independent
     ~80/10/10 assignment that any worker can recompute locally.
     """
-    # spread=False (r15 A/B, same-session min-of-3: 0.68->0.43s): the payload
-    # exchange costs more than this plan's post-scan work saves
-    docs = load(spark, sf_dir, "documents", spread=False)
+    docs = load(spark, sf_dir, "documents")
     return (
         docs.select("lang", split_spark(F.col("doc_id")).alias("split"))
         .groupBy("lang", "split")
@@ -245,9 +243,7 @@ def p8_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     so each map task forwards at most K rows per stratum before the
     shuffle — the exchange carries O(strata x K), not the corpus.
     """
-    # spread=False (r15 A/B, same-session min-of-3: 0.95->0.54s): the payload
-    # exchange costs more than this plan's post-scan work saves
-    docs = load(spark, sf_dir, "documents", spread=False)
+    docs = load(spark, sf_dir, "documents")
     w = Window.partitionBy("lang").orderBy(
         F.md5(F.col("doc_id").cast("string")), "doc_id"
     )

@@ -212,10 +212,10 @@ def j5_multiway_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     orderkey for a shuffle-free sort-merge join.
     """
     cust = load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    # spread=True (measured opt-in, tables.SPREAD_TABLES note): the
-    # fact sides' single-split scans serialized the scan+project work
-    # feeding the join exchanges; spreading them read 1.72s vs 2.23s
-    # in the same A/B session at sf0.1/local[32].
+    # spread=True (measured opt-in, r14): the fact sides' single-split
+    # scans serialized the scan+project work feeding the join exchanges;
+    # spreading them read 1.72s vs 2.23s in the same A/B session at
+    # sf0.1/local[32].
     orders = load(spark, sf_dir, "orders", spread=True).select(
         "o_orderkey", "o_custkey", "o_orderdate"
     )

@@ -41,9 +41,7 @@ def _le32(v: str) -> str:
 def mm_payload_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Typed-metadata rollup over binary payloads — filters/aggregates on
     the meta struct never touch payload bytes (column pruning)."""
-    # spread=False (r15 A/B, same-session min-of-3: 0.51->0.31s): the payload
-    # exchange costs more than this plan's post-scan work saves
-    media = attach_payloads(load(spark, sf_dir, "documents", spread=False))
+    media = attach_payloads(load(spark, sf_dir, "documents"))
     return (
         media.groupBy(F.col("meta.source").alias("source"))
         .agg(
@@ -108,9 +106,7 @@ def mm_feature_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     (measured 14.7 s → 5.4 s in-suite, 3.9 s isolated, at the sf1.0
     heavy tier).
     """
-    # spread=False (r15 A/B, same-session min-of-3: 1.11->0.61s): the payload
-    # exchange costs more than this plan's post-scan work saves
-    media = attach_payloads(load(spark, sf_dir, "documents", spread=False)).select(
+    media = attach_payloads(load(spark, sf_dir, "documents")).select(
         "doc_id",
         "payload",
         F.md5("payload").alias("jvm_digest"),
@@ -236,9 +232,7 @@ def mm_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     docs = (
-        # spread=False (r15 A/B, same-session min-of-3: 1.68->0.91s): the payload
-        # exchange costs more than this plan's post-scan work saves
-        load(spark, sf_dir, "documents", spread=False)
+        load(spark, sf_dir, "documents")
         .filter(
             F.col("text").isNotNull()
             & (F.octet_length(F.encode(F.col("text"), "UTF-8")) > 0)
@@ -392,9 +386,7 @@ def mm_decode_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     docs = (
-        # spread=False (r15 A/B, same-session min-of-3: 0.81->0.66s): the payload
-        # exchange costs more than this plan's post-scan work saves
-        load(spark, sf_dir, "documents", spread=False)
+        load(spark, sf_dir, "documents")
         .filter(
             F.col("text").isNotNull()
             & (F.octet_length(F.encode(F.col("text"), "UTF-8")) > 0)
@@ -552,9 +544,7 @@ def mm_decode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     docs = (
-        # spread=False (r15 A/B, same-session min-of-3: 0.99->0.79s): the payload
-        # exchange costs more than this plan's post-scan work saves
-        load(spark, sf_dir, "documents", spread=False)
+        load(spark, sf_dir, "documents")
         .filter(
             F.col("text").isNotNull()
             & (F.octet_length(F.encode(F.col("text"), "UTF-8")) > 0)
@@ -774,9 +764,7 @@ def phash_source_docs(
     oracle (ordered first, so the cut is deterministic); ``None`` keeps
     the whole corpus WITHOUT the global sort a bounded cut needs —
     the shape the heavy-tier measurement runs."""
-    # spread=False (r15 A/B, same-session min-of-3: 0.86->0.76s): the payload
-    # exchange costs more than this plan's post-scan work saves
-    valid = load(spark, sf_dir, "documents", spread=False).filter(
+    valid = load(spark, sf_dir, "documents").filter(
         F.col("text").isNotNull()
         & (F.octet_length(F.encode(F.col("text"), "UTF-8")) > 0)
     )

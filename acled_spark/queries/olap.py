@@ -188,14 +188,7 @@ def a19_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     certification harness; the production path at 100 TB is the sketch
     alone (a11_distinct_counts is the exact face).
     """
-    # spread=False: the multi-distinct Expand rewrite evaluates the
-    # rsd=0.01 HLL partials per distinct-value group, so every scan
-    # partition re-allocates ~16k-register buffers for ITS slice of the
-    # user set — measured 2.2s (1 scan task) vs 14s (32 spread tasks)
-    # at sf0.1.  One partial-agg pass over the natural scan is the
-    # cheap shape for this aggregate; the sketch itself is
-    # layout-independent either way.
-    ev = load(spark, sf_dir, "events", spread=False)
+    ev = load(spark, sf_dir, "events")
 
     def rel_err(approx: str, exact: str):
         # exact == 0 only on an empty corpus (both estimators see zero
@@ -370,12 +363,10 @@ def a26_approx_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid).  The second scan is the certification harness; the sketch
     pass alone is the scale path.
     """
-    # spread=False: GK sketch merge results depend on partition layout,
-    # so the scan-spread (tables.SPREAD_TABLES) would move the approx
-    # quantile values with the session's core count — a result change,
-    # not a speedup.  The certification pass is two narrow aggregates
-    # anyway; parallelizing the scan buys it nothing measurable.
-    ev = load(spark, sf_dir, "events", spread=False)
+    # must not spread: GK sketch merge results depend on partition
+    # layout, so a scan spread would move the approx quantile values
+    # with the session's core count
+    ev = load(spark, sf_dir, "events")
     # event_type-sized; consumed exactly once (broadcast onto the rank
     # scan, its columns carried through that aggregation by first()),
     # so the corpus sketch pass runs once with no materialization

@@ -87,9 +87,7 @@ def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream key would be (lang, shard) so no partition exceeds executor
     memory, and bin ids get a shard prefix.
     """
-    # spread=False (r15 A/B, same-session min-of-3: 0.78->0.71s): the payload
-    # exchange costs more than this plan's post-scan work saves
-    docs = load(spark, sf_dir, "documents", spread=False)
+    docs = load(spark, sf_dir, "documents")
     n_tok = _n_tok()
     w = (
         Window.partitionBy("lang")
@@ -160,9 +158,7 @@ def mix_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     as unpartitioned window aggregates over a handful of rows; the only
     real work is the one pass computing per-source token counts.
     """
-    # spread=False (r15 A/B, same-session min-of-3: 0.49->0.47s): the payload
-    # exchange costs more than this plan's post-scan work saves
-    docs = load(spark, sf_dir, "documents", spread=False)
+    docs = load(spark, sf_dir, "documents")
     n_tok = _n_tok()
     s = docs.select("source", n_tok.alias("n_tok")).groupBy("source").agg(
         F.count("*").alias("docs"), F.sum("n_tok").cast("long").alias("tokens")
@@ -232,9 +228,7 @@ def pack_materialize(spark: SparkSession, sf_dir: str) -> DataFrame:
     holds ~TOKEN_BUDGET tokens regardless of corpus size, so the group
     payload never outgrows an executor.  One shuffle on (lang, bin).
     """
-    # spread=False (r15 A/B, same-session min-of-3: 0.69->0.66s): the payload
-    # exchange costs more than this plan's post-scan work saves
-    docs = load(spark, sf_dir, "documents", spread=False)
+    docs = load(spark, sf_dir, "documents")
     n_tok = _n_tok()
     w = (
         Window.partitionBy("lang")
@@ -363,9 +357,7 @@ def train_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     count scales with corpus size; at 100 TB you'd raise it so each
     shard stays executor-sized, which only widens the exchange.
     """
-    # spread=False (r15 A/B, same-session min-of-3: 0.78->0.57s): the payload
-    # exchange costs more than this plan's post-scan work saves
-    docs = load(spark, sf_dir, "documents", spread=False)
+    docs = load(spark, sf_dir, "documents")
     assigned = shuffle_assignment(docs.select("doc_id"))
     return (
         assigned.groupBy("shard")
@@ -501,7 +493,7 @@ def dsir_resample(
     is the measured lever (SCALE.md §dsir-buckets): width trades
     collision noise in the ratio against artifact/broadcast size.
     """
-    docs = load(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents", spread=True)
     arr = _tokens_spark(F.col("text"))
     base = docs.select("doc_id", "lang", arr.alias("arr")).filter(
         F.size("arr") > 0

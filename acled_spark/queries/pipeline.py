@@ -113,12 +113,7 @@ def t3_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from acled_spark.streaming import windowed_counts
 
-    # spread=False: this builder WRITES a bronze copy for the streaming
-    # half — a spread input turns that into 32 tiny files whose listing
-    # + per-file open cost the micro-batch then pays back (measured
-    # 2.5s -> 3.2s at sf0.1); the daily-window aggregate itself gains
-    # nothing from scan parallelism at this size.
-    ev = load(spark, sf_dir, "events", spread=False)
+    ev = load(spark, sf_dir, "events")
     batch = windowed_counts(ev)
     batch_rows = {
         (str(r["window_start"]), r["event_count"], r["total_value"])
@@ -229,9 +224,7 @@ def prep_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from acled_spark.queries.text import fingerprint_spark
 
-    # spread=False (r15 A/B, same-session min-of-3: 0.84->0.82s): the payload
-    # exchange costs more than this plan's post-scan work saves
-    docs = load(spark, sf_dir, "documents", spread=False)
+    docs = load(spark, sf_dir, "documents")
     n_tok, dr = gate_exprs(F.col("text"))
     d = docs.select(
         "doc_id",
@@ -359,13 +352,7 @@ def chk_validation_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from acled_spark.checks.engine import completeness as completeness_check
 
-    # spread=False (r15 A/B, same-session min-of-3: 2.26->1.72s, and
-    # 2.42->1.90s in a second session): once the engine splits the two
-    # distinct groups into Expand-free passes, the per-row aggregate
-    # work no longer repays a payload exchange.  (The r14 opt-in was
-    # ~flat even against the fused Expand: 2.01 vs 2.30, then 2.07 vs
-    # 2.11.)
-    ev = load(spark, sf_dir, "events", spread=False)
+    ev = load(spark, sf_dir, "events")
     results = run_checks(
         ev,
         [

@@ -70,6 +70,12 @@ def _tokens_spark(text: Column) -> Column:
     )
 
 
+def _words_spark(text: Column) -> Column:
+    """Lowered whitespace split, with no blank guard: a blank text
+    yields ``[""]`` (each caller handles that its own way)."""
+    return F.split(F.lower(ws_trim(text)), f"{WS}+")
+
+
 def _tokens_sql(col: str = "text") -> str:
     """DuckDB tokens expression over ``col`` — the oracle twin of
     :func:`_tokens_spark`, parameterized so case-folded variants (e.g.
@@ -101,7 +107,7 @@ _TOKENS_SQL = _tokens_sql()
 )
 def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whitespace token counts per language (training-data token budget)."""
-    docs = load(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents", spread=True)
     n_tokens = F.size(_tokens_spark(F.col("text")))
     return (
         docs.select("lang", n_tokens.alias("n_tokens"))
@@ -156,7 +162,7 @@ def _stopword_filter_sql() -> str:
 )
 def text_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source quality heuristics: length/stopword/punct blend."""
-    docs = load(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents", spread=True)
     toks = _tokens_spark(F.col("text"))
     n_stop = F.size(F.filter(toks, lambda t: t.isin(*_STOPWORDS)))
     n_tokens = F.size(toks)
@@ -217,9 +223,7 @@ def text_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def text_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Marker-word language-ID heuristic -> confusion counts vs labels."""
-    # spread=False (r15 A/B, same-session min-of-3: 0.55->0.54s): the payload
-    # exchange costs more than this plan's post-scan work saves
-    docs = load(spark, sf_dir, "documents", spread=False)
+    docs = load(spark, sf_dir, "documents")
     toks = _tokens_spark(F.col("text"))
     def has_marker(marker: str) -> Column:
         # array_contains, not a filter-HOF scan: native, short-circuit,
@@ -259,9 +263,7 @@ def fingerprint_spark(text: Column) -> Column:
 )
 def text_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document normalized fingerprint (dedup key), value-parity checked."""
-    # spread=False (r15 A/B, same-session min-of-3: 0.24->0.22s): the payload
-    # exchange costs more than this plan's post-scan work saves
-    docs = load(spark, sf_dir, "documents", spread=False)
+    docs = load(spark, sf_dir, "documents")
     return (
         docs.select("doc_id", fingerprint_spark(F.col("text")).alias("fingerprint"))
         .orderBy("doc_id")
@@ -303,7 +305,7 @@ def gram_hashes_spark(text: Column) -> Column:
     element — same trick as shingles_spark); zip_with's null padding
     null-propagates through concat/md5 and falls out of the filter.
     """
-    words = F.split(F.lower(ws_trim(text)), f"{WS}+")
+    words = _words_spark(text)
     grams = words
     for k in range(1, WINNOW_K):
         grams = F.zip_with(
@@ -359,7 +361,7 @@ def text_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the pair exchange is a fraction of the full shingle index while
     still catching every shared run of >= W+K-1 tokens.
     """
-    docs = load(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents", spread=True)
     fp = (
         docs.select("doc_id", gram_hashes_spark(F.col("text")).alias("h"))
         .select("doc_id", F.explode(winnow_mins_spark(F.col("h"))).alias("fp"))
@@ -409,9 +411,7 @@ def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     no sum-order sensitivity.  Shuffles on (doc_id, word) then doc_id;
     partial aggregation keeps both exchanges narrow.
     """
-    # spread=False (r15 A/B, same-session min-of-3: 0.78->0.63s): the payload
-    # exchange costs more than this plan's post-scan work saves
-    docs = load(spark, sf_dir, "documents", spread=False)
+    docs = load(spark, sf_dir, "documents")
     words = docs.select(
         "doc_id",
         F.explode(_tokens_spark(F.lower(F.col("text")))).alias("word"),
@@ -461,7 +461,7 @@ def word_ngrams_spark(text: Column, n: int) -> Column:
     shifted side and concat null-propagates, so the trailing incomplete
     grams fall out of the filter; docs with < n words yield [].
     """
-    words = F.split(F.lower(ws_trim(text)), f"{WS}+")
+    words = _words_spark(text)
     size = F.size(words)
     blocks = {1: words}  # block length -> grams of that length at each start
     grams, length = words, 1
@@ -537,7 +537,7 @@ def text_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     bound hot keys; here both engines use the raw gram so the oracle
     stays exact.
     """
-    docs = load(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents", spread=True)
     ex = docs.select(
         "doc_id",
         "lang",
@@ -686,7 +686,7 @@ def text_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~n_tok/STRIDE, then a lang-sized rollup; per-chunk work is O(CHUNK)
     and rides whole-stage codegen.
     """
-    c = chunk_stream(load(spark, sf_dir, "documents"))
+    c = chunk_stream(load(spark, sf_dir, "documents", spread=True))
     return (
         c.groupBy("lang")
         .agg(
@@ -734,13 +734,11 @@ def text_tfidf_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: df is vocabulary-sized (tiny) and broadcast into the score
     join; the only wide shuffle is the (lang, term) partial-agg count.
     """
-    # spread=False (r15 A/B, same-session min-of-3: 1.19->1.10s): the payload
-    # exchange costs more than this plan's post-scan work saves
-    docs = load(spark, sf_dir, "documents", spread=False)
+    docs = load(spark, sf_dir, "documents")
     tok = docs.filter(F.length(ws_trim(F.col("text"))) > 0).select(
         "doc_id",
         "lang",
-        F.explode(F.split(F.lower(ws_trim(F.col("text"))), f"{WS}+")).alias("w"),
+        F.explode(_words_spark(F.col("text"))).alias("w"),
     )
     # n_docs reads only doc_id (column-pruned scan); the corpus TEXT is
     # scanned exactly once: tf and per-lang df come from ONE (lang, w)
@@ -797,7 +795,7 @@ def gate_exprs(text: Column) -> tuple[Column, Column]:
     """(n_tok, dr) quality-gate expressions — the Spark twins of
     GATE_NTOK_SQL / GATE_DR_SQL.  The ratio is a quotient of two ints,
     bit-identical across engines, so threshold comparisons can't flake."""
-    toks = F.split(F.lower(ws_trim(text)), f"{WS}+")
+    toks = _words_spark(text)
     n_tok = F.when(F.length(ws_trim(text)) == 0, 0).otherwise(
         F.size(F.split(ws_trim(text), f"{WS}+"))
     )
@@ -851,7 +849,7 @@ def doc_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle is the fingerprint window for canonicality (16-byte key),
     then a lang-sized rollup.
     """
-    docs = load(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents", spread=True)
     n_tok, dr = gate_exprs(F.col("text"))
     d = docs.select(
         "doc_id",
@@ -924,13 +922,11 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     token stream and aggregates per doc — the only wide exchange is the
     doc_id rollup.
     """
-    # spread=False (r15 A/B, same-session min-of-3: 1.09->0.94s): the payload
-    # exchange costs more than this plan's post-scan work saves
-    docs = load(spark, sf_dir, "documents", spread=False)
+    docs = load(spark, sf_dir, "documents")
     tok = docs.filter(F.length(ws_trim(F.col("text"))) > 0).select(
         "doc_id",
         "lang",
-        F.explode(F.split(F.lower(ws_trim(F.col("text"))), f"{WS}+")).alias("w"),
+        F.explode(_words_spark(F.col("text"))).alias("w"),
     )
     v = tok.groupBy("w").agg(F.count("*").alias("cnt"))
     # Global token total as a window over the VOCAB aggregate (tiny), not
@@ -1035,14 +1031,8 @@ def text_bigram_logprob(
     """
     if min_count < 1:
         raise ValueError(f"min_count must be >= 1, got {min_count}")
-    # spread=False (r14): with the tokenize-once barrier below, the
-    # corpus text is read and tokenized in ONE pass, so the documents
-    # spread would pay its full-payload round-robin exchange to
-    # parallelize work that no longer repeats — same-session A/B at
-    # sf0.1: 0.45s unspread vs 0.83s spread (and 1.27s spread without
-    # the barrier, the r13 shape).  At 100 TB the gate never fires.
-    docs = load(spark, sf_dir, "documents", spread=False)
-    arr = F.split(F.lower(ws_trim(F.col("text"))), f"{WS}+")
+    docs = load(spark, sf_dir, "documents")
+    arr = _words_spark(F.col("text"))
     # ONE tokenize pass (r14): the plan has three consumers of the
     # token arrays (the LM aggregate, the vocabulary count, and the
     # scoring join's bigram re-derivation), and without a barrier each
@@ -1211,12 +1201,7 @@ def drift_vocab_js(
     """
     if support_floor < 1:
         raise ValueError(f"support_floor must be >= 1, got {support_floor}")
-    # spread=False (r14, measured): three scan subtrees re-derive the
-    # token stream here, so the documents spread pays its full-payload
-    # exchange three times for per-pass CPU that is light at the
-    # benched tiers — same-session A/B: 0.76s unspread vs 1.14s
-    # spread.  At 100 TB the gate never fires (multi-file corpus).
-    docs = load(spark, sf_dir, "documents", spread=False)
+    docs = load(spark, sf_dir, "documents")
     # NULL source is a legitimate per-source bucket (a crawl that lost
     # its provenance tag; ADVICE r11) — but a null-unsafe equi-join
     # downstream would zero its counts and report the all-absent
@@ -1239,7 +1224,7 @@ def drift_vocab_js(
     # below is the one worth pinning (vocab-sized, 3 consumers).
     base = docs.filter(F.length(ws_trim(F.col("text"))) > 0).select(
         F.coalesce(F.col("source"), F.lit(_NULL_SOURCE)).alias("source"),
-        F.split(F.lower(ws_trim(F.col("text"))), f"{WS}+").alias("arr"),
+        _words_spark(F.col("text")).alias("arr"),
     )
     tok = base.select("source", F.explode("arr").alias("w"))
     # lazy checkpoint: the vocab-sized support feeds the corpus-prob
@@ -1335,9 +1320,7 @@ def text_bpe_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     narrow map over the scan + source-sized rollup, nothing shuffles
     but partial counts.
     """
-    # spread=False (r15 A/B, same-session min-of-3: 0.58->0.55s): the payload
-    # exchange costs more than this plan's post-scan work saves
-    docs = load(spark, sf_dir, "documents", spread=False)
+    docs = load(spark, sf_dir, "documents")
     n_ws = F.when(F.length(ws_trim(F.col("text"))) == 0, 0).otherwise(
         F.size(F.split(ws_trim(F.col("text")), f"{WS}+"))
     )
@@ -1404,16 +1387,14 @@ def text_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id, so the "growth order" is reproducible on any engine or
     cluster size.
     """
-    # spread=False (r15 A/B, same-session min-of-3: 1.27->1.12s): the payload
-    # exchange costs more than this plan's post-scan work saves
-    docs = load(spark, sf_dir, "documents", spread=False)
+    docs = load(spark, sf_dir, "documents")
     h1 = F.conv(
         F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2), 16, 10
     ).cast("int")
     decile = F.floor(h1 * 10 / 256).cast("int")
     tok = docs.filter(F.length(ws_trim(F.col("text"))) > 0).select(
         decile.alias("decile"),
-        F.explode(F.split(F.lower(ws_trim(F.col("text"))), f"{WS}+")).alias("w"),
+        F.explode(_words_spark(F.col("text"))).alias("w"),
     )
     # g is DISTINCT on (decile, w), so each word has exactly one row
     # where decile == its min decile — first-seen detection is a
@@ -1478,12 +1459,10 @@ def text_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg; the top-ZIPF_TOP cut is a rank window over vocab-sized data;
     the regression runs over ZIPF_TOP rows.
     """
-    # spread=False (r15 A/B, same-session min-of-3: 0.74->0.53s): the payload
-    # exchange costs more than this plan's post-scan work saves
-    docs = load(spark, sf_dir, "documents", spread=False)
+    docs = load(spark, sf_dir, "documents")
     f = (
         docs.filter(F.length(ws_trim(F.col("text"))) > 0)
-        .select(F.explode(F.split(F.lower(ws_trim(F.col("text"))), f"{WS}+")).alias("w"))
+        .select(F.explode(_words_spark(F.col("text"))).alias("w"))
         .groupBy("w")
         .agg(F.count("*").alias("freq"))
     )
@@ -1554,7 +1533,7 @@ def text_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     digit-free, so counts here are honest zeros).  Scale: per-document
     codegen expressions riding the scan; one small (lang) rollup.
     """
-    docs = load(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents", spread=True)
     text = F.col("text")
     scrubbed = _scrub_pii(text)
     aggs = [F.count("*").alias("docs")]
@@ -1655,7 +1634,7 @@ def text_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     quality classifier; this extends the LLM-pipeline surface
     (SURVEY.md extended ops).
     """
-    docs = load(spark, sf_dir, "documents").filter(F.length(ws_trim(F.col("text"))) > 0)
+    docs = load(spark, sf_dir, "documents", spread=True).filter(F.length(ws_trim(F.col("text"))) > 0)
     toks = _tokens_spark(F.col("text"))
     d = docs.select(
         "lang",
@@ -1749,7 +1728,7 @@ def text_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-aggregated frequencies + AQE-splittable join instead of the
     per-digest window partition.
     """
-    return dup_span_census(load(spark, sf_dir, "documents"))
+    return dup_span_census(load(spark, sf_dir, "documents", spread=True))
 
 
 def dup_span_census(
@@ -1930,11 +1909,7 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical across engines and partitionings; rank ties break on
     doc_id.
     """
-    # spread=False (r14, measured with the tokenize-once barrier):
-    # 1.43s unspread vs 2.21s spread same-session — the single
-    # tokenize pass no longer repays the full-payload spread exchange,
-    # and the downstream work is vocabulary-filtered (tiny).
-    docs = load(spark, sf_dir, "documents", spread=False).filter(
+    docs = load(spark, sf_dir, "documents").filter(
         F.length(ws_trim(F.col("text"))) > 0
     )
     toks_col = _tokens_spark(F.lower(F.col("text")))

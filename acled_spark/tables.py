@@ -9,6 +9,11 @@ The driver materializes a deterministic star schema + stream/LLM tables
   naive timestamps bit-for-bit regardless of session timezone.
 - ``orders.o_orderdate`` / ``lineitem.l_shipdate`` already arrive as
   TIMESTAMP_NTZ (micros) — no conversion needed.
+- Scan spread (round-robin repartition of a small single-file scan) is
+  off by default; a builder opts in with ``spread=True`` only when
+  per-row CPU ahead of its first reduction dominates.  A size gate
+  makes the spread a no-op on a source that already fills the session,
+  so at scale it never fires.
 
 Everything downstream (queries, benchmarks, tests) goes through
 ``load`` so the normalization lives in exactly one place.
@@ -76,28 +81,6 @@ def configure(spark: SparkSession) -> None:
                 raise
 
 
-#: tables whose scans are spread across the session's cores when the
-#: source cannot fill them (single-row-group parquet files split to ONE
-#: scan task no matter the split config, so every downstream map-side
-#: derivation — gram explode, md5, HOF math — runs single-threaded on a
-#: 32-core session; optimization guide §2.5 "one huge unsplittable
-#: file: repartition immediately after the read").
-#:
-#: Only ``documents`` defaults on: its consumers are the CPU-bound
-#: text/dedup family (explode + md5 per gram), where the one-shot
-#: payload exchange buys 3-4x (text_dup_spans 4.7->1.1s,
-#: text_contamination 4.1->1.1s at sf0.1/local[32]).  ``events`` /
-#: ``orders`` / ``lineitem`` consumers are light window/agg/join plans
-#: that shuffle immediately anyway — A/B (same --only session): the
-#: extra exchange cost sess_user_sessions +0.47s, funnel +0.40s, w1
-#: +0.25s and bought nothing, so those tables default OFF and the few
-#: measured winners (j5's fact-side scan, chk_validation_summary's
-#: 31-check evaluation) opt in per call.  ``embeddings`` must stay
-#: unspread everywhere: KMeans' k-means|| init is partition-layout
-#: sensitive, so respreading it would move cell assignments in
-#: sim_ann_ivf / dedup_semantic (a result change, not a speedup).
-SPREAD_TABLES = frozenset({"documents"})
-
 #: source-size cache for the spread gate (one os.stat per (dir, table)
 #: per process, not per load call)
 _scan_bytes: dict[str, int] = {}
@@ -111,8 +94,6 @@ def _spread_partitions(spark: SparkSession, path: str) -> int:
     (the driver benches at several core counts) and becomes a no-op on
     a real multi-file corpus whose scan already parallelizes — at the
     100 TB design point this never fires and no payload is shuffled."""
-    if os.environ.get("SPARK_GRAFT_SPREAD") == "0":  # A/B kill-switch
-        return 0
     size = _scan_bytes.get(path)
     if size is None:
         try:
@@ -136,19 +117,23 @@ def _spread_partitions(spark: SparkSession, path: str) -> int:
 
 
 def load(
-    spark: SparkSession, sf_dir: str, name: str, spread: bool | None = None
+    spark: SparkSession, sf_dir: str, name: str, spread: bool = False
 ) -> DataFrame:
     """Load one testdata table, normalized for engine parity.
 
     ``spread``: round-robin repartition the scan to the session's core
-    count when the source is too small to split naturally (see
-    ``SPREAD_TABLES``).  Default (None) spreads the tables in
-    ``SPREAD_TABLES``; pass False for consumers whose output depends on
-    partition layout (a26's GK quantile sketch merges) and True to
-    opt a non-default table in.  Round-robin (not keyed): the plan
-    shows it as RoundRobinPartitioning — distinguishable from the
-    query's own exchanges — and sort-before-repartition (on by
-    default) keeps the assignment deterministic across retries.
+    count.  Off by default; a builder opts in only when per-row CPU
+    ahead of its first reduction (gram explode, md5, HOF math,
+    JsonPath) dominates, since a single-row-group parquet file splits
+    to ONE scan task and that work would otherwise run single-threaded.
+    The size gate (``_spread_partitions``) makes it a no-op on a source
+    that already fills the session, so at scale no payload moves.
+    Never spread a scan whose result depends on partition layout (a
+    GK quantile sketch's merges, KMeans' k-means|| init over
+    ``embeddings``).  Round-robin, not keyed: the plan shows it as
+    RoundRobinPartitioning, distinguishable from the query's own
+    exchanges, and sort-before-repartition (on by default) keeps the
+    assignment deterministic across retries.
     """
     configure(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
@@ -158,8 +143,6 @@ def load(
         df = df.withColumn(
             "ts", F.expr("CAST(timestamp_micros(ts div 1000) AS timestamp_ntz)")
         )
-    if spread is None:
-        spread = name in SPREAD_TABLES
     if spread:
         n = _spread_partitions(spark, path)
         if n:
@@ -167,11 +150,8 @@ def load(
     return df
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
 def register_views(spark: SparkSession, sf_dir: str, suffix: str = "") -> None:
     """Register all tables as temp views (for spark.sql entry points)."""
     for name in TABLE_NAMES:
-        load(spark, sf_dir, name).createOrReplaceTempView(name + suffix)
+        df = load(spark, sf_dir, name, spread=name == "documents")
+        df.createOrReplaceTempView(name + suffix)

@@ -475,6 +475,17 @@ def test_bless_baseline_median_math(tmp_path):
         raised = "s4" in str(e)
     assert raised
 
+    # the CLI writes where --out points, also as the last argument
+    paths = []
+    for name, s in (("s1", s1), ("s2", s2), ("s3", s3)):
+        paths.append(str(tmp_path / f"{name}.json"))
+        with open(paths[-1], "w") as fh:
+            json.dump(s, fh)
+    out = tmp_path / "blessed.json"
+    assert bb.main([*paths, "--out", str(out)]) == 0
+    with open(out) as fh:
+        assert json.load(fh)["queries"] == blessed["queries"]
+
 
 def test_summary_line_rounds_to_two_decimals():
     timings = {"q1": 1.2345, "q2": 0.456}

@@ -314,7 +314,7 @@ def test_second_distinct_group_splits_into_expand_free_pass(spark, monkeypatch):
     ]
     groups = _expand_free_groups(suite)
     assert len(groups) == 2
-    assert sum(c.n_distinct > 0 for c in groups[0]) == 1  # first distinct fuses
+    assert sum(c.has_distinct for c in groups[0]) == 1  # first distinct fuses
     assert [c.name for c in groups[1]] == ["pk_unique[event_id]"]
 
     ev = load(spark, "/root/testdata/sf0.001", "events").limit(150)

@@ -30,12 +30,8 @@ def test_payload_schema_and_metadata(spark):
     assert row["meta"]["mime"] == "text/plain"
 
 
-    # spread=False in the limit-corpus loads of this file: the tests
-    # pin doc subsets via limit(N) over the natural row order and
-    # compare across separate evaluations; the round-robin spread
-    # reorders rows ahead of the limit (r14)
 def test_extract_features_matches_local_compute(spark):
-    docs = load(spark, SF_DIR, "documents", spread=False).limit(20)
+    docs = load(spark, SF_DIR, "documents").limit(20)
     feats = {
         r["doc_id"]: r for r in extract_features(attach_payloads(docs)).collect()
     }
@@ -193,7 +189,7 @@ def test_resize_geometry_invariants(spark):
     every output side fits max_side."""
     from acled_spark.multimodal import attach_payloads, fake_decode, resize_images
 
-    docs = load(spark, SF_DIR, "documents", spread=False).limit(50)
+    docs = load(spark, SF_DIR, "documents").limit(50)
     media = attach_payloads(docs)
     out = resize_images(media, max_side=100).collect()
     assert len(out) == 50
@@ -215,7 +211,7 @@ def test_sample_frames_fanout_and_determinism(spark):
         sample_frames,
     )
 
-    docs = load(spark, SF_DIR, "documents", spread=False).limit(20)
+    docs = load(spark, SF_DIR, "documents").limit(20)
     media = attach_payloads(docs)
     frames = sample_frames(media, every=3)
     rows = frames.collect()
@@ -270,7 +266,7 @@ def test_attach_payloads_matches_documented_media_schema(spark):
 
     from acled_spark.multimodal import MEDIA_SCHEMA, attach_payloads
 
-    docs = load(spark, SF_DIR, "documents", spread=False).limit(3)
+    docs = load(spark, SF_DIR, "documents").limit(3)
     got = attach_payloads(docs).schema
     want = _parse_datatype_string(MEDIA_SCHEMA)
     assert [

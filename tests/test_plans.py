@@ -137,28 +137,18 @@ def test_weighted_sample_is_topk_not_full_sort(spark):
 
 def test_canonical_pick_single_scan_no_text_in_shuffle(spark):
     """dedup_canonical_pick: one corpus scan; the query's own exchanges
-    carry the digest + scalars, never the document text.
-
-    The one exemption is the scan-spread's RoundRobinPartitioning
-    exchange (tables.SPREAD_TABLES): it moves the payload exactly once,
-    scan-side, before any derivation — the guide-§8 "heavy bytes move
-    once" shape — and is gated off on any corpus whose scan already
-    parallelizes.  Every KEYED exchange must still be text-free."""
+    carry the digest + scalars, never the document text."""
     plan = _plan(spark, "dedup_canonical_pick")
     assert _scan_count(plan) == 1
     # text is consumed by the fingerprint projection below the exchange:
-    # no keyed Exchange's input attribute list may reference raw text
+    # no Exchange's input attribute list may reference raw text
     import re
 
     exchange_sections = re.findall(
         r"\(\d+\) Exchange\n(.*?)(?:\n\n|\Z)", plan, flags=re.S
     )
-    keyed = [
-        seg for seg in exchange_sections
-        if "RoundRobinPartitioning" not in seg
-    ]
-    assert keyed, plan
-    assert all("text#" not in seg for seg in keyed), keyed
+    assert exchange_sections, plan
+    assert all("text#" not in seg for seg in exchange_sections), exchange_sections
 
 
 def test_ivf_probe_selection_broadcasts_centroids(spark):
@@ -266,13 +256,11 @@ def test_dataframe_build_runs_no_job(spark):
         for j in tracker.getJobIdsForGroup(group):
             for s in tracker.getJobInfo(j).stageIds:
                 si = tracker.getStageInfo(s)
-                # Allowed build-time stages: spark.read's parquet
-                # schema-inference footer read, and (post scan-spread,
-                # r14) the AQE pre-run of the spread exchange's MAP
-                # side — both are 1-task scan-side stages.  The guard's
-                # point survives: a corpus-scale DERIVATION stage (the
-                # 32-task post-exchange tokenize/aggregate work) must
-                # never run at DataFrame-build time.
+                # The one allowed build-time stage is spark.read's
+                # 1-task parquet schema-inference footer read; a
+                # corpus-scale DERIVATION stage (the multi-task
+                # tokenize/aggregate work) must never run at
+                # DataFrame-build time.
                 assert si.numTasks == 1, (
                     f"{name} ran a data job at build time: "
                     f"stage {si.name!r} ({si.numTasks} tasks)"
@@ -427,8 +415,8 @@ def _shuffle_input_attrs(df) -> list[list[str]]:
             walk(node.initialPlan())
             return
         if "ShuffleExchange" in name:
-            # the scan-spread's RoundRobinPartitioning exchange
-            # (tables.SPREAD_TABLES) is exempt: it moves the payload
+            # the scan spread's RoundRobinPartitioning exchange
+            # (tables.load(spread=True)) is exempt: it moves the payload
             # exactly once, scan-side, before any derivation, and is
             # gated off on any corpus whose scan already parallelizes.
             # Every KEYED exchange is still audited.
@@ -571,3 +559,49 @@ def test_source_overlap_single_corpus_scan(spark):
     assert len(re.findall(r"\(\d+\) Scan ExistingRDD", plan)) >= 3
     assert "TakeOrderedAndProject" in plan
     assert "CartesianProduct" not in plan
+
+
+#: registered queries that opt a scan into the round-robin scan spread
+#: (``tables.load(..., spread=True)``).  A dropped or accidental opt-in
+#: changes a plan but no result, so no parity test would see it.
+SPREAD_QUERIES = frozenset({
+    "dedup_cluster_census", "dedup_components_exact", "dedup_containment",
+    "dedup_minhash_lsh", "dedup_ngram_jaccard", "dedup_ngram_novelty",
+    "dedup_simhash", "dedup_source_overlap", "doc_filter_funnel",
+    "dsir_resample", "f1_try_cast_json", "j5_multiway_revenue",
+    "text_chunking", "text_contamination", "text_dup_spans",
+    "text_pii_scrub", "text_quality_classifier", "text_quality_scores",
+    "text_token_stats", "text_winnow_pairs",
+})
+#: of those, the ones whose spread sits under a lazy localCheckpoint:
+#: the final plan reads the checkpoint, so no exchange shows in it
+SPREAD_UNDER_CHECKPOINT = frozenset({
+    "dedup_cluster_census", "dedup_components_exact",
+    "dedup_source_overlap", "dsir_resample",
+})
+
+
+def test_spread_opt_ins_are_pinned(spark, monkeypatch):
+    """Exactly SPREAD_QUERIES request a spread, and each of them not
+    hidden by a checkpoint carries the RoundRobinPartitioning exchange."""
+    from acled_spark import tables
+    from tests.conftest import formatted_plan
+
+    spread_paths: list[str] = []
+    real = tables._spread_partitions
+
+    def recording(spark_, path):
+        spread_paths.append(path)
+        return real(spark_, path)
+
+    monkeypatch.setattr(tables, "_spread_partitions", recording)
+    requested, in_plan = set(), set()
+    for name, spec in all_specs().items():
+        spread_paths.clear()
+        plan = formatted_plan(spark, spec.builder(spark, SF_DIR))
+        if spread_paths:
+            requested.add(name)
+        if "RoundRobinPartitioning" in plan:
+            in_plan.add(name)
+    assert requested == SPREAD_QUERIES
+    assert in_plan == SPREAD_QUERIES - SPREAD_UNDER_CHECKPOINT

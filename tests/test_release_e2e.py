@@ -294,15 +294,9 @@ def test_recover_store_promotes_committed_staging_only(spark, tmp_path):
         recover_store,
     )
 
-    # spread=False: the test assumes limit(30) takes the file's natural
-    # row order (so doc_id < 10 rows are present and the >= 10 filter
-    # actually shrinks the corpus); the round-robin spread reorders
-    # rows ahead of the limit
-    docs = (
-        load(spark, SF_DIR, "documents", spread=False)
-        .select(*DOC_COLS)
-        .limit(30)
-    )
+    # limit(30) takes the file's natural row order, so doc_id < 10 rows
+    # are present and the >= 10 filter actually shrinks the corpus
+    docs = load(spark, SF_DIR, "documents").select(*DOC_COLS).limit(30)
     store = str(tmp_path / "s")
     init_store(docs, store)
     n0 = _read_exact(spark, store).count()
@@ -465,15 +459,9 @@ def test_removed_then_readded_text_survives_release(spark, tmp_path):
     from acled_spark.export import read_jsonl
     from acled_spark.release import CorpusRelease
 
-    # spread=False: the test pins doc_id 7 inside its 40-doc corpus,
-    # which relies on limit(40) taking the file's natural row order —
-    # the round-robin spread reorders rows ahead of the limit and was
-    # silently swapping the subset out from under the pin
-    docs = (
-        load(spark, SF_DIR, "documents", spread=False)
-        .select(*DOC_COLS)
-        .limit(40)
-    )
+    # the test pins doc_id 7 inside its 40-doc corpus, which relies on
+    # limit(40) taking the file's natural row order
+    docs = load(spark, SF_DIR, "documents").select(*DOC_COLS).limit(40)
     removed = docs.filter(F.col("doc_id") == 7)
     moved_text = removed.first()["text"]
     old = docs

@@ -22,6 +22,7 @@ Usage: python tools/bless_baseline.py session1.json session2.json ...
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import statistics
@@ -116,27 +117,23 @@ def bless(sessions: list[tuple[str, dict]]) -> dict:
     }
 
 
-def main() -> int:
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    out = None
-    for i, a in enumerate(sys.argv[1:]):
-        if a == "--out":
-            out = sys.argv[1:][i + 1]
-            args.remove(out)
-    if out is None:
-        import bench
+def main(argv: list[str] | None = None) -> int:
+    import bench
 
-        out = bench.FULL_PATH
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("sessions", nargs="+", help="session dump JSON files")
+    ap.add_argument("--out", default=bench.FULL_PATH, help="baseline path to write")
+    args = ap.parse_args(argv)
     sessions = []
-    for path in args:
+    for path in args.sessions:
         with open(path) as fh:
             sessions.append((path, json.load(fh)))
     blessed = bless(sessions)
-    with open(out, "w") as fh:
+    with open(args.out, "w") as fh:
         json.dump(blessed, fh, indent=1, sort_keys=True)
     total = round(sum(blessed["queries"].values()), 3)
     print(
-        f"blessed {out}: {len(blessed['queries'])} queries, total {total}s, "
+        f"blessed {args.out}: {len(blessed['queries'])} queries, total {total}s, "
         f"canary_floor {blessed['canary_floor']}, "
         f"{len(sessions)} sessions"
     )
