@@ -132,6 +132,14 @@ def run_checks(
     when more than one Spark action will actually run (fused block +
     each non-fusable check); a fully-fusable suite is one uncached
     pass.
+
+    ASSUMPTION: ``df`` is rooted at a scan or at a fixed in-JVM
+    relation (``run_day``'s typed day, built from Arrow batches).  The
+    distinct-split passes each re-evaluate ``df``'s lineage; over such
+    a root that is cheap and every pass reads the same snapshot.  A
+    caller with a derived frame (joins or upserts upstream) or a
+    non-deterministic one (an executor-side fetch) should cache or
+    checkpoint it first.
     """
     checks = list(checks)  # a generator would be exhausted by the splits
     fusable = [c for c in checks if c.aggs is not None]

@@ -8,11 +8,15 @@ but every knob is the one you would set on a real cluster:
   somewhere, AQE re-plans from real shuffle stats.
 - ``spark.sql.shuffle.partitions`` sized to cores locally; on a cluster
   this should be ~2-3x total cores (AQE coalesces the excess).
-- Arrow enabled for any pandas-UDF path (vectorized transfer).
+- Arrow enabled for any pandas-UDF path (vectorized transfer), and
+  Arrow-built frames kept as RDDs of Arrow batches, never folded into
+  driver-side local relations.
 - Session timezone pinned to UTC so date/timestamp semantics are
   deterministic and match the naive timestamps in the test parquet.
 - ``nanosAsLong`` because the driver-generated parquet stores
   TIMESTAMP(NANOS) which Spark has no native type for.
+- A codegen cache large enough for the write path's working set, so
+  generated classes stay compiled (and JIT-warm) between operations.
 """
 
 from __future__ import annotations
@@ -38,6 +42,11 @@ RUNTIME_CONF = {
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # an Arrow-built frame (the fetched day) stays an RDD of Arrow
+    # batches: as a driver-side LocalRelation, Catalyst would re-run
+    # every projection over it (typed_cast) row by row, interpreted, on
+    # the driver at each action (SCALE.md §codegen-cache)
+    "spark.sql.execution.arrow.localRelationThreshold": "0",
 }
 
 
@@ -75,6 +84,13 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
+        # a static conf (fixed at session start), so not in RUNTIME_CONF.
+        # Spark's default of 100 entries thrashes: one CorpusRelease.apply
+        # generates ~200 classes and an ingest cycle ~300, so each
+        # release would evict its own and run_day's classes, to be
+        # recompiled (and re-JITted) at their next use
+        # (SCALE.md §codegen-cache).
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     for k, v in RUNTIME_CONF.items():
         builder = builder.config(k, v)

@@ -164,12 +164,22 @@ def _normalize_value(record: dict, name: str):
 
 def _rows_to_df(spark: SparkSession, rows: list[dict]) -> DataFrame:
     """Fetched records -> all-string raw frame (S3; one day is driver-
-    sized by the source's own page cap)."""
-    normalized = [
-        tuple(_normalize_value(r, name) for name in ACLED_RAW_SCHEMA.fieldNames())
-        for r in rows
-    ]
-    return spark.createDataFrame(normalized, schema=ACLED_RAW_SCHEMA)
+    sized by the source's own page cap).
+
+    The day travels as Arrow string columns, which the JVM keeps as a
+    fixed RDD of Arrow batches.  A list of tuples would instead land as
+    a ``PythonRDD``, so every action over the frame (checks, bronze
+    write, upsert, count) would re-pickle the whole day through a
+    Python worker."""
+    import pyarrow as pa
+
+    table = pa.table(
+        {
+            name: pa.array([_normalize_value(r, name) for r in rows], pa.string())
+            for name in ACLED_RAW_SCHEMA.fieldNames()
+        }
+    )
+    return spark.createDataFrame(table, schema=ACLED_RAW_SCHEMA)
 
 
 #: Region name -> ACLED region codes, mirroring the reference's region

@@ -16,8 +16,10 @@ from acled_spark.schema import ACLED_RAW_SCHEMA, ACLED_SCHEMA, VALID_EVENT_TYPES
 from acled_spark.silver import upsert_partitioned
 from acled_spark.source import fetch_day, ingest_day, partition_days
 
-# slow tier (VERDICT r14 #1): ingest-to-silver pipeline e2e (~1.5 min); run with `-m ""`.
-pytestmark = pytest.mark.slow
+# slow tier (VERDICT r14 #1): the ingest-to-silver pipeline e2e tests
+# (~1.5 min) carry `slow`; run them with `-m ""`.  The write-path pins
+# at the end of the file run in the default tier.
+slow = pytest.mark.slow
 
 
 EPOCH = 1735603200  # 2024-12-31 00:00:00 UTC
@@ -73,6 +75,7 @@ def make_fetcher(rows_per_day: int = 120, page_cap: int = 50):
     return fetcher
 
 
+@slow
 def test_page_loop_stops_on_short_page():
     calls = []
 
@@ -86,6 +89,7 @@ def test_page_loop_stops_on_short_page():
     assert calls == [1, 2, 3]  # stopped at the short page
 
 
+@slow
 def test_page_cap_exhaustion_raises_not_truncates(monkeypatch):
     """Round-7 review: a day whose every page comes back FULL through
     MAX_PAGES has more data than the cap can fetch — returning the
@@ -109,6 +113,7 @@ def test_page_cap_exhaustion_raises_not_truncates(monkeypatch):
     assert len(fetch_day(fits, date(2025, 1, 2), limit=10)) == 29
 
 
+@slow
 def test_page_cap_exact_boundary_probes_not_raises(monkeypatch):
     """ADVICE r7: a day holding EXACTLY MAX_PAGES*limit rows — complete
     data, cap-aligned by coincidence — must not be reported as
@@ -138,6 +143,7 @@ def test_page_cap_exact_boundary_probes_not_raises(monkeypatch):
     assert len(fetch_day(short_past_cap, date(2025, 1, 2), limit=10)) == 33
 
 
+@slow
 def test_empty_partition_raises(spark):
     def fetcher(day, page, limit, params):
         return []
@@ -146,6 +152,7 @@ def test_empty_partition_raises(spark):
         ingest_day(spark, fetcher, date(2025, 1, 2))
 
 
+@slow
 def test_ingest_region_loops_codes_with_pushdown(spark):
     """Region convenience face (ref country_assets.py:35-72): each of
     the region's API codes gets its own page loop with the code pushed
@@ -186,6 +193,7 @@ def test_ingest_region_loops_codes_with_pushdown(spark):
         )
 
 
+@slow
 def test_typed_cast_null_on_error(spark):
     day = date(2025, 1, 2)
     rows = [
@@ -211,6 +219,7 @@ def test_typed_cast_null_on_error(spark):
     assert bad["event_timestamp"] is None     # when(ts not null) guard
 
 
+@slow
 def test_full_pipeline_ingest_to_silver(spark, tmp_path):
     bronze_path = os.path.join(str(tmp_path), "bronze")
     silver_path = os.path.join(str(tmp_path), "silver")
@@ -242,6 +251,7 @@ def test_full_pipeline_ingest_to_silver(spark, tmp_path):
     assert spark.read.parquet(silver_path).count() == 120 * len(days)
 
 
+@slow
 def test_silver_suite_blocks_oversized_partition(spark):
     day = date(2025, 1, 2)
     rows = [_raw_row(i, day) for i in range(120)]
@@ -263,6 +273,7 @@ def _tight_bounds_suite():
     return [row_count_bounds(lo=1, hi=10)]
 
 
+@slow
 def test_run_day_blocks_wrong_day_rows(spark, tmp_path):
     """A stray row dated another day must halt run_day BEFORE the
     bronze write — dynamic partition overwrite would otherwise replace
@@ -292,6 +303,7 @@ def test_run_day_blocks_wrong_day_rows(spark, tmp_path):
     assert spark.read.parquet(bronze).count() == victim_rows
 
 
+@slow
 def test_get_spark_never_retunes_an_existing_session(spark):
     """r11 session-conf-drift review: getOrCreate applies modifiable
     builder confs to whatever session exists — get_spark must instead
@@ -305,6 +317,7 @@ def test_get_spark_never_retunes_an_existing_session(spark):
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
 
+@slow
 def test_configure_warns_once_when_flipping_session_timezone(spark):
     """The UTC pin is load-bearing but session-global: when it actually
     CHANGES a session's timezone the user must hear about it."""
@@ -325,3 +338,90 @@ def test_configure_warns_once_when_flipping_session_timezone(spark):
             configure(spark)
     finally:
         spark.conf.set("spark.sql.session.timeZone", "UTC")
+
+
+# ---------------------------------------------------------------------------
+# write-path pins (default tier)
+# ---------------------------------------------------------------------------
+
+
+def _mixed_row(i: int, day: date) -> dict:
+    """A record as a loose JSON API returns it: ints, floats, nulls,
+    empty strings and non-ASCII text next to the usual strings."""
+    return dict(
+        _raw_row(i, day),
+        fatalities=i % 13,
+        latitude=47.0 + i / 8.0,
+        timestamp=EPOCH + i,
+        notes=None if i % 3 == 0 else "",
+        admin1="Донецька область" if i % 2 else "Kyïv — centre",
+        tags=None,
+    )
+
+
+def test_day_frames_carry_no_python_stage(spark):
+    """The fetched day lands as Arrow batches in a fixed JVM relation:
+    no action over it (checks, bronze write, upsert, count) runs a
+    Python worker, and its rows are exactly the normalized records, in
+    fetch order, with NULLs and empty strings kept apart."""
+    from acled_spark.source import _normalize_value, ingest_region
+
+    day = date(2025, 1, 2)
+    rows = [_mixed_row(i, day) for i in range(70)]
+
+    def fetcher(d, page, limit, params):
+        return rows[(page - 1) * limit : page * limit]
+
+    names = ACLED_RAW_SCHEMA.fieldNames()
+    want = [tuple(_normalize_value(r, n) for n in names) for r in rows]
+    frames = {
+        "ingest_day": ingest_day(spark, fetcher, day, limit=50),
+        "ingest_region": ingest_region(
+            spark, fetcher, day, "R", limit=50, region_map={"R": ("1",)}
+        ),
+    }
+    for name, df in frames.items():
+        lineage = df._jdf.queryExecution().toRdd().toDebugString()
+        assert "PythonRDD" not in lineage, f"{name}:\n{lineage}"
+        assert df.schema == ACLED_RAW_SCHEMA, name
+        assert [tuple(r) for r in df.collect()] == want, name
+
+
+def _compiled_classes(spark) -> int:
+    """Classes Spark has generated and compiled in this JVM (each
+    codegen cache miss is one compile)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_release_leaves_run_day_codegen_compiled(spark, tmp_path):
+    """The session's codegen cache holds the write path's working set:
+    a CorpusRelease between two run_day calls no longer evicts the
+    day's generated classes, so replaying the day compiles (and
+    JIT-warms) next to nothing again.  With Spark's default 100-entry
+    cache the release's ~200 classes evicted them and the replay
+    recompiled ~80."""
+    from acled_spark.dedup_store import init_store
+    from acled_spark.pipeline import run_day
+    from acled_spark.release import CorpusRelease
+    from acled_spark.tables import load
+    from tests.conftest import SF_DIR
+
+    bronze, silver = str(tmp_path / "bronze"), str(tmp_path / "silver")
+    fetcher = make_fetcher(rows_per_day=120)
+    day = date(2025, 1, 2)
+    run_day(spark, fetcher, day, bronze, silver, page_limit=50)
+
+    docs = load(spark, SF_DIR, "documents").select(
+        "doc_id", "text", "lang", "source", "n_chars"
+    )
+    old = docs.filter(F.col("doc_id") % 11 != 3)
+    new = docs.filter(F.col("doc_id") % 13 != 5)
+    init_store(old, str(tmp_path / "store"))
+    CorpusRelease(str(tmp_path / "store")).apply(
+        spark, old, new, export_path=str(tmp_path / "export"), shards=2
+    )
+
+    before = _compiled_classes(spark)
+    assert run_day(spark, fetcher, day, bronze, silver, page_limit=50).passed
+    assert _compiled_classes(spark) - before <= 20
