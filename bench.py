@@ -10,41 +10,41 @@ stdout-tail capture (round 1's full 100-query line was ~3.3 KB and the
 driver recorded ``parsed: null``).  Full per-query timings always land
 in BENCH_FULL.json next to this script.
 
-Timing protocol: each query runs TWICE back-to-back and the min is
-reported (stdout line and BENCH_FULL.json) — single timings fold in
-one-off JIT/codegen/page-cache costs that dominated round-over-round
-comparisons (SCALE.md methodology has the measured spread).  When the
-two passes disagree by >1.5x an ADAPTIVE THIRD pass runs (VERDICT r7
-#6: min-of-2 still lets one bad pass pair inflate a hot query), and
-BENCH_FULL.json records per-query ``spread`` (second-best/best — the
-residual uncertainty OF the reported min) plus ``passes`` so a driver
-A/B can discount noisy entries mechanically instead of eyeballing.
+Timing protocol: each query runs once untimed, then TWICE timed
+back-to-back, and the min is reported (stdout line and
+BENCH_FULL.json) — single timings fold in one-off JIT/codegen/
+page-cache costs that dominated round-over-round comparisons (SCALE.md
+methodology has the measured spread).  Each pass also reads the CPU
+seconds of the process tree (this process, the Spark JVM and its
+Python workers; ``perfbench.procs``, the instrument BENCHMARK.json
+gates on).  When the two passes disagree by >1.5x in
+wall or CPU time, or one has no CPU reading, an ADAPTIVE THIRD pass
+runs (VERDICT r7 #6: min-of-2 still lets one bad pass pair inflate a
+hot query).  BENCH_FULL.json records the min wall time as
+``queries``, the min CPU reading as ``cpu``, per-query ``spread``
+(second-best/best wall — the residual uncertainty OF the reported
+min) and ``passes``, beside the run's ``sf`` and ``cores``.  A pass
+during which a process of the tree ended has no CPU reading: the tree
+sum loses the whole CPU time of a process nobody reaps, which is what
+pyspark's worker daemon does with the Python workers the JVM retires.
 
 Regression guard (VERDICT r1 #9):
 
     python bench.py --check [baseline.json]
 
-re-runs the bench and exits 1 if any query is BOTH >1.5x slower than the
-baseline (default: the committed BENCH_FULL.json) AND >0.5s absolute
-slower — the double gate keeps the known +-20% run-to-run variance of
-sub-second queries from flagging noise (see SCALE.md).
-
-Drift-aware canary (VERDICT r13 #1): two frozen probes — one CPU-bound,
-one shuffle-bound, both built from ``spark.range`` so they touch no
-repo query, no input file, and no code path a round's diff can change —
-run at session start AND end under the same min-of-2-adaptive-3
-protocol.  Their committed floor rides BENCH_FULL.json
-(``canary_floor``); every bench output records ``session_speed =
-canary_wall / canary_floor``.  ``--check`` judges each query against
-``baseline x session_speed`` in addition to the raw gate (raw-only
-flags print as DRIFT-SUSPECT, normalized flags as REGRESSION and drive
-the exit code), and a baseline refresh is REFUSED when the session's
-canary is outside +-10% of the committed floor — so a drifted driver
-session can no longer overwrite the standing baseline (the r12 fast
-session silently tightened gates ~13%; the r13 slow session flagged 31
-false >2x regressions, j8_interval_join at 20x).  Methodology and the
-mechanical re-adjudication of the r13 flags: SCALE.md
-§bench-methodology.
+re-runs the bench and exits 1 if any query's CPU seconds are BOTH
+>1.5x the baseline's (default: the committed BENCH_FULL.json) AND
+>0.5s over it.  CPU time, not wall time: a vCPU the host steals adds
+wall time to every query but no CPU time to the run, so a wall gate
+on a shared host flags the box, not the plan (SCALE.md
+§bench-methodology has the measured comparison).  Load elsewhere on
+the host still slows the vCPUs (shared caches, memory) and so adds
+CPU time in bursts: a query past the gate is timed once more after
+the suite, and that second timing is the one judged and recorded.
+A baseline without a ``cpu`` map, or recorded at another sf or core
+count, cannot be judged against: ``--check`` exits 2 before any Spark
+work.  A full run that passes, or runs without ``--check``, rewrites
+BENCH_FULL.json.
 """
 
 from __future__ import annotations
@@ -56,6 +56,7 @@ import time
 
 from acled_spark.registry import all_specs
 from acled_spark.session import get_spark
+from perfbench.procs import descendants, tree_cpu_s
 
 _REPO = os.path.dirname(os.path.abspath(__file__))
 FULL_PATH = os.path.join(_REPO, "BENCH_FULL.json")
@@ -67,224 +68,53 @@ def _force(df) -> None:
     df.write.mode("overwrite").format("noop").save()
 
 
-def adaptive_passes(run_once, clock=time.perf_counter) -> list[float]:
-    """Two timed passes, plus a THIRD when they disagree by >1.5x
-    (VERDICT r7 #6): that much disagreement means one pass drew a
-    one-off cost (GC pause, JIT deopt, page-cache miss), and min-of-2
-    would let a single bad pair inflate a hot query round-over-round.
-    Report min(passes); second-best/best is the residual spread."""
-    passes = []
-    for _ in range(2):
-        t0 = clock()
-        run_once()
-        passes.append(clock() - t0)
-    if max(passes) > 1.5 * min(passes):
-        t0 = clock()
-        run_once()
-        passes.append(clock() - t0)
+def _disagree(values: list[float]) -> bool:
+    return max(values) > 1.5 * min(values)
+
+
+def adaptive_passes(run_once) -> list[tuple[float, float | None]]:
+    """Two timed passes, plus a THIRD when they disagree by >1.5x in
+    wall or CPU time (VERDICT r7 #6), or when one has no CPU reading:
+    that much disagreement means one pass drew a one-off cost (GC
+    pause, JIT backlog, page-cache miss), and min-of-2 would let a
+    single bad pair inflate a hot query round-over-round.
+    ``run_once`` returns ``(wall_s, cpu_s or None)``; the caller
+    reports the min of each."""
+    passes = [run_once(), run_once()]
+    cpus = [c for _, c in passes if c is not None]
+    if _disagree([w for w, _ in passes]) or len(cpus) < 2 or _disagree(cpus):
+        passes.append(run_once())
     return passes
 
 
-# --- drift canary (VERDICT r13 #1) -----------------------------------
-# Frozen, plan-stable probes measuring the SESSION, not the repo: pure
-# ``spark.range`` pipelines with no table scan, no registry import in
-# the hot path, and no tunable the query work shares.  A round's diff
-# cannot change what these execute, so their wall-clock moves only when
-# the box does — which is exactly the signal two consecutive rounds of
-# official bench numbers were missing (r12 fast session committed as
-# baseline; r13 drifted session flagging 31 false regressions).
-# Bump CANARY_VERSION whenever a probe's shape or size changes: floors
-# recorded under a different version are not comparable and are ignored.
-CANARY_VERSION = 1
-# Refreshing the committed baseline is only meaningful from a session
-# whose canary agrees with the committed floor to within this band.
-CANARY_REFRESH_BAND = 0.10
-
-
-def _canary_cpu(spark) -> None:
-    """CPU-bound probe: a 32-deep xxhash64 chain over 16M rows, global
-    bit_xor rollup (order-independent, ANSI-overflow-proof — summing
-    full-range longs trips ANSI ARITHMETIC_OVERFLOW) — whole-stage
-    codegen arithmetic, zero I/O, one 32-partition stage, no exchange
-    beyond the single-row final agg."""
-    from pyspark.sql import functions as F
-
-    df = spark.range(0, 16_000_000, 1, 32)
-    expr = F.xxhash64(F.col("id"))
-    for _ in range(32):
-        expr = F.xxhash64(expr, F.col("id"))
-    df.select(F.bit_xor(expr).alias("s")).collect()
-
-
-def _canary_shuffle(spark) -> None:
-    """Shuffle-bound probe: 4M rows hashed onto 200k keys, grouped agg
-    across a full 32->32 exchange, then a second single-row rollup —
-    exercises exchange write/read + hash-agg spill machinery."""
-    from pyspark.sql import functions as F
-
-    df = spark.range(0, 4_000_000, 1, 32)
-    (
-        df.withColumn("k", F.pmod(F.xxhash64("id"), F.lit(200_000)))
-        .withColumn("v", (F.col("id") % 997).cast("double"))
-        .groupBy("k")
-        .agg(F.sum("v").alias("sv"), F.count("*").alias("c"))
-        .select(F.sum(F.col("sv") * F.col("c")).alias("s"))
-        .collect()
-    )
-
-
-CANARY_PROBES = {"cpu": _canary_cpu, "shuffle": _canary_shuffle}
-
-
-def run_canary(spark, single_pass: bool = False) -> dict[str, float]:
-    """Time each probe under the same min-of-2-adaptive-3 protocol as
-    the queries; returns ``{"cpu": sec, "shuffle": sec}``.
-    ``single_pass`` trades precision for cost — used for the
-    mid-session TIMELINE probes (diagnostic only, never the floor)."""
-    walls = {}
-    for name in sorted(CANARY_PROBES):
-        if single_pass:
-            t0 = time.perf_counter()
-            CANARY_PROBES[name](spark)
-            walls[name] = round(time.perf_counter() - t0, 3)
-        else:
-            passes = adaptive_passes(lambda: CANARY_PROBES[name](spark))
-            walls[name] = round(min(passes), 3)
-    return walls
-
-
-# A mid-session probe lands after every this-many queries: the first
-# full-bench session after the canary shipped proved the blind spot —
-# start/end both read FAST (0.87x) while a burst during the early
-# dedup block inflated dedup_incremental_check 1.9s -> 28.1s (every
-# flagged reading collapsed 3-8x in isolated re-probes on unchanged
-# plans).  The timeline localizes such bursts mechanically instead of
-# leaving them to after-the-fact A/B forensics.
-CANARY_TIMELINE_EVERY = 32
-
-# Mid-session single-pass probes are NOISY — healthy blessed sessions
-# read up to ~1.6x cpu / ~3.0x shuffle of the min-of-2 committed floor
-# purely from single-pass variance — so they never feed session_speed.
-# But a real contention burst reads far OUTSIDE that envelope, and
-# min(start, end) cannot see a burst that dies before the end canary:
-# the session that proved the hole (r14 verification) read 4.2x cpu /
-# 13.1x shuffle at its after_32 probe while min(start, end) sat inside
-# the +-10% band, and the refresh gate rewrote the baseline with
-# readings inflated 2-23x (caught by manual A/B, restored from git).
-# A mid probe beyond these factors therefore ALSO refuses the refresh:
-# each threshold sits >1.5x above every observed healthy mid reading
-# and >1.6x below every observed burst reading.  Refusal is the cheap
-# direction — a false refusal just leaves the committed baseline
-# standing for a calmer session to refresh.
-CANARY_BURST_FACTOR = {"cpu": 2.5, "shuffle": 5.0}
-
-
-def burst_probes(timeline: dict | None, floor: dict | None) -> list:
-    """Mid-session timeline probes outside the burst envelope vs the
-    committed floor: ``[(label, probe, ratio), ...]``.  ``start`` /
-    ``end`` are excluded — those are full-protocol placements already
-    governing session_speed; this guards the stretch BETWEEN them that
-    ``min(start, end)`` is blind to."""
-    if not timeline or not floor:
-        return []
-    hits = []
-    for label in sorted(timeline):
-        if label in ("start", "end"):
-            continue
-        probes = timeline[label] or {}
-        for k in sorted(CANARY_BURST_FACTOR):
-            f = floor.get(k)
-            if k in probes and f and f > 0 and probes[k] > CANARY_BURST_FACTOR[k] * f:
-                hits.append((label, k, round(probes[k] / f, 2)))
-    return hits
-
-
-def session_speed(wall: dict | None, floor: dict | None) -> float | None:
-    """``canary_wall / canary_floor`` over the probes both maps carry.
-    None when either side is missing (bootstrap, --only runs, or a
-    baseline recorded under a different CANARY_VERSION)."""
-    if not wall or not floor:
-        return None
-    common = sorted(set(wall) & set(floor))
-    if not common:
-        return None
-    denom = sum(floor[k] for k in common)
-    if denom <= 0:
-        return None
-    return round(sum(wall[k] for k in common) / denom, 3)
-
-
-def baseline_canary_floor(base: dict | None) -> dict | None:
-    """Extract a comparable canary floor from a baseline JSON: the
-    recorded floor, only if it was measured by this CANARY_VERSION."""
-    if not base or base.get("canary_version") != CANARY_VERSION:
-        return None
-    return base.get("canary_floor") or None
-
-
-# --- fast-tail pass skipping (VERDICT r14 #6) -------------------------
-# Roughly half the suite is sub-0.5s queries whose two protocol passes
-# agree within a few percent session after session; paying both passes
-# for ~70 such queries is pure wall-clock exposure to host-steal bursts
-# (the r14 rounds lost 6+ full sessions to bursts landing somewhere in
-# the ~14-minute window).  A query qualifies for a SINGLE timed pass
-# when the committed baseline shows it fast (< FAST_TAIL_SEC), clean
-# (exactly 2 passes that agreed within FAST_TAIL_SPREAD), and the same
-# sf.  The single reading is kept only while it stays within
-# FAST_TAIL_ESCALATE x its committed baseline — anything slower
-# ESCALATES to the full min-of-2-adaptive-3 protocol on the spot (the
-# first reading still participates in the min), so a real movement is
-# always measured under the old methodology and the recorded number is
-# never worse than the old protocol's.  Heavy queries keep min-of-2
-# unconditionally; --only probes always run the full protocol.
-# BENCH_FULL.json stays honest: a skipped query records passes=1,
-# spread=1.0 (no residual spread was measured).
-FAST_TAIL_SEC = 0.5
-FAST_TAIL_SPREAD = 1.05
-FAST_TAIL_ESCALATE = 1.08
-
-
-def fast_tail_set(committed: dict | None, sf) -> dict[str, float]:
-    """``{query: committed_sec}`` for queries eligible for the
-    single-pass fast path (see the constants above).  Empty when the
-    committed baseline is missing, from another sf, or pre-protocol."""
-    if not committed or committed.get("sf") != sf:
-        return {}
-    bq = committed.get("queries") or {}
-    bs = committed.get("spread") or {}
-    bp = committed.get("passes") or {}
-    return {
-        k: t
-        for k, t in bq.items()
-        if 0 < t < FAST_TAIL_SEC
-        and bp.get(k) == 2
-        and 1.0 <= (bs.get(k) or 0) <= FAST_TAIL_SPREAD
-    }
-
-
-def run_bench(
-    only: set[str] | None = None, committed: dict | None = None
-) -> tuple[dict, float | str]:
-    """Returns ``({"timings", "spread", "passes"}, sf)`` — three maps
-    over the SAME key set (failures carry timings -1.0 / spread -1.0 /
-    passes 0, so consumers can zip them without key checks).
-
-    ``committed``: the standing BENCH_FULL.json content, used ONLY to
-    qualify queries for the fast-tail single-pass protocol (never to
-    alter what a query computes or how a flagged query is re-measured).
-    """
+def bench_shape() -> tuple[str, float | str, int]:
+    """``(sf_dir, sf, cores)`` of this run, read from the environment
+    before any Spark work: ``--check`` refuses a baseline recorded at
+    another sf or core count, and the run records both beside it.
+    The session runs on exactly ``local[cores]``, so the recorded count
+    is the parallelism Spark ran with (``local[*]`` would follow the
+    JVM's own processor count instead)."""
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
-    spark = get_spark(app_name="acled-spark-bench")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "")
+    cores = int(cpus) if cpus.isdigit() else len(os.sched_getaffinity(0))
+    return sf_dir, sf_val, cores
+
+
+def run_bench(only: set[str] | None = None, retime=None) -> dict:
+    """Returns ``{"timings", "cpu", "spread", "passes"}`` — four maps
+    over the SAME key set (failures carry timings -1.0 / cpu -1.0 /
+    spread -1.0 / passes 0, so consumers can zip them without key
+    checks; cpu is also -1.0 when no pass has a CPU reading).
+    ``only``: the query subset to time, validated by main().
+    ``retime``: given the ``cpu`` map after the suite, the queries to
+    time again (``--check`` passes the ones past its gate)."""
+    sf_dir, _sf, cores = bench_shape()
+    spark = get_spark(app_name="acled-spark-bench", master=f"local[{cores}]")
 
     all_ = all_specs()
-    specs = all_
-    if only is not None:
-        unknown = only - set(specs)
-        if unknown:
-            raise SystemExit(f"bench: unknown queries in --only: {sorted(unknown)}")
-        specs = {k: v for k, v in specs.items() if k in only}
+    specs = {k: v for k, v in all_.items() if only is None or k in only}
     # Warm the JVM + parquet footers once so per-query numbers measure the
     # query, not session startup.
     from acled_spark.tables import TABLE_NAMES, load
@@ -300,17 +130,12 @@ def run_bench(
     # --only probe that omits the warmup trio otherwise pays the
     # one-off codegen/JIT bring-up inside its first timed queries —
     # measured 2-3x inflation on sub-second entries (a26 2.26s vs
-    # 1.13s warmed, a3 1.55s vs 0.43s, same calm-canary box) — which
+    # 1.13s warmed, a3 1.55s vs 0.43s, same calm box) — which
     # made isolated re-probes of --check flags read as regressions
     # that the full bench (warmup always present) refutes.
     for warm in ("q1_pricing_summary", "w3_rank_rows", "j2_static_map_lookup"):
         if warm in all_:
             _force(all_[warm].builder(spark, sf_dir))
-
-    # Canary, start-of-session placement (after warmup so it measures
-    # the settled JVM, not codegen bring-up — same footing as the
-    # committed floor).
-    canary_start = run_canary(spark)
 
     # Min-of-2 protocol (VERDICT r6 #1): each query is timed twice
     # back-to-back and the MIN is reported.  Round-over-round driver
@@ -325,58 +150,55 @@ def run_bench(
     timings: dict[str, float] = {}
     spread: dict[str, float] = {}
     n_passes: dict[str, int] = {}
-    timeline: dict[str, dict] = {"start": canary_start}
-    fast_tail = fast_tail_set(committed, sf_val) if only is None else {}
-    if fast_tail:
-        print(
-            f"bench: fast-tail single-pass protocol on "
-            f"{len(fast_tail)} queries (committed baseline <"
-            f"{FAST_TAIL_SEC}s, 2 passes within {FAST_TAIL_SPREAD}x; "
-            f"escalation at {FAST_TAIL_ESCALATE}x)",
-            file=sys.stderr,
-        )
-    ordered = sorted(specs)
-    for qi, name in enumerate(ordered):
-        if qi and qi % CANARY_TIMELINE_EVERY == 0:
-            timeline[f"after_{qi}_{ordered[qi - 1]}"] = run_canary(
-                spark, single_pass=True
-            )
+    cpu: dict[str, float] = {}
+    me = os.getpid()
+
+    def time_query(name: str) -> None:
         spec = specs[name]
-        run_once = lambda: _force(spec.builder(spark, sf_dir))  # noqa: E731
+
+        def run_once() -> tuple[float, float | None]:
+            # the /proc walks stay outside the wall timing; no CPU
+            # reading when a process of the tree ended meanwhile
+            tree = set(descendants(me))
+            c0 = tree_cpu_s()
+            t0 = time.perf_counter()
+            _force(spec.builder(spark, sf_dir))
+            wall = time.perf_counter() - t0
+            cpu_s = tree_cpu_s() - c0
+            return wall, None if tree - set(descendants(me)) else cpu_s
+
         try:
-            base_t = fast_tail.get(name)
-            if base_t is not None:
-                # fast-tail single pass; escalate to the full protocol
-                # the moment the reading moves past the committed
-                # baseline's envelope (the single reading still joins
-                # the min, so escalation can only improve the number)
-                t0 = time.perf_counter()
-                run_once()
-                one = time.perf_counter() - t0
-                if one <= FAST_TAIL_ESCALATE * base_t:
-                    passes = [one]
-                else:
-                    passes = [one] + adaptive_passes(run_once)
-            else:
-                passes = adaptive_passes(run_once)
-            best = sorted(passes)
+            # one untimed pass first: the query's own codegen and most of
+            # the JIT compilation it sets off land outside the timed
+            # passes (SCALE.md §bench-methodology has the measurement)
+            _force(spec.builder(spark, sf_dir))
+            passes = adaptive_passes(run_once)
+            best = sorted(w for w, _ in passes)
             timings[name] = round(best[0], 3)
+            read = [c for _, c in passes if c is not None]
+            cpu[name] = round(min(read), 3) if read else -1.0
             # spread = second-best / best: the residual uncertainty OF
             # the reported min (max/min would re-include the outlier
-            # the third pass just adjudicated); 1.0 for a single-pass
-            # fast-tail reading (no residual spread was measured)
-            spread[name] = (
-                round(best[1] / best[0], 3) if len(best) > 1 else 1.0
-            )
+            # the third pass just adjudicated)
+            spread[name] = round(best[1] / best[0], 3)
             n_passes[name] = len(passes)
         except Exception as exc:  # keep the bench line parseable on failure
             print(f"bench: {name} FAILED: {exc}", file=sys.stderr)
-            # keep the three maps key-aligned (r8 review): a consumer
+            # keep the four maps key-aligned (r8 review): a consumer
             # iterating `queries` and indexing `spread[name]` must not
             # KeyError on the failed entry
             timings[name] = -1.0
+            cpu[name] = -1.0
             spread[name] = -1.0
             n_passes[name] = 0
+
+    for name in sorted(specs):
+        time_query(name)
+    # A query past the gate is timed once more after the suite, and the
+    # second timing is the one judged and recorded: a regression in the
+    # plan repeats, a burst of load on the host seldom lasts that long.
+    for name in retime(cpu) if retime else ():
+        time_query(name)
     ok_spreads = [v for v in spread.values() if v >= 0]
     if ok_spreads:
         s = sorted(ok_spreads)
@@ -388,49 +210,12 @@ def run_bench(
             f"third-pass queries: {sum(1 for n in n_passes.values() if n == 3)}",
             file=sys.stderr,
         )
-    # Canary, end-of-session placement: whole-session drift shows up in
-    # BOTH readings; late-onset drift only in this one.  The reported
-    # per-probe wall is the MIN of the two placements — the best
-    # evidence of what the box could do during the session, so
-    # normalization never *excuses* a real regression (a drifted min is
-    # still honest: the box never ran faster than it).  Both raw
-    # readings are recorded for A/B readers.
-    canary_end = run_canary(spark)
-    timeline["end"] = canary_end
-    canary_wall = {
-        k: min(canary_start[k], canary_end[k]) for k in canary_start
-    }
-    print(
-        f"bench: canary start={canary_start} end={canary_end} "
-        f"wall={canary_wall}",
-        file=sys.stderr,
-    )
-    # The timeline is DIAGNOSTIC: session_speed and the committed floor
-    # use only the full-protocol start/end placements, but a burst
-    # BETWEEN them (invisible to min(start, end)) shows up here as a
-    # spiking mid-probe, telling a reader which query block to re-probe
-    # in isolation before calling its readings a regression.
-    print(f"bench: canary timeline={timeline}", file=sys.stderr)
     spark.stop()
-    return (
-        {
-            "timings": timings,
-            "spread": spread,
-            "passes": n_passes,
-            "canary_wall": canary_wall,
-            "canary_runs": timeline,
-        },
-        sf_val,
-    )
+    return {"timings": timings, "cpu": cpu, "spread": spread, "passes": n_passes}
 
 
-def summary_line(
-    timings: dict[str, float], sf: float | str, speed: float | None = None
-) -> str:
-    """One JSON line that fits the driver's stdout-tail capture.
-    ``session_speed`` (canary wall / committed floor; null at bootstrap
-    or for --only runs) rides the line so a driver A/B reader can
-    normalize this session's numbers without the full file."""
+def summary_line(timings: dict[str, float], sf: float | str) -> str:
+    """One JSON line that fits the driver's stdout-tail capture."""
     total = round(sum(t for t in timings.values() if t >= 0), 3)
     failed = sorted(k for k, v in timings.items() if v < 0)
     ok_slowest = sorted(
@@ -455,7 +240,6 @@ def summary_line(
                 "queries": qsub,
                 "n_queries": len(timings),
                 "n_failed": len(failed),
-                "session_speed": speed,
                 "sf": sf,
             },
             separators=(",", ":"),
@@ -473,53 +257,44 @@ def summary_line(
     return line
 
 
-def check(
-    timings: dict[str, float], base: dict, speed: float | None = None
-) -> int:
-    """Exit status 1 if any query regressed >1.5x AND >0.5s vs the
-    DRIFT-NORMALIZED baseline (``was * session_speed``).  The raw
-    (unnormalized) gate still runs: queries flagged raw-only print as
-    DRIFT-SUSPECT — visible to a reader, but not a failure, because on
-    a drifted box they are box-state artifacts (r13: 31 such flags on
-    an untouched diff).  With no canary floor (bootstrap, old-format
-    baseline) ``speed`` is None and the raw gate drives the exit code,
-    exactly as before.  Normalization never loosens below the raw gate
-    when the session is FAST (speed < 1 tightens — a fast box must not
-    hide a real regression behind the raw threshold)."""
-    base_q = base.get("queries", base)
-    norm = speed if speed is not None else 1.0
-    regressions, suspects = [], []
-    for name, now in timings.items():
-        was = base_q.get(name)
+def past_gate(cpu: dict[str, float], base: dict) -> list[tuple[str, float, float]]:
+    """``(name, was, now)`` for each query whose CPU seconds are >1.5x
+    AND >0.5s over the baseline's ``cpu`` entry.  Queries the baseline
+    lacks, or without a CPU reading on either side (failed: -1.0), are
+    not judged."""
+    out = []
+    for name, now in cpu.items():
+        was = base["cpu"].get(name)
         if was is None or was <= 0 or now < 0:
             continue
-        raw_flag = now > 1.5 * was and now - was > 0.5
-        adj = was * norm
-        # The normalized gate drives the exit code both ways: on a slow
-        # box it absorbs box-state inflation; on a fast box (norm < 1,
-        # adj < was — a strictly tighter gate, so raw_flag implies
-        # norm_flag) it catches regressions the raw threshold would
-        # hide, the r12 failure mode.
-        norm_flag = now > 1.5 * adj and now - adj > 0.5
-        if norm_flag:
-            regressions.append((name, was, now))
-        elif raw_flag:
-            suspects.append((name, was, now))
+        if now > 1.5 * was and now - was > 0.5:
+            out.append((name, was, now))
+    return out
+
+
+def check(cpu: dict[str, float], base: dict) -> int:
+    """Exit status 1 if any query is past the gate (:func:`past_gate`)."""
+    regressions = past_gate(cpu, base)
     for name, was, now in sorted(regressions, key=lambda r: r[1] - r[2]):
-        print(f"bench_check: REGRESSION {name}: {was:.3f}s -> {now:.3f}s"
-              + (f" (>{1.5 * was * norm:.3f}s normalized gate,"
-                 f" session_speed {norm:.3f})" if speed is not None else ""),
-              file=sys.stderr)
-    for name, was, now in sorted(suspects, key=lambda r: r[1] - r[2]):
-        print(f"bench_check: DRIFT-SUSPECT {name}: {was:.3f}s -> {now:.3f}s "
-              f"(raw flag absorbed by session_speed {norm:.3f})",
+        print(f"bench_check: REGRESSION {name}: {was:.3f} -> {now:.3f} CPU-s",
               file=sys.stderr)
     if not regressions:
-        extra = f", {len(suspects)} drift-suspect" if suspects else ""
-        spd = f", session_speed {norm:.3f}" if speed is not None else ""
-        print(f"bench_check: OK ({len(timings)} queries{extra}{spd})",
-              file=sys.stderr)
+        print(f"bench_check: OK ({len(cpu)} queries)", file=sys.stderr)
     return 1 if regressions else 0
+
+
+def baseline_refusal(base: dict, sf: float | str, cores: int) -> str | None:
+    """Why ``--check`` cannot judge against ``base``, or None.  Without
+    this a wall-only baseline (no ``cpu`` map) would skip every query
+    and pass, and one from another sf or core count would compare
+    unlike runs."""
+    if not base.get("cpu"):
+        return "baseline has no cpu map (wall-only; re-record it with bench.py)"
+    if base.get("sf") != sf:
+        return f"baseline is sf {base.get('sf')}, this run is sf {sf}"
+    if base.get("cores") != cores:
+        return f"baseline ran on {base.get('cores')} cores, this run on {cores}"
+    return None
 
 
 def main() -> None:
@@ -542,7 +317,7 @@ def main() -> None:
     )
     parser.add_argument(
         "--check", action="store_true",
-        help="exit 1 if any query is >1.5x AND >0.5s slower than baseline",
+        help="exit 1 if any query uses >1.5x AND >0.5s more CPU than baseline",
     )
     parser.add_argument(
         "--only", metavar="Q1,Q2,...", default=None,
@@ -554,146 +329,56 @@ def main() -> None:
     args = parser.parse_args()
     check_mode = args.check
     only = set(args.only.split(",")) if args.only else None
-    baseline_path = args.baseline
+    if only is not None:
+        unknown = only - set(all_specs())
+        if unknown:
+            raise SystemExit(f"bench: unknown queries in --only: {sorted(unknown)}")
+    _sf_dir, sf, cores = bench_shape()
     base = None
     if check_mode:
         # Read the baseline up front: the run below rewrites FULL_PATH.
-        with open(baseline_path) as fh:
+        with open(args.baseline) as fh:
             base = json.load(fh)
-    # The committed floor for the refresh decision always comes from
-    # FULL_PATH (the file the run would overwrite), independent of any
-    # custom --check baseline.  Read it before the run for the same
-    # reason as above.
-    committed = None
-    if os.path.exists(FULL_PATH):
-        try:
-            with open(FULL_PATH) as fh:
-                committed = json.load(fh)
-        except (OSError, json.JSONDecodeError):
-            committed = None
+        refusal = baseline_refusal(base, sf, cores)
+        if refusal:
+            print(f"bench_check: cannot judge against {args.baseline}: "
+                  f"{refusal}", file=sys.stderr)
+            sys.exit(2)
 
-    result, sf = run_bench(only, committed)
+    def retime(cpu: dict[str, float]) -> list[str]:
+        flagged = past_gate(cpu, base)
+        for name, was, now in flagged:
+            print(f"bench_check: re-timing {name}: {was:.3f} -> {now:.3f} "
+                  "CPU-s", file=sys.stderr)
+        return [name for name, _, _ in flagged]
+
+    result = run_bench(only, retime if check_mode else None)
     timings = result["timings"]
-    canary_wall = result.get("canary_wall")
-    # --check normalizes against ITS baseline's floor; the refresh
-    # decision uses the committed file's floor.
-    check_speed = session_speed(canary_wall, baseline_canary_floor(base))
-    committed_speed = session_speed(
-        canary_wall, baseline_canary_floor(committed)
-    )
-    # Per-probe speeds to stderr: drift is often FAMILY-CLUSTERED (the
-    # r13 session ran joins 5-20x slow while scan-bound text queries
-    # ran faster), and the cpu-vs-shuffle split is what lets a reader
-    # see that shape — the scalar session_speed alone cannot.
-    committed_floor = baseline_canary_floor(committed)
-    if canary_wall and committed_floor:
-        per_probe = {
-            k: round(canary_wall[k] / committed_floor[k], 3)
-            for k in sorted(set(canary_wall) & set(committed_floor))
-            if committed_floor[k] > 0
-        }
-        print(f"bench: per-probe session speed vs committed floor: "
-              f"{per_probe}", file=sys.stderr)
-    status = check(timings, base, check_speed) if check_mode else 0
+    status = check(result["cpu"], base) if check_mode else 0
     # A FAILED --check must NOT rewrite its own default baseline with
     # the regressed numbers — a naive re-run would then compare against
     # the regression and print OK, defeating the gate (round-7 review).
-    # A DRIFTED session must not rewrite it either (VERDICT r13 #1):
-    # the refresh is refused when the canary sits outside +-10% of the
-    # committed floor, in EITHER direction — a slow session would
-    # loosen every gate, a fast one would silently tighten them (the
-    # r12 incident).  Bootstrap (no committed floor yet, or a floor
-    # from an older CANARY_VERSION) always refreshes and records the
-    # session's canary as the new floor.
-    # A burst BETWEEN the start/end canaries (both possibly in-band)
-    # also refuses: min(start, end) cannot see it, and the one session
-    # that hit this shape rewrote the baseline with 2-23x readings
-    # (see CANARY_BURST_FACTOR).  Bootstrap is unaffected — no
-    # committed floor means no envelope to compare against.
-    burst_hits = burst_probes(result.get("canary_runs"), committed_floor)
-    # A BLESSED baseline (median of N in-band sessions, VERDICT r14 #2:
-    # a single-session refresh drawn from the fast tail made every
-    # honest session read slow) is never auto-refreshed by one run —
-    # re-bless with tools/bless_baseline.py from fresh session dumps.
-    blessed = bool(committed and committed.get("blessed_provenance"))
-    drift_refused = (
-        committed_speed is not None
-        and abs(committed_speed - 1.0) > CANARY_REFRESH_BAND
-    ) or bool(burst_hits) or blessed
-    if only is None and status == 0 and not drift_refused:
+    if only is None and status == 0:
         with open(FULL_PATH, "w") as fh:
             json.dump(
                 {
                     "sf": sf,
+                    "cores": cores,
                     "protocol": "min-of-2-adaptive-3",
                     "queries": timings,
+                    "cpu": result["cpu"],
                     "spread": result["spread"],
                     "passes": result["passes"],
-                    "canary_version": CANARY_VERSION,
-                    "canary_floor": canary_wall,
-                    "canary_runs": result.get("canary_runs"),
-                    "session_speed": committed_speed,
                 },
                 fh, indent=1, sort_keys=True,
             )
-    elif drift_refused and status == 0 and only is None:
-        reasons = []
-        if (
-            committed_speed is not None
-            and abs(committed_speed - 1.0) > CANARY_REFRESH_BAND
-        ):
-            reasons.append(
-                f"session_speed {committed_speed:.3f} is outside the "
-                f"+-{CANARY_REFRESH_BAND:.0%} canary band"
-            )
-        if burst_hits:
-            reasons.append(
-                f"mid-session canary burst {burst_hits} exceeds the "
-                f"single-pass envelope (cpu>"
-                f"{CANARY_BURST_FACTOR['cpu']}x / shuffle>"
-                f"{CANARY_BURST_FACTOR['shuffle']}x the committed "
-                f"floor; re-probe that query block in isolation)"
-            )
-        if blessed:
-            reasons.append(
-                "baseline is a blessed median-of-N (see its "
-                "blessed_provenance block); re-bless via "
-                "tools/bless_baseline.py from fresh session dumps"
-            )
-        print(
-            f"bench: baseline refresh REFUSED — {'; '.join(reasons)}; "
-            f"BENCH_FULL.json left at the committed floor (this "
-            f"session's numbers are box-state, not plan-state)",
-            file=sys.stderr,
-        )
     elif status != 0:
         print(
             "bench_check: FAILED — BENCH_FULL.json left at the baseline "
             "(regressed timings not recorded)",
             file=sys.stderr,
         )
-    # Side dump for baseline blessing (VERDICT r14 #2): the median-of-N
-    # bless tool needs full session payloads INDEPENDENT of the refresh
-    # decision (a refused session is still an observation).  Opt-in via
-    # env so normal runs leave no extra files.
-    session_out = os.environ.get("SPARK_GRAFT_SESSION_OUT")
-    if session_out and only is None:
-        with open(session_out, "w") as fh:
-            json.dump(
-                {
-                    "sf": sf,
-                    "protocol": "min-of-2-adaptive-3",
-                    "queries": timings,
-                    "spread": result["spread"],
-                    "passes": result["passes"],
-                    "canary_version": CANARY_VERSION,
-                    "canary_floor": canary_wall,
-                    "canary_runs": result.get("canary_runs"),
-                    "session_speed": committed_speed,
-                },
-                fh, indent=1, sort_keys=True,
-            )
-    print(summary_line(timings, sf, committed_speed))
+    print(summary_line(timings, sf))
     if check_mode:
         sys.exit(status)
 
