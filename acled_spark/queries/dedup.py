@@ -26,8 +26,11 @@ from pyspark.sql.window import Window
 
 from acled_spark.queries.text import (
     FINGERPRINT_SQL,
+    _WORDS_SQL,
+    _ngrams_sql,
     _words_spark,
     fingerprint_spark,
+    ngrams_spark,
 )
 from acled_spark.registry import query
 from acled_spark.tables import load
@@ -42,35 +45,12 @@ NGRAM = 3
 # dedup, so no cycle)
 from acled_spark.queries.similarity import DIM as _EMB_DIM  # noqa: E402
 
-# DuckDB list slicing is 1-based and end-inclusive: w[i+1:i+3] = 3 words.
-_SHINGLES_SQL = f"""
-    list_distinct(list_transform(
-        range(0, greatest(len(string_split_regex(lower(regexp_replace(text, '^[ \t\n\x0B\f\r]+|[ \t\n\x0B\f\r]+$', '', 'g')), '[ \t\n\x0B\f\r]+')) - {NGRAM - 1}, 0)),
-        i -> array_to_string(string_split_regex(lower(regexp_replace(text, '^[ \t\n\x0B\f\r]+|[ \t\n\x0B\f\r]+$', '', 'g')), '[ \t\n\x0B\f\r]+')[i+1:i+{NGRAM}], ' ')
-    ))
-"""
+_SHINGLES_SQL = f"list_distinct({_ngrams_sql(NGRAM)})"
 
 
 def shingles_spark(text: Column) -> Column:
-    """Distinct word 3-gram shingles of a document (JVM-side HOFs only).
-
-    Built as a chain of ``zip_with`` concats over shifted copies of the
-    word array rather than ``transform(sequence(...), slice+concat_ws)``:
-    HOF lambdas run interpreted, so per-element cost rules — a string
-    concat beats an array-slice allocation 6x (measured 0.55s vs 3.5s
-    for the exploded stream at sf0.1).  ``zip_with`` pads the shorter
-    side with null and ``concat`` null-propagates, so the trailing
-    (n-1) incomplete grams fall out of the ``filter``; docs with < NGRAM
-    words yield an empty array with no special-casing.
-    """
-    words = _words_spark(text)
-    grams = words
-    for k in range(1, NGRAM):
-        shifted = F.slice(words, k + 1, F.size(words))
-        grams = F.zip_with(
-            grams, shifted, lambda a, b: F.concat(a, F.lit(" "), b)
-        )
-    return F.array_distinct(F.filter(grams, lambda x: x.isNotNull()))
+    """Distinct word 3-gram shingles of a document (JVM-side HOFs only)."""
+    return F.array_distinct(ngrams_spark(_words_spark(text), NGRAM))
 
 
 # --- exact dedup ------------------------------------------------------------
@@ -690,7 +670,7 @@ def _simhash_bit_sql(j: int) -> str:
     "dedup_simhash",
     oracle=f"""
     WITH w AS (
-      SELECT doc_id, unnest(list_distinct(string_split_regex(lower(regexp_replace(text, '^[ \t\n\x0B\f\r]+|[ \t\n\x0B\f\r]+$', '', 'g')), '[ \t\n\x0B\f\r]+'))) AS word
+      SELECT doc_id, unnest(list_distinct({_WORDS_SQL})) AS word
       FROM documents
     ),
     votes AS (

@@ -17,7 +17,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from acled_spark.queries.filters_q import hex_to_int_sql
-from acled_spark.queries.text import _TOKENS_SQL, _tokens_spark
+from acled_spark.queries.text import (
+    _TOKENS_SQL,
+    _ngrams_sql,
+    _tokens_spark,
+    ngrams_spark,
+)
 from acled_spark.registry import query
 from acled_spark.tables import load
 
@@ -412,10 +417,7 @@ _DSIR_ORACLE = f"""
     ),
     b AS (SELECT doc_id, lang, arr FROM base WHERE len(arr) > 0),
     uni AS (SELECT doc_id, lang, unnest(arr) AS g FROM b),
-    big AS (
-      SELECT doc_id, lang, arr[i] || ' ' || arr[i + 1] AS g
-      FROM b, unnest(range(1, len(arr))) AS t(i)
-    ),
+    big AS (SELECT doc_id, lang, unnest({_ngrams_sql(2, "arr")}) AS g FROM b),
     grams AS (
       SELECT doc_id, lang, {_DSIR_BUCKET_SQL} AS bucket
       FROM (SELECT * FROM uni UNION ALL SELECT * FROM big)
@@ -498,12 +500,7 @@ def dsir_resample(
     base = docs.select("doc_id", "lang", arr.alias("arr")).filter(
         F.size("arr") > 0
     )
-    n = F.size("arr")
-    bigrams = F.zip_with(
-        F.slice("arr", 1, n - 1),
-        F.slice("arr", 2, n - 1),
-        lambda a, b: F.concat(a, F.lit(" "), b),
-    )
+    bigrams = ngrams_spark(F.col("arr"), 2)
     grams = base.select(
         "doc_id",
         "lang",

@@ -41,7 +41,14 @@ _LANG_MARKERS = (
 # guard and minted phantom '' tokens in BOTH engines): all edge
 # trimming goes through this class too.
 WS = r"[ \t\n\x0B\f\r]"
-WS_TRIM_TEXT_SQL = f"regexp_replace(text, '^{WS}+|{WS}+$', '', 'g')"
+
+
+def _ws_trim_sql(col: str) -> str:
+    """DuckDB twin of :func:`ws_trim` over the SQL expression ``col``."""
+    return f"regexp_replace({col}, '^{WS}+|{WS}+$', '', 'g')"
+
+
+WS_TRIM_TEXT_SQL = _ws_trim_sql("text")
 
 
 def ws_trim(text: Column) -> Column:
@@ -81,14 +88,60 @@ def _tokens_sql(col: str = "text") -> str:
     :func:`_tokens_spark`, parameterized so case-folded variants (e.g.
     ``lower(text)``) reuse the canonical spelling instead of a string
     ``.replace`` that silently no-ops when this spelling changes."""
-    trimmed = f"regexp_replace({col}, '^[ \t\n\x0B\f\r]+|[ \t\n\x0B\f\r]+$', '', 'g')"
+    trimmed = _ws_trim_sql(col)
     return (
         f"CASE WHEN length({trimmed}) = 0 THEN [] "
-        f"ELSE string_split_regex({trimmed}, '[ \t\n\x0B\f\r]+') END"
+        f"ELSE string_split_regex({trimmed}, '{WS}+') END"
     )
 
 
+def _words_sql(col: str = "text") -> str:
+    """DuckDB twin of :func:`_words_spark`: lowered split, no blank guard."""
+    return f"string_split_regex(lower({_ws_trim_sql(col)}), '{WS}+')"
+
+
 _TOKENS_SQL = _tokens_sql()
+_WORDS_SQL = _words_sql()
+
+
+def ngrams_spark(words: Column, n: int) -> Column:
+    """Ordered word n-grams of a word array, duplicates kept, in
+    O(log n) ``zip_with`` passes.
+
+    HOF lambdas run interpreted, so pass count rules the cost: a string
+    concat per element beats an array slice per element (measured 6x),
+    and doubling the block size each pass beats chaining n-1
+    single-word concats — 2-grams from words, 4-grams from 2-grams, ...
+    grams_2L[i] = grams_L[i] + ' ' + grams_L[i+L].  A remainder block
+    (largest power of two <= what's left) finishes non-power-of-two n;
+    for n=3 that is exactly the two-pass chain, for n=8 3 passes vs 7
+    (measured ~2x faster end-to-end at sf0.1).  ``zip_with`` null-pads
+    the shifted side and concat null-propagates, so the trailing n-1
+    incomplete grams fall out of the filter; fewer than n words yield
+    [] and a NULL array yields NULL.  Callers add ``array_distinct`` or
+    a hash on top.
+    """
+    size = F.size(words)
+    blocks = {1: words}  # block length -> grams of that length at each start
+    grams, length = words, 1
+    while length * 2 <= n:
+        shifted = F.slice(grams, length + 1, size)
+        grams = F.zip_with(grams, shifted, lambda a, b: F.concat(a, F.lit(" "), b))
+        length *= 2
+        blocks[length] = grams
+    while length < n:
+        p = max(b for b in blocks if b <= n - length)
+        shifted = F.slice(blocks[p], length + 1, size)
+        grams = F.zip_with(grams, shifted, lambda a, b: F.concat(a, F.lit(" "), b))
+        length += p
+    return F.filter(grams, lambda x: x.isNotNull())
+
+
+def _ngrams_sql(n: int, words: str = _WORDS_SQL) -> str:
+    """DuckDB twin of :func:`ngrams_spark` over the list expression
+    ``words`` (1-based, end-inclusive slices; NULL stays NULL)."""
+    return f"""list_transform(range(0, len({words}) - {n - 1}),
+        i -> array_to_string({words}[i+1:i+{n}], ' '))"""
 
 
 # --- token counting ---------------------------------------------------------
@@ -245,7 +298,7 @@ def text_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- document fingerprinting ------------------------------------------------
 # Normalized md5 fingerprint — the exact-dedup key and provenance id.
-FINGERPRINT_SQL = "md5(lower(trim(regexp_replace(text, '[ \t\n\x0B\f\r]+', ' ', 'g'))))"
+FINGERPRINT_SQL = f"md5(lower(trim(regexp_replace(text, '{WS}+', ' ', 'g'))))"
 
 
 def fingerprint_spark(text: Column) -> Column:
@@ -282,40 +335,6 @@ def text_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 WINNOW_K = 4  # tokens per gram
 WINNOW_W = 5  # grams per winnow window
 
-_WINNOW_GRAMS_SQL = f"""
-    list_transform(
-        range(0, greatest(len(string_split_regex(lower(regexp_replace(text, '^[ \t\n\x0B\f\r]+|[ \t\n\x0B\f\r]+$', '', 'g')), '[ \t\n\x0B\f\r]+')) - {WINNOW_K - 1}, 0)),
-        i -> md5(array_to_string(string_split_regex(lower(regexp_replace(text, '^[ \t\n\x0B\f\r]+|[ \t\n\x0B\f\r]+$', '', 'g')), '[ \t\n\x0B\f\r]+')[i+1:i+{WINNOW_K}], ' '))
-    )
-"""
-
-_WINNOW_FPS_SQL = f"""
-    list_distinct(list_transform(
-        range(0, greatest(len({_WINNOW_GRAMS_SQL}) - {WINNOW_W - 1}, 0)),
-        i -> list_aggregate(({_WINNOW_GRAMS_SQL})[i+1:i+{WINNOW_W}], 'min')
-    ))
-"""
-
-
-def gram_hashes_spark(text: Column) -> Column:
-    """Ordered md5 hashes of every token WINNOW_K-gram (duplicates kept).
-
-    Built as a zip_with concat chain over shifted copies of the word
-    array (cheap per-element concat instead of an interpreted slice per
-    element — same trick as shingles_spark); zip_with's null padding
-    null-propagates through concat/md5 and falls out of the filter.
-    """
-    words = _words_spark(text)
-    grams = words
-    for k in range(1, WINNOW_K):
-        grams = F.zip_with(
-            grams,
-            F.slice(words, k + 1, F.size(words)),
-            lambda a, b: F.concat(a, F.lit(" "), b),
-        )
-    return F.filter(F.transform(grams, F.md5), lambda x: x.isNotNull())
-
-
 def winnow_mins_spark(hashes: Column) -> Column:
     """Distinct window-of-W minima over an ordered gram-hash column.
 
@@ -343,8 +362,15 @@ def winnow_mins_spark(hashes: Column) -> Column:
 @query(
     "text_winnow_pairs",
     oracle=f"""
-    WITH fp AS (
-      SELECT doc_id, unnest({_WINNOW_FPS_SQL}) AS fp FROM documents
+    WITH h AS (
+      SELECT doc_id, list_transform({_ngrams_sql(WINNOW_K)}, g -> md5(g)) AS h
+      FROM documents
+    ),
+    fp AS (
+      SELECT doc_id, unnest(list_distinct(list_transform(
+               range(0, greatest(len(h) - {WINNOW_W - 1}, 0)),
+               i -> list_aggregate(h[i+1:i+{WINNOW_W}], 'min')))) AS fp
+      FROM h
     )
     SELECT a.doc_id AS doc1, b.doc_id AS doc2, COUNT(*) AS shared_fps
     FROM fp a JOIN fp b ON a.fp = b.fp AND a.doc_id < b.doc_id
@@ -363,7 +389,11 @@ def text_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load(spark, sf_dir, "documents", spread=True)
     fp = (
-        docs.select("doc_id", gram_hashes_spark(F.col("text")).alias("h"))
+        docs.select(
+            "doc_id",
+            F.transform(ngrams_spark(_words_spark(F.col("text")), WINNOW_K), F.md5)
+            .alias("h"),
+        )
         .select("doc_id", F.explode(winnow_mins_spark(F.col("h"))).alias("fp"))
     )
     a = fp.alias("a")
@@ -448,51 +478,13 @@ def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
 N_CONTAM = 8
 
 
-def word_ngrams_spark(text: Column, n: int) -> Column:
-    """Distinct lowercase word n-grams in O(log n) zip_with passes.
-
-    HOF lambdas run interpreted, so pass count rules the cost.  Instead
-    of chaining n-1 single-word concats (dedup.shingles_spark's n=3
-    construction), double the block size each pass: 2-grams from words,
-    4-grams from 2-grams, ... — grams_2L[i] = grams_L[i] + ' ' +
-    grams_L[i+L].  A remainder block (largest power of two <= what's
-    left) finishes non-power-of-two n.  For n=8 that is 3 passes vs 7
-    (measured ~2x faster end-to-end at sf0.1).  zip_with null-pads the
-    shifted side and concat null-propagates, so the trailing incomplete
-    grams fall out of the filter; docs with < n words yield [].
-    """
-    words = _words_spark(text)
-    size = F.size(words)
-    blocks = {1: words}  # block length -> grams of that length at each start
-    grams, length = words, 1
-    while length * 2 <= n:
-        shifted = F.slice(grams, length + 1, size)
-        grams = F.zip_with(grams, shifted, lambda a, b: F.concat(a, F.lit(" "), b))
-        length *= 2
-        blocks[length] = grams
-    while length < n:
-        p = max(b for b in blocks if b <= n - length)
-        shifted = F.slice(blocks[p], length + 1, size)
-        grams = F.zip_with(grams, shifted, lambda a, b: F.concat(a, F.lit(" "), b))
-        length += p
-    return F.array_distinct(F.filter(grams, lambda x: x.isNotNull()))
-
-
-def _ngrams_sql(n: int) -> str:
-    """DuckDB mirror: 1-based end-inclusive list slice over the word array."""
-    return f"""list_distinct(list_transform(
-        range(0, greatest(len(string_split_regex(lower(regexp_replace(text, '^[ \t\n\x0B\f\r]+|[ \t\n\x0B\f\r]+$', '', 'g')), '[ \t\n\x0B\f\r]+')) - {n - 1}, 0)),
-        i -> array_to_string(string_split_regex(lower(regexp_replace(text, '^[ \t\n\x0B\f\r]+|[ \t\n\x0B\f\r]+$', '', 'g')), '[ \t\n\x0B\f\r]+')[i+1:i+{n}], ' ')
-    ))"""
-
-
 @query(
     "text_contamination",
     oracle=f"""
     WITH d AS (
       SELECT doc_id, lang,
              substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) < '{SPLIT_TRAIN_MAX}' AS is_train,
-             {_ngrams_sql(N_CONTAM)} AS grams
+             list_distinct({_ngrams_sql(N_CONTAM)}) AS grams
       FROM documents
     ),
     tg AS (SELECT DISTINCT unnest(grams) AS g FROM d WHERE is_train),
@@ -547,7 +539,9 @@ def text_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias(
             "is_train"
         ),
-        F.explode_outer(word_ngrams_spark(F.col("text"), N_CONTAM)).alias("g"),
+        F.explode_outer(
+            F.array_distinct(ngrams_spark(_words_spark(F.col("text")), N_CONTAM))
+        ).alias("g"),
     ).withColumn(
         # zero-gram docs salt to a PER-DOC window key ('e:' + doc_id —
         # a real 8-word gram always contains spaces, so no collision)
@@ -642,8 +636,7 @@ def chunk_stream(docs: DataFrame) -> DataFrame:
     oracle=f"""
     WITH t AS (
       SELECT doc_id, lang,
-             CASE WHEN length(regexp_replace(text, '^[ \t\n\x0B\f\r]+|[ \t\n\x0B\f\r]+$', '', 'g')) = 0 THEN []
-                  ELSE string_split_regex(lower(regexp_replace(text, '^[ \t\n\x0B\f\r]+|[ \t\n\x0B\f\r]+$', '', 'g')), '[ \t\n\x0B\f\r]+') END AS words
+             {_tokens_sql("lower(text)")} AS words
       FROM documents
     ),
     n AS (
@@ -703,10 +696,10 @@ def text_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- TF-IDF top terms per language ------------------------------------------
 @query(
     "text_tfidf_terms",
-    oracle="""
+    oracle=f"""
     WITH tok AS (
-      SELECT doc_id, lang, unnest(string_split_regex(lower(regexp_replace(text, '^[ \t\n\x0B\f\r]+|[ \t\n\x0B\f\r]+$', '', 'g')), '[ \t\n\x0B\f\r]+')) AS w
-      FROM documents WHERE length(regexp_replace(text, '^[ \t\n\x0B\f\r]+|[ \t\n\x0B\f\r]+$', '', 'g')) > 0
+      SELECT doc_id, lang, unnest({_WORDS_SQL}) AS w
+      FROM documents WHERE length({WS_TRIM_TEXT_SQL}) > 0
     ),
     n AS (SELECT COUNT(*) AS n_docs FROM documents),
     df AS (SELECT w, COUNT(DISTINCT doc_id) AS df FROM tok GROUP BY w),
@@ -894,10 +887,10 @@ def doc_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 # stream.
 @query(
     "text_unigram_logprob",
-    oracle="""
+    oracle=f"""
     WITH tok AS (
-      SELECT doc_id, lang, unnest(string_split_regex(lower(regexp_replace(text, '^[ \t\n\x0B\f\r]+|[ \t\n\x0B\f\r]+$', '', 'g')), '[ \t\n\x0B\f\r]+')) AS w
-      FROM documents WHERE length(regexp_replace(text, '^[ \t\n\x0B\f\r]+|[ \t\n\x0B\f\r]+$', '', 'g')) > 0
+      SELECT doc_id, lang, unnest({_WORDS_SQL}) AS w
+      FROM documents WHERE length({WS_TRIM_TEXT_SQL}) > 0
     ),
     v AS (SELECT w, COUNT(*) AS cnt FROM tok GROUP BY w),
     v2 AS (SELECT w, cnt, CAST(SUM(cnt) OVER () AS DOUBLE) AS total FROM v)
@@ -949,12 +942,12 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_bigram_logprob",
-    oracle="""
+    oracle=f"""
     WITH base AS (
       SELECT doc_id, lang,
-             string_split_regex(lower(regexp_replace(text, '^[ \t\n\x0B\f\r]+|[ \t\n\x0B\f\r]+$', '', 'g')), '[ \t\n\x0B\f\r]+') AS arr
+             {_WORDS_SQL} AS arr
       FROM documents
-      WHERE length(regexp_replace(text, '^[ \t\n\x0B\f\r]+|[ \t\n\x0B\f\r]+$', '', 'g')) > 0
+      WHERE length({WS_TRIM_TEXT_SQL}) > 0
     ),
     b2 AS (SELECT doc_id, lang, arr FROM base WHERE len(arr) >= 2),
     bg AS (
@@ -1117,9 +1110,9 @@ _NULL_SOURCE = "\x00<null-source>"
     "drift_vocab_js",
     oracle=f"""
     WITH tok AS (
-      SELECT source, unnest(string_split_regex(lower(regexp_replace(text, '^[ \t\n\x0B\f\r]+|[ \t\n\x0B\f\r]+$', '', 'g')), '[ \t\n\x0B\f\r]+')) AS w
+      SELECT source, unnest({_WORDS_SQL}) AS w
       FROM documents
-      WHERE length(regexp_replace(text, '^[ \t\n\x0B\f\r]+|[ \t\n\x0B\f\r]+$', '', 'g')) > 0
+      WHERE length({WS_TRIM_TEXT_SQL}) > 0
     ),
     support AS (
       SELECT w, COUNT(*) AS c FROM tok GROUP BY w HAVING COUNT(*) >= {_JS_FLOOR}
@@ -1293,8 +1286,7 @@ BPE_REGEX = r"[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9 \t\n\x0B\f\r]"
     oracle=f"""
     WITH t AS (
       SELECT source,
-             CASE WHEN length(regexp_replace(text, '^[ \t\n\x0B\f\r]+|[ \t\n\x0B\f\r]+$', '', 'g')) = 0 THEN 0
-                  ELSE len(string_split_regex(regexp_replace(text, '^[ \t\n\x0B\f\r]+|[ \t\n\x0B\f\r]+$', '', 'g'), '[ \t\n\x0B\f\r]+')) END AS n_ws,
+             len({_TOKENS_SQL}) AS n_ws,
              len(regexp_extract_all(text, '{BPE_REGEX}')) AS n_bpe
       FROM documents
     )
@@ -1357,8 +1349,8 @@ _DECILE_SQL = hex_to_int_sql("md5(CAST(doc_id AS VARCHAR))", 2)
     oracle=f"""
     WITH tok AS (
       SELECT ({_DECILE_SQL}) * 10 // 256 AS decile,
-             unnest(string_split_regex(lower(regexp_replace(text, '^[ \t\n\x0B\f\r]+|[ \t\n\x0B\f\r]+$', '', 'g')), '[ \t\n\x0B\f\r]+')) AS w
-      FROM documents WHERE length(regexp_replace(text, '^[ \t\n\x0B\f\r]+|[ \t\n\x0B\f\r]+$', '', 'g')) > 0
+             unnest({_WORDS_SQL}) AS w
+      FROM documents WHERE length({WS_TRIM_TEXT_SQL}) > 0
     ),
     g AS (SELECT decile, w, COUNT(*) AS cnt FROM tok GROUP BY decile, w),
     s AS (SELECT decile, cnt,
@@ -1430,8 +1422,8 @@ ZIPF_TOP = 500
     oracle=f"""
     WITH f AS (
       SELECT w, COUNT(*) AS freq
-      FROM (SELECT unnest(string_split_regex(lower(regexp_replace(text, '^[ \t\n\x0B\f\r]+|[ \t\n\x0B\f\r]+$', '', 'g')), '[ \t\n\x0B\f\r]+')) AS w
-            FROM documents WHERE length(regexp_replace(text, '^[ \t\n\x0B\f\r]+|[ \t\n\x0B\f\r]+$', '', 'g')) > 0)
+      FROM (SELECT unnest({_WORDS_SQL}) AS w
+            FROM documents WHERE length({WS_TRIM_TEXT_SQL}) > 0)
       GROUP BY w
     ),
     r AS (
@@ -1589,8 +1581,8 @@ def _qc_weight(token: Column) -> Column:
     oracle=f"""
     WITH tok AS (
       SELECT doc_id, lang,
-             unnest(string_split_regex(regexp_replace(text, '^[ \t\n\x0B\f\r]+|[ \t\n\x0B\f\r]+$', '', 'g'), '[ \t\n\x0B\f\r]+')) AS w
-      FROM documents WHERE length(regexp_replace(text, '^[ \t\n\x0B\f\r]+|[ \t\n\x0B\f\r]+$', '', 'g')) > 0
+             unnest(string_split_regex({WS_TRIM_TEXT_SQL}, '{WS}+')) AS w
+      FROM documents WHERE length({WS_TRIM_TEXT_SQL}) > 0
     ),
     tw AS (
       SELECT doc_id, lang, COUNT(*) AS n_tokens,
@@ -1675,7 +1667,8 @@ HEAVY_DUP_SHARE = 0.5  # docs above this span-dup fraction get dropped
     "text_dup_spans",
     oracle=f"""
     WITH d AS (
-      SELECT doc_id, lang, {_ngrams_sql(N_SPAN)} AS grams FROM documents
+      SELECT doc_id, lang, list_distinct({_ngrams_sql(N_SPAN)}) AS grams
+      FROM documents
     ),
     e AS (
       SELECT doc_id, lang, substr(md5(unnest(grams)), 1, 16) AS h FROM d
@@ -1758,7 +1751,9 @@ def dup_span_census(
     e = docs.select(
         "doc_id",
         "lang",
-        F.explode_outer(word_ngrams_spark(F.col("text"), N_SPAN)).alias("g"),
+        F.explode_outer(
+            F.array_distinct(ngrams_spark(_words_spark(F.col("text")), N_SPAN))
+        ).alias("g"),
     ).select(
         "doc_id",
         "lang",

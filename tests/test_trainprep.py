@@ -6,43 +6,79 @@ these pin the algebraic properties the oracles can't express.
 
 from __future__ import annotations
 
+import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from acled_spark.queries.text import word_ngrams_spark
+from acled_spark.queries.text import (
+    _ngrams_sql,
+    _words_spark,
+    _words_sql,
+    ngrams_spark,
+)
 from acled_spark.tables import load
 from tests.conftest import SF_DIR
+from tests.test_ws_parity import ROWS, SCHEMA
 
 
-def _naive_ngrams(text, n):
-    """Reference construction: linear chain of single-word concats."""
-    words = F.split(F.lower(F.trim(text)), r"\s+")
+def _naive_ngrams(words, n):
+    """Reference construction: linear chain of single-word concats over
+    the kernel's own word split, so only the gram construction is
+    under test."""
     grams = words
     for k in range(1, n):
         shifted = F.slice(words, k + 1, F.size(words))
         grams = F.zip_with(grams, shifted, lambda a, b: F.concat(a, F.lit(" "), b))
-    return F.array_distinct(F.filter(grams, lambda x: x.isNotNull()))
+    return F.filter(grams, lambda x: x.isNotNull())
 
 
 @pytest.mark.parametrize("n", [2, 3, 4, 5, 7, 8, 9])
 def test_ngram_doubling_equals_naive_chain(spark, n):
-    """The O(log n) doubling construction must equal the linear chain."""
-    docs = load(spark, SF_DIR, "documents")
-    bad = (
-        docs.select(
-            F.array_sort(word_ngrams_spark(F.col("text"), n)).alias("fast"),
-            F.array_sort(_naive_ngrams(F.col("text"), n)).alias("ref"),
+    """The O(log n) doubling construction must equal the linear chain,
+    in order and with duplicates kept (winnowing depends on both), over
+    the corpus and the planted whitespace-edge rows."""
+    planted = spark.createDataFrame(ROWS, SCHEMA).select("text")
+    for docs in (load(spark, SF_DIR, "documents").select("text"), planted):
+        words = _words_spark(F.col("text"))
+        bad = (
+            docs.select(
+                ngrams_spark(words, n).alias("fast"),
+                _naive_ngrams(words, n).alias("ref"),
+            )
+            .filter(~F.col("fast").eqNullSafe(F.col("ref")))
+            .count()
         )
-        .filter(F.col("fast") != F.col("ref"))
-        .count()
-    )
-    assert bad == 0
+        assert bad == 0
 
 
 def test_ngram_short_doc_yields_empty(spark):
     df = spark.createDataFrame([("a b c",), ("",), ("  ",)], ["text"])
-    out = df.select(F.size(word_ngrams_spark(F.col("text"), 5)).alias("n")).collect()
+    grams = ngrams_spark(_words_spark(F.col("text")), 5)
+    out = df.select(F.size(grams).alias("n")).collect()
     assert [r.n for r in out] == [0, 0, 0]
+
+
+@pytest.mark.parametrize("n", [2, 3, 4, 8])
+def test_text_kernel_twins_agree_across_engines(spark, n):
+    """Each Spark tokenizer step equals its DuckDB twin element by
+    element and in order on the planted rows (vertical tab, tab edges,
+    whitespace-only, empty, NULL, mixed case)."""
+    words = _words_spark(F.col("text"))
+    got = [
+        (r.doc_id, r.words, r.grams)
+        for r in spark.createDataFrame(ROWS, SCHEMA)
+        .select("doc_id", words.alias("words"), ngrams_spark(words, n).alias("grams"))
+        .orderBy("doc_id")
+        .collect()
+    ]
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", [r[:2] for r in ROWS])
+    want = con.execute(
+        f"SELECT doc_id, {_words_sql()}, {_ngrams_sql(n)} FROM documents ORDER BY doc_id"
+    ).fetchall()
+    con.close()
+    assert got == want
 
 
 def test_asof_join_semantics(spark):

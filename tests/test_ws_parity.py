@@ -161,29 +161,6 @@ def test_unicode_case_folding_divergence_is_pinned(spark, edge_duck):
     ).fetchone()[0]
 
 
-def test_shingles_and_word_ngrams_builders_agree(spark, edge_dir):
-    """r7 review flagged dedup.shingles_spark and text.word_ngrams_spark
-    as parallel spellings of the same gram builder; consolidation is
-    risky (both carry measured performance rationales), so this pins
-    that they produce IDENTICAL shingle sets — if one gets a
-    tokenization fix the other must too, and this test is the tripwire."""
-    from pyspark.sql import functions as F
-
-    from acled_spark.queries.dedup import NGRAM, shingles_spark
-    from acled_spark.queries.text import word_ngrams_spark
-
-    docs = spark.read.parquet(f"{edge_dir}/documents.parquet")
-    both = docs.select(
-        "doc_id",
-        F.array_sort(shingles_spark(F.col("text"))).alias("a"),
-        F.array_sort(word_ngrams_spark(F.col("text"), NGRAM)).alias("b"),
-    )
-    diverged = both.filter(
-        ~F.col("a").eqNullSafe(F.col("b"))
-    ).count()
-    assert diverged == 0
-
-
 def test_ngram_novelty_semantics_pinned(spark, edge_dir):
     """Row 8 duplicates row 1's text exactly: every one of its grams
     was first seen in doc 1, so its novelty is 0.0 and doc 1's is 1.0
