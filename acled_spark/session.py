@@ -17,6 +17,9 @@ but every knob is the one you would set on a real cluster:
   TIMESTAMP(NANOS) which Spark has no native type for.
 - A codegen cache large enough for the write path's working set, so
   generated classes stay compiled (and JIT-warm) between operations.
+- Delayed C2 in the driver JVM (``DRIVER_JIT_FLAGS``): a session of
+  many short jobs over small frames spends more CPU in HotSpot's C2
+  compiler than C2 code saves, so only really hot methods reach it.
 """
 
 from __future__ import annotations
@@ -35,6 +38,20 @@ PARITY_CONF = {
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.legacy.parquet.nanosAsLong": "true",
 }
+
+#: HotSpot tiering flags for the driver JVM (in ``local[*]`` also the
+#: executor).  The tier-4 (C2) thresholds are 10x, 4x and 10x HotSpot's
+#: defaults (5000 invocations, 15000 invocations plus loop back-edges,
+#: 40000 back-edges), so C2 compiles only methods that stay hot across
+#: many jobs and C1 code runs the rest.  C2 was the largest CPU column of
+#: the write path; C1 alone (TieredStopAtLevel=1) made the heavy bench.py
+#: queries twice as slow (SCALE.md §jit-budget).  Launch-time only: a
+#: session this module did not build runs without them.
+DRIVER_JIT_FLAGS = (
+    "-XX:Tier4InvocationThreshold=50000"
+    " -XX:Tier4CompileThreshold=60000"
+    " -XX:Tier4BackEdgeThreshold=400000"
+)
 
 RUNTIME_CONF = {
     **PARITY_CONF,
@@ -91,6 +108,12 @@ def get_spark(
         # recompiled (and re-JITted) at their next use
         # (SCALE.md §codegen-cache).
         .config("spark.sql.codegen.cache.maxEntries", "1000")
+        # Spark puts defaultJavaOptions before a caller's
+        # extraJavaOptions, so the caller's flags are kept and win on a
+        # conflict; set as extraJavaOptions, a caller's would drop these.
+        # A spark-defaults.conf defaultJavaOptions is replaced here:
+        # site-wide driver JVM flags belong in extraJavaOptions.
+        .config("spark.driver.defaultJavaOptions", DRIVER_JIT_FLAGS)
     )
     for k, v in RUNTIME_CONF.items():
         builder = builder.config(k, v)
