@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from acled_spark.silver import merge_updates
+from acled_spark.vector import as_double, cosine, dot, l2_norm, sq_dist
 
 SEED = 42
 
@@ -55,20 +56,17 @@ def with_normalized(
     synchronized copies.  The norm is precomputed as a COLUMN before
     the per-element transform (embedding sqrt(dot) inside the lambda
     re-evaluates the O(d) dot product per element — O(d²)/row; HOFs
-    are interpreted).  Zero vectors stay zero (dividing would inject
-    NaNs into KMeans / distance math).
+    are interpreted).  The norm is ``dot`` of the RAW float column,
+    not ``l2_norm`` (vector.py's float-product rule): the other spelling
+    moves every KMeans input and centroid.  Zero vectors stay zero
+    (dividing would inject NaNs into KMeans / distance math).
     """
-    dot_self = F.aggregate(
-        F.zip_with(F.col(vec_col), F.col(vec_col), lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x.cast("double"),
-    )
     normed = F.when(
         F.col("__nrm") > 0,
         F.transform(F.col(vec_col), lambda x: x.cast("double") / F.col("__nrm")),
-    ).otherwise(F.transform(F.col(vec_col), lambda x: x.cast("double")))
+    ).otherwise(as_double(vec_col))
     return (
-        df.withColumn("__nrm", F.sqrt(dot_self))
+        df.withColumn("__nrm", F.sqrt(dot(F.col(vec_col), F.col(vec_col))))
         .withColumn(out_col, normed)
         .drop("__nrm")
     )
@@ -217,32 +215,23 @@ def ivf_search(
     q_normed = with_normalized(
         queries.select(F.col(id_col), F.col(vec_col)), vec_col, "__qn"
     ).select(id_col, "__qn")
-    sq_dist = F.aggregate(
-        F.zip_with(F.col("__qn"), F.col("centroid"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
     pw = Window.partitionBy(id_col).orderBy("__dist", "cell")
     probes = (
         q_normed.crossJoin(F.broadcast(centroids))  # nlist rows per query
-        .withColumn("__dist", sq_dist)
+        .withColumn("__dist", sq_dist(F.col("__qn"), F.col("centroid")))
         .withColumn("__pr", F.row_number().over(pw))
         .filter(F.col("__pr") <= nprobe)
         .select(id_col, "cell")
     )
 
-    dbl = lambda c: F.transform(c, lambda x: x.cast("double"))  # noqa: E731
-    dot = lambda a, b: F.aggregate(  # noqa: E731
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
     # Precompute each side's norm ONCE (per vector, not per candidate
     # pair — HOF aggregates are interpreted, so redundant per-pair norm
     # evaluation dominates the scoring join otherwise).
     q = (
         queries.select(
             F.col(id_col).alias("query_id"),
-            dbl(vec_col).alias("qe"),
-            F.sqrt(dot(dbl(vec_col), dbl(vec_col))).alias("qnrm"),
+            as_double(vec_col).alias("qe"),
+            l2_norm(vec_col).alias("qnrm"),
         )
         .join(
             probes.select(F.col(id_col).alias("query_id"), "cell"),
@@ -252,8 +241,8 @@ def ivf_search(
     corpus = index.assigned.select(
         "cell",
         id_col,
-        dbl(vec_col).alias("ce"),
-        F.sqrt(dot(dbl(vec_col), dbl(vec_col))).alias("cnrm"),
+        as_double(vec_col).alias("ce"),
+        l2_norm(vec_col).alias("cnrm"),
     )
     if salt_buckets > 1:
         corpus = corpus.withColumn(
@@ -274,11 +263,10 @@ def ivf_search(
     cand = corpus.join(q, join_key).filter(
         ~F.col(id_col).eqNullSafe(F.col("query_id"))
     )
-    # zero-norm guard: under ANSI mode a 0 divisor aborts the whole job;
-    # define cosine(x, 0-vector) = 0.0
-    denom = F.col("cnrm") * F.col("qnrm")
-    cosine = F.when(
-        denom > 0, dot(F.col("ce"), F.col("qe")) / denom
+    # define cosine(x, 0-vector) = 0.0; otherwise, not coalesce, so a
+    # NULL cosine from a NULL or ragged vector stays NULL
+    cos = cosine(
+        F.col("ce"), F.col("qe"), F.col("cnrm"), F.col("qnrm")
     ).otherwise(F.lit(0.0))
     # no dropDuplicates: a corpus row lives in exactly one (cell, salt)
     # and probes are distinct per query, so each (query, neighbor) pair
@@ -287,7 +275,7 @@ def ivf_search(
     scored = cand.select(
         "query_id",
         F.col(id_col).alias("neighbor_id"),
-        (F.round(cosine, 4) + 0.0).alias("cosine"),
+        (F.round(cos, 4) + 0.0).alias("cosine"),
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
     return (
@@ -631,16 +619,11 @@ def ivf_staleness(index: IvfIndex, vec_col: str = "embedding") -> dict:
     """
     spark = index.assigned.sparkSession
     centroids = _centroid_frame(spark, index.model)
-    sq_dist = F.aggregate(
-        F.zip_with(F.col("__n"), F.col("centroid"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
     row = (
         with_normalized(index.assigned, vec_col)
         .join(F.broadcast(centroids), "cell")
         .agg(
-            F.avg(sq_dist).alias("mean_sq_dist"),
+            F.avg(sq_dist(F.col("__n"), F.col("centroid"))).alias("mean_sq_dist"),
             F.count("*").alias("n_vectors"),
         )
         .collect()[0]

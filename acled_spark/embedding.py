@@ -34,17 +34,9 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from acled_spark.vector import dot, lit_vector
+
 DEFAULT_ITERS = 12
-
-
-def _dot_lit(vec_col: str, lit_vec: list[float]) -> F.Column:
-    """(row vector - nothing) · literal vector, as a Column."""
-    arr = F.array(*[F.lit(float(x)) for x in lit_vec])
-    return F.aggregate(
-        F.zip_with(F.col(vec_col), arr, lambda a, b: a.cast("double") * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
 
 
 def valid_vectors(df: DataFrame, vec_col: str) -> DataFrame:
@@ -156,7 +148,7 @@ def _cov_vec_product(
     """C·v in ONE pass, matrix-free: (1/n) Σ (x_i - μ)·((x_i - μ)·v)."""
     d = len(mu)
     mu_dot_v = sum(m * c for m, c in zip(mu, v))
-    s = _dot_lit(vec_col, v) - F.lit(mu_dot_v)
+    s = dot(F.col(vec_col), lit_vector(v)) - F.lit(mu_dot_v)
     agg = (
         df.select(s.alias("__s"), F.col(vec_col).alias("__x"))
         .select("__s", F.posexplode("__x").alias("dim", "x"))
@@ -325,18 +317,13 @@ def remove_top_component(
     (x' = x - (x·v)v) — the standard anisotropy correction before
     cosine retrieval.  Narrow map, no shuffle; ``component`` rides the
     plan as a d-float literal array."""
-    arr = F.array(*[F.lit(float(x)) for x in component])
-    proj = F.aggregate(
-        F.zip_with(F.col(vec_col), arr, lambda a, b: a.cast("double") * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    arr = lit_vector(component)
     # proj staged as a COLUMN: inlining the aggregate inside the
     # zip_with lambda would re-evaluate the O(d) dot product per
     # element (O(d²)/row; HOFs are interpreted — same rule as
     # ann.with_normalized)
     return (
-        df.withColumn("__proj", proj)
+        df.withColumn("__proj", dot(F.col(vec_col), arr))
         .withColumn(
             out_col,
             F.zip_with(

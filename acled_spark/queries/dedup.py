@@ -34,6 +34,7 @@ from acled_spark.queries.text import (
 )
 from acled_spark.registry import query
 from acled_spark.tables import load
+from acled_spark.vector import as_double, cosine, cosine_sql, l2_norm, l2_norm_sql
 
 # ---------------------------------------------------------------------------
 # shared shingling (word 3-grams over normalized tokens)
@@ -734,13 +735,11 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH v AS (
       SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS e,
-             SQRT(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS nrm
+             {l2_norm_sql("embedding")} AS nrm
       FROM embeddings WHERE len(embedding) = {_EMB_DIM}
     )
     SELECT a.vec_id AS vec1, b.vec_id AS vec2, a.label AS label,
-           ROUND(CASE WHEN a.nrm * b.nrm > 0
-                      THEN list_dot_product(a.e, b.e) / (a.nrm * b.nrm)
-                 END, 4) + 0.0 AS cosine
+           ROUND({cosine_sql("a.e", "b.e", "a.nrm", "b.nrm")}, 4) + 0.0 AS cosine
     FROM v a JOIN v b ON a.label = b.label AND a.vec_id < b.vec_id
     ORDER BY cosine DESC, vec1, vec2 LIMIT 20
     """,
@@ -829,8 +828,6 @@ def embedding_cosine_pairs(
     (never a hot-key window), and the |labels|-sized keep-set
     broadcast-semi-joins onto the vector frame.
     """
-    from acled_spark.vector import as_double, dot as vdot, l2_norm
-
     if max_block is not None:
         keep = (
             emb.groupBy("label")
@@ -847,7 +844,9 @@ def embedding_cosine_pairs(
     )
     a = v.alias("a")
     b = v.alias("b")
-    dot = vdot(F.col("a.e"), F.col("b.e"))
+    cos = cosine(F.col("a.e"), F.col("b.e"), F.col("a.nrm"), F.col("b.nrm"))
+    if round_digits is not None:
+        cos = F.round(cos, round_digits)
     return a.join(
         b,
         (F.col("a.label") == F.col("b.label"))
@@ -856,25 +855,7 @@ def embedding_cosine_pairs(
         F.col("a.vec_id").alias("vec1"),
         F.col("b.vec_id").alias("vec2"),
         F.col("a.label").alias("label"),
-        # zero-norm guard: ANSI mode aborts on /0; NULL on both
-        # engines (the oracle's DuckDB division yields NULL too)
-        (
-            (
-                F.when(
-                    F.col("a.nrm") * F.col("b.nrm") > 0,
-                    dot / (F.col("a.nrm") * F.col("b.nrm")),
-                )
-                if round_digits is None
-                else F.round(
-                    F.when(
-                        F.col("a.nrm") * F.col("b.nrm") > 0,
-                        dot / (F.col("a.nrm") * F.col("b.nrm")),
-                    ),
-                    round_digits,
-                )
-            )
-            + 0.0
-        ).alias("cosine"),
+        (cos + 0.0).alias("cosine"),
     )
 
 
@@ -1617,8 +1598,6 @@ def _census_parts(
     only.  Shared by :func:`semantic_dedup_census` (full rollup) and
     :func:`semantic_classify_batch` (which must filter the PAIR frame
     against store-absorbed dominators before any rollup)."""
-    from acled_spark.vector import as_double, dot as vdot, l2_norm
-
     vectors = vectors.localCheckpoint(eager=False)
     c = centroids.select(
         "cell",
@@ -1631,10 +1610,7 @@ def _census_parts(
         as_double("embedding").alias("__e"),
         l2_norm("embedding").alias("__nrm"),
     )
-    cent_cos = F.when(
-        F.col("__nrm") * F.col("__cnrm") > 0,
-        vdot(F.col("__e"), F.col("__ce")) / (F.col("__nrm") * F.col("__cnrm")),
-    )
+    cent_cos = cosine(F.col("__e"), F.col("__ce"), F.col("__nrm"), F.col("__cnrm"))
     w = Window.partitionBy("cell").orderBy(
         F.asc_nulls_last("cent_cos"), "vec_id"
     )
@@ -1927,7 +1903,6 @@ def semantic_classify_batch(
     maintenance story prescribes.
     """
     from acled_spark.ann import _assign_cells, centroid_frame
-    from acled_spark.vector import as_double, dot as vdot, l2_norm
 
     spark = batch.sparkSession
     assigned = _assign_cells(index, batch, "embedding", "vec_id").select(
@@ -1955,10 +1930,7 @@ def semantic_classify_batch(
         as_double("embedding").alias("k_e"),
         l2_norm("embedding").alias("k_nrm"),
     )
-    cos = F.when(
-        F.col("b_nrm") * F.col("k_nrm") > 0,
-        vdot(F.col("b_e"), F.col("k_e")) / (F.col("b_nrm") * F.col("k_nrm")),
-    )
+    cos = cosine(F.col("b_e"), F.col("k_e"), F.col("b_nrm"), F.col("k_nrm"))
     store_hits = (
         b.join(k, ["cell"])
         .filter(F.col("b_id") != F.col("k_id"))  # self-rule: replays

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from acled_spark.registry import query
 from acled_spark.tables import load
+from acled_spark.vector import l2_norm, l2_norm_sql
 
 
 # --- F1: null-on-error casts + JSON extraction ------------------------------
@@ -285,20 +286,10 @@ def f16_regexp_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 # JVM-side scale path for embedding math (no Python in the loop).
 @query(
     "f9b_vector_norm",
-    # fold spelling, not list_dot_product: DuckDB's dot product REFUSES
-    # the empty list while Spark's aggregate([]) folds to 0.0 — the fold
-    # + COALESCE mirrors Spark exactly (same sequential order; the same
-    # spelling sim_norm_outliers uses), r7 review.  The COALESCE only
-    # covers the EMPTY array: a NULL embedding must stay NULL (Spark's
-    # aggregate(NULL, ...) is NULL), so it is guarded out front — an
-    # unguarded COALESCE mapped NULL -> 0.0 and broke parity on the
-    # first NULL row (ADVICE r7; pinned by test_vector_edge's NULL row)
-    oracle="""
-    SELECT vec_id, label,
-           CASE WHEN embedding IS NULL THEN NULL
-                ELSE ROUND(SQRT(COALESCE(list_aggregate(
-                  list_transform(CAST(embedding AS DOUBLE[]), x -> x * x),
-                  'sum'), 0.0)), 4) END AS l2_norm
+    # the twin keeps the empty array at 0.0 and a NULL embedding NULL, as
+    # Spark does (r7 review; pinned by test_vector_edge's edge rows)
+    oracle=f"""
+    SELECT vec_id, label, ROUND({l2_norm_sql("embedding")}, 4) AS l2_norm
     FROM embeddings ORDER BY vec_id LIMIT 100
     """,
     tags=("scalar", "vector", "extended"),
@@ -309,8 +300,6 @@ def f9b_vector_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
     The norm expression is the shared kernel (acled_spark/vector.py) —
     the same sequential fold every cosine query uses, spelled once.
     """
-    from acled_spark.vector import l2_norm
-
     e = load(spark, sf_dir, "embeddings")
     return (
         e.select(

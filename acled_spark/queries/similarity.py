@@ -20,8 +20,16 @@ from pyspark.sql.window import Window
 
 from acled_spark.registry import query
 from acled_spark.tables import load
-from acled_spark.vector import as_double as _dbl
-from acled_spark.vector import dot as _dot
+from acled_spark.vector import (
+    as_double,
+    cosine,
+    cosine_sql,
+    dot,
+    dot_sql,
+    l2_norm,
+    l2_norm_sql,
+    lit_vector,
+)
 
 DIM = 64
 N_QUERIES = 5  # vec_id < 5 are the probe vectors
@@ -35,17 +43,13 @@ PLANES = [
 ]
 
 
-def _plane_lit(p: list[float]) -> Column:
-    return F.array(*[F.lit(w) for w in p])
-
-
 def _plane_sql(p: list[float]) -> str:
     return "[" + ", ".join(repr(w) for w in p) + "]"
 
 
 def _bucket_sql() -> str:
     bits = [
-        f"(CASE WHEN list_dot_product(e, {_plane_sql(p)}) >= 0 THEN '1' ELSE '0' END)"
+        f"(CASE WHEN {dot_sql('e', _plane_sql(p))} >= 0 THEN '1' ELSE '0' END)"
         for p in PLANES
     ]
     return " || ".join(bits)
@@ -53,25 +57,48 @@ def _bucket_sql() -> str:
 
 def _bucket_spark(e: Column) -> Column:
     bits = [
-        F.when(_dot(e, _plane_lit(p)) >= 0, "1").otherwise("0") for p in PLANES
+        F.when(dot(e, lit_vector(p)) >= 0, "1").otherwise("0") for p in PLANES
     ]
     return F.concat(*bits)
+
+
+# The cosine family's population, one spelling per engine: full-width
+# vectors (a ragged vector NULL-coses in Spark but ABORTS DuckDB's
+# list_dot_product, r7 review) with a nonzero norm (undefined cosine;
+# an unguarded /0 aborts Spark under ANSI mode).
+_V_SQL = f"""v AS (
+      SELECT * FROM (
+        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e,
+               {l2_norm_sql("embedding")} AS nrm
+        FROM embeddings WHERE len(embedding) = {DIM}
+      ) WHERE nrm > 0
+    )"""
+
+
+def _nonzero_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, e, nrm) — the Spark side of ``_V_SQL``."""
+    emb = load(spark, sf_dir, "embeddings").filter(F.size("embedding") == DIM)
+    return emb.select(
+        "vec_id",
+        as_double("embedding").alias("e"),
+        l2_norm("embedding").alias("nrm"),
+    ).filter(F.col("nrm") > 0)
+
+
+def _cosine4() -> Column:
+    """The probe-vs-candidate cosine at the family's 4-decimal grain."""
+    cos = cosine(F.col("qe"), F.col("e"), F.col("qnrm"), F.col("nrm"))
+    return (F.round(cos, 4) + 0.0).alias("cosine")
 
 
 # --- brute-force cosine top-k (exact baseline) ------------------------------
 @query(
     "sim_topk_bruteforce",
     oracle=f"""
-    WITH v AS (
-      SELECT * FROM (
-        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e,
-               SQRT(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS nrm
-        FROM embeddings WHERE len(embedding) = {DIM}
-      ) WHERE nrm > 0
-    ),
+    WITH {_V_SQL},
     scored AS (
       SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-             ROUND(list_dot_product(q.e, c.e) / (q.nrm * c.nrm), 4) + 0.0 AS cosine
+             ROUND({cosine_sql("q.e", "c.e", "q.nrm", "c.nrm")}, 4) + 0.0 AS cosine
       FROM v q JOIN v c ON c.vec_id <> q.vec_id
       WHERE q.vec_id < {N_QUERIES}
     )
@@ -98,14 +125,7 @@ def sim_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     under Spark's default ANSI mode an unguarded /0 would abort the
     query, and the oracle mirrors the same filter.
     """
-    # width filter mirrored in the oracle (r7 review): a ragged vector
-    # NULL-coses in Spark but ABORTS DuckDB's list_dot_product
-    emb = load(spark, sf_dir, "embeddings").filter(F.size("embedding") == DIM)
-    v = emb.select(
-        "vec_id",
-        _dbl("embedding").alias("e"),
-        F.sqrt(_dot(_dbl("embedding"), _dbl("embedding"))).alias("nrm"),
-    ).filter(F.col("nrm") > 0)
+    v = _nonzero_vectors(spark, sf_dir)
     q = v.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("e").alias("qe"),
@@ -116,9 +136,7 @@ def sim_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
-            (F.round(
-                _dot(F.col("qe"), F.col("e")) / (F.col("qnrm") * F.col("nrm")), 4
-            ) + 0.0).alias("cosine"),
+            _cosine4(),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
@@ -133,17 +151,11 @@ def sim_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "sim_ann_lsh",
     oracle=f"""
-    WITH v AS (
-      SELECT * FROM (
-        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e,
-               SQRT(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS nrm
-        FROM embeddings WHERE len(embedding) = {DIM}
-      ) WHERE nrm > 0
-    ),
+    WITH {_V_SQL},
     b AS (SELECT vec_id, e, nrm, {_bucket_sql()} AS bucket FROM v),
     scored AS (
       SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, q.bucket AS bucket,
-             ROUND(list_dot_product(q.e, c.e) / (q.nrm * c.nrm), 4) + 0.0 AS cosine
+             ROUND({cosine_sql("q.e", "c.e", "q.nrm", "c.nrm")}, 4) + 0.0 AS cosine
       FROM b q JOIN b c ON q.bucket = c.bucket AND c.vec_id <> q.vec_id
       WHERE q.vec_id < {N_QUERIES}
     )
@@ -168,17 +180,8 @@ def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     Zero-norm vectors are excluded on both engines (undefined cosine;
     ANSI /0 guard — same rule as sim_topk_bruteforce).
     """
-    # width filter mirrored in the oracle (r7 review, same rule as
-    # sim_topk_bruteforce)
-    emb = load(spark, sf_dir, "embeddings").filter(F.size("embedding") == DIM)
-    v = (
-        emb.select(
-            "vec_id",
-            _dbl("embedding").alias("e"),
-            F.sqrt(_dot(_dbl("embedding"), _dbl("embedding"))).alias("nrm"),
-        )
-        .filter(F.col("nrm") > 0)
-        .withColumn("bucket", _bucket_spark(F.col("e")))
+    v = _nonzero_vectors(spark, sf_dir).withColumn(
+        "bucket", _bucket_spark(F.col("e"))
     )
     q = v.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
@@ -193,9 +196,7 @@ def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         "query_id",
         F.col("vec_id").alias("neighbor_id"),
         F.col("qbucket").alias("bucket"),
-        (F.round(
-            _dot(F.col("qe"), F.col("e")) / (F.col("qnrm") * F.col("nrm")), 4
-        ) + 0.0).alias("cosine"),
+        _cosine4(),
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
     return (
@@ -243,13 +244,7 @@ def _probe_buckets_spark(bucket: Column) -> Column:
 @query(
     "sim_ann_multiprobe",
     oracle=f"""
-    WITH v AS (
-      SELECT * FROM (
-        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e,
-               SQRT(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS nrm
-        FROM embeddings WHERE len(embedding) = {DIM}
-      ) WHERE nrm > 0
-    ),
+    WITH {_V_SQL},
     b AS (SELECT vec_id, e, nrm, {_bucket_sql()} AS bucket FROM v),
     q0 AS (SELECT * FROM b WHERE vec_id < {N_QUERIES}),
     p AS (
@@ -258,7 +253,7 @@ def _probe_buckets_spark(bucket: Column) -> Column:
     ),
     scored AS (
       SELECT p.vec_id AS query_id, c.vec_id AS neighbor_id,
-             ROUND(list_dot_product(p.e, c.e) / (p.nrm * c.nrm), 4) + 0.0 AS cosine
+             ROUND({cosine_sql("p.e", "c.e", "p.nrm", "c.nrm")}, 4) + 0.0 AS cosine
       FROM p JOIN b c ON c.bucket = p.probe AND c.vec_id <> p.vec_id
     )
     SELECT query_id, neighbor_id, cosine,
@@ -289,17 +284,8 @@ def sim_ann_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     exploded probe set, candidates stay partition-local on their
     bucket; recall rises without re-bucketing or extra index state.
     """
-    # width filter mirrored in the oracle (r7 review, same rule as
-    # sim_topk_bruteforce)
-    emb = load(spark, sf_dir, "embeddings").filter(F.size("embedding") == DIM)
-    v = (
-        emb.select(
-            "vec_id",
-            _dbl("embedding").alias("e"),
-            F.sqrt(_dot(_dbl("embedding"), _dbl("embedding"))).alias("nrm"),
-        )
-        .filter(F.col("nrm") > 0)
-        .withColumn("bucket", _bucket_spark(F.col("e")))
+    v = _nonzero_vectors(spark, sf_dir).withColumn(
+        "bucket", _bucket_spark(F.col("e"))
     )
     q = (
         v.filter(F.col("vec_id") < N_QUERIES)
@@ -316,9 +302,7 @@ def sim_ann_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "query_id",
         F.col("vec_id").alias("neighbor_id"),
-        (F.round(
-            _dot(F.col("qe"), F.col("e")) / (F.col("qnrm") * F.col("nrm")), 4
-        ) + 0.0).alias("cosine"),
+        _cosine4(),
     )
     wc = Window.partitionBy("query_id")
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
@@ -377,8 +361,8 @@ def sim_quantize_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = emb.select(
         "vec_id",
         "label",
-        _dbl("embedding").alias("e"),
-        F.array_max(F.transform(_dbl("embedding"), F.abs)).alias("maxabs"),
+        as_double("embedding").alias("e"),
+        F.array_max(F.transform(as_double("embedding"), F.abs)).alias("maxabs"),
     )
     # The scale must be INTRINSICALLY nonzero, not conditionally skipped
     # (r13 adversarial tier): the zero-vector row has maxabs=0, and the
@@ -504,10 +488,7 @@ def sim_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sim_norm_outliers",
     oracle=f"""
     WITH n AS (
-      SELECT label,
-             ROUND(sqrt(list_aggregate(
-               list_transform(embedding, x -> CAST(x AS DOUBLE) * x), 'sum')), 6)
-               AS norm
+      SELECT label, ROUND({l2_norm_sql("embedding")}, 6) AS norm
       FROM embeddings
     ),
     q AS (
@@ -537,17 +518,7 @@ def sim_norm_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     a19's HLL vs exact distinct).
     """
     emb = load(spark, sf_dir, "embeddings")
-    norm = F.round(
-        F.sqrt(
-            F.aggregate(
-                F.transform("embedding", lambda x: x.cast("double") * x),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-        ),
-        6,
-    )
-    n = emb.select("label", norm.alias("norm"))
+    n = emb.select("label", F.round(l2_norm("embedding"), 6).alias("norm"))
     q = n.agg(
         F.percentile("norm", F.lit(0.01)).alias("lo"),
         F.percentile("norm", F.lit(0.99)).alias("hi"),

@@ -2,10 +2,13 @@
 
 from __future__ import annotations
 
+import math
+
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from acled_spark.ann import build_ivf_index, ivf_search
+from acled_spark.ann import build_ivf_index, ivf_search, with_normalized
 from acled_spark.queries.similarity import sim_topk_bruteforce
 from acled_spark.tables import load
 
@@ -787,3 +790,19 @@ def test_adaptive_nlist_sizing_and_cell_target_fold(spark):
     want = adaptive_nlist(n, 32)
     idx = build_ivf_index(emb, nlist=2, cell_target=32, persist=False)
     assert len(idx.model.clusterCenters()) == want  # nlist=2 ignored
+
+
+def test_with_normalized_divides_by_the_float_product_norm(spark):
+    """with_normalized's norm is sqrt(dot(raw, raw)): each product is a
+    float product, widened before the sum (vector.py's float-product
+    rule).  The vector is one where the widen-first l2_norm differs, so
+    respelling the norm as l2_norm, which would move every KMeans input
+    and IVF centroid, fails here."""
+    x = np.array([0.1, 0.2, 0.3, 1.7, -2.9], dtype=np.float32)
+    float_nrm = math.sqrt(sum(float(p) for p in x * x))  # sequential fold
+    double_nrm = math.sqrt(sum(float(v) * float(v) for v in x))
+    assert float_nrm != double_nrm
+
+    df = spark.createDataFrame([([float(v) for v in x],)], "v array<float>")
+    got = with_normalized(df, "v").first()["__n"]
+    assert got == [float(v) / float_nrm for v in x]

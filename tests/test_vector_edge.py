@@ -9,8 +9,8 @@ EXCLUDE zero-norm vectors from probe and candidate sets; this suite
 plants two zero vectors (one in the probe id range, one outside) and
 runs the registered vector queries' engine-vs-oracle parity over them.
 
-Also pins the shared kernel contract (acled_spark/vector.py): the one
-dot/norm spelling all three consumer modules now import.
+Also pins the shared kernel contract (acled_spark/vector.py): each
+Spark kernel is bit-identical to its DuckDB twin.
 """
 
 from __future__ import annotations
@@ -61,13 +61,15 @@ ROWS = [
 ]
 SCHEMA = "vec_id long, embedding array<float>, label int"
 
-# every oracle-backed query over the embeddings table whose arithmetic
-# is the sequential-fold kernel (bit-identical across engines)
+# every oracle-backed query over the embeddings table
 _VECTOR_QUERIES = [
     "sim_topk_bruteforce",
     "sim_ann_lsh",
     "sim_ann_multiprobe",
     "sim_quantize_error",
+    "sim_norm_outliers",
+    "sim_dim_stats",
+    "sim_label_centroids",
     "dedup_embedding_cosine",
     "f9b_vector_norm",
 ]
@@ -131,29 +133,54 @@ def test_zero_norm_vectors_excluded_not_fatal(spark, edge_dir):
     assert 12 in q_ids and 13 not in q_ids
 
 
-def test_shared_kernel_fold_matches_duckdb(spark):
-    """vector.py's dot() folds left-to-right like list_dot_product: an
-    ill-conditioned sum (big, -big, tiny) keeps the order-dependent
-    result, so any future respelling that reorders the fold fails here."""
+# (a, b) vector pairs for the kernel twins: zero, negative, huge
+# magnitude, an ill-conditioned sum whose value depends on the fold
+# order (3.0 left to right, 5.0 right to left, 4.0 pairwise), NULL and
+# empty.  Ragged widths only for the single-vector kernel: DuckDB's
+# list_dot_product aborts on unequal widths by design.
+_CANCEL = [1.0, 1e16, -1e16, 3.0]
+_PAIRS = [
+    ([0.0, 0.0, 0.0, 0.0], [1.0, 2.0, 3.0, 4.0]),
+    ([-1.5, 2.25, -3.0, 0.5], [-0.5, -2.0, 4.0, 1.0]),
+    ([1e8, -3.0, 2.5e8, 7.0], [1e8, 1.0, -1e8, 3.0]),
+    (_CANCEL, [1.0, 1.0, 1.0, 1.0]),
+    (None, [1.0, 2.0, 3.0, 4.0]),
+    ([], []),
+]
+_RAGGED = [([1e8, 0.5, -7.25], None), ([3.0], None), ([0.1] * 9, None)]
+
+
+@pytest.mark.parametrize("kernel", ["dot", "l2_norm", "cosine"])
+def test_shared_kernel_fold_matches_duckdb(spark, kernel):
+    """Each vector.py kernel against its DuckDB twin, bit for bit, row by
+    row: a respelling on either side that reorders the fold, widens at
+    another point or maps NULL/empty differently fails here."""
     from pyspark.sql import functions as F
 
-    from acled_spark.vector import dot, l2_norm
+    from acled_spark import vector as V
 
-    vals = [1e16, -1e16, 1.0, 3.0]
-    df = spark.range(1).select(
-        dot(
-            F.array(*[F.lit(v) for v in vals]),
-            F.array(*[F.lit(1.0)] * len(vals)),
-        ).alias("d"),
-        l2_norm(F.array(F.lit(3.0), F.lit(4.0))).alias("n"),
-    )
-    row = df.collect()[0]
-    expected = 0.0
-    for v in vals:  # the sequential fold, spelled in Python
-        expected += v * 1.0
-    assert row["d"] == expected
-    assert row["n"] == 5.0
-    got = duckdb.sql(
-        f"SELECT list_dot_product({vals!r}, [1.0, 1.0, 1.0, 1.0]) AS d"
-    ).fetchone()[0]
-    assert got == expected
+    a, b = F.col("a"), F.col("b")
+    spark_col, sql, rows = {
+        "dot": (V.dot(a, b), V.dot_sql("a", "b"), _PAIRS),
+        "l2_norm": (V.l2_norm(a), V.l2_norm_sql("a"), _PAIRS + _RAGGED),
+        "cosine": (
+            V.cosine(V.as_double(a), V.as_double(b), V.l2_norm(a), V.l2_norm(b)),
+            V.cosine_sql("a", "b", V.l2_norm_sql("a"), V.l2_norm_sql("b")),
+            _PAIRS,
+        ),
+    }[kernel]
+    rows = [(i, x, y) for i, (x, y) in enumerate(rows)]
+
+    def bits(x):
+        return None if x is None else x.hex()
+
+    df = spark.createDataFrame(rows, "id int, a array<double>, b array<double>")
+    got = {r["id"]: bits(r["k"]) for r in df.select("id", spark_col.alias("k")).collect()}
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (id INTEGER, a DOUBLE[], b DOUBLE[])")
+    con.executemany("INSERT INTO t VALUES (?, ?, ?)", rows)
+    want = {i: bits(k) for i, k in con.execute(f"SELECT id, {sql} FROM t").fetchall()}
+    con.close()
+    assert got == want
+    if kernel == "dot":  # _CANCEL folded left to right
+        assert got[3] == (3.0).hex()

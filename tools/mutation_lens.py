@@ -123,8 +123,8 @@ SPECS = [
          PYT + ["tests/test_boundary_pins.py::"
                 "test_session_gap_boundary_exactly_30min_stays_one_session"]),
     spec("M18", "lsh-sign", "acled_spark/queries/similarity.py",
-         'F.when(_dot(e, _plane_lit(p)) >= 0, "1").otherwise("0") for p in PLANES',
-         'F.when(_dot(e, _plane_lit(p)) > 0, "1").otherwise("0") for p in PLANES',
+         'F.when(dot(e, lit_vector(p)) >= 0, "1").otherwise("0") for p in PLANES',
+         'F.when(dot(e, lit_vector(p)) > 0, "1").otherwise("0") for p in PLANES',
          SIM + ["sim_ann_lsh"], "slipped",
          PYT + ["tests/test_boundary_pins.py::"
                 "test_lsh_zero_projection_signs_positive_both_engines"]),
