@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from acled_spark.session import arrow_frame
 from acled_spark.silver import merge_updates
 from acled_spark.vector import as_double, cosine, dot, l2_norm, sq_dist
 
@@ -166,7 +167,8 @@ def _centroid_frame(spark, model) -> DataFrame:
     census (:func:`acled_spark.queries.dedup.dedup_semantic`), so a
     centroid-representation change can never desynchronize the
     consumers (r7 review)."""
-    return spark.createDataFrame(
+    return arrow_frame(
+        spark,
         [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
         "cell int, centroid array<double>",
     )

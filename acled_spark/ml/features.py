@@ -23,6 +23,9 @@ from pyspark.ml import Pipeline
 from pyspark.ml.feature import OneHotEncoder, StringIndexer, VectorAssembler
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
+
+from acled_spark.session import arrow_frame
 
 SMOOTHING = 10  # ref ml.py:47-70
 N_FOLDS = 5
@@ -250,10 +253,18 @@ def label_encode_transform(
     """
     if not mapping:
         return df.withColumn(f"{col}_label_encoded", F.lit(-1).cast("int"))
-    spark = df.sparkSession
-    map_df = spark.createDataFrame(
-        [(k, v) for k, v in mapping.items()], ["__le_cls", "__le_code"]
-    )  # class dtype inferred — fit() may have collected non-string keys
+    # the class column keeps the fitted column's own dtype (fit()
+    # collects its values, so the keys may be ints, dates, ...)
+    map_df = arrow_frame(
+        df.sparkSession,
+        list(mapping.items()),
+        StructType(
+            [
+                StructField("__le_cls", df.schema[col].dataType),
+                StructField("__le_code", LongType()),
+            ]
+        ),
+    )
     return (
         df.join(
             F.broadcast(map_df), F.col(col) == F.col("__le_cls"), "left"

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from acled_spark.registry import query
+from acled_spark.session import arrow_frame
 from acled_spark.tables import load
 
 
@@ -509,7 +510,7 @@ def j9_band_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     one band, so the join is also a partition of the fact table —
     pinned by n_orders summing to the table count in the plan tests.)
     """
-    bands = spark.createDataFrame(_BANDS, "band string, lo double, hi double")
+    bands = arrow_frame(spark, _BANDS, "band string, lo double, hi double")
     o = load(spark, sf_dir, "orders")
     return (
         o.join(

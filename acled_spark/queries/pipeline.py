@@ -9,6 +9,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from acled_spark.registry import query
+from acled_spark.session import arrow_frame
 from acled_spark.silver import merge_updates
 from acled_spark.tables import load
 
@@ -384,8 +385,8 @@ def chk_validation_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = [
         (r.name, int(r.passed), int(violations(r))) for r in by_name.values()
     ]
-    return spark.createDataFrame(
-        rows, "check_name string, passed long, violations long"
+    return arrow_frame(
+        spark, rows, "check_name string, passed long, violations long"
     ).orderBy("check_name")
 
 

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from acled_spark.registry import query
+from acled_spark.session import arrow_frame
 from acled_spark.tables import load
 from acled_spark.vector import (
     as_double,
@@ -698,7 +699,8 @@ def sim_pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for i, x in enumerate(res["component"])
     ]
-    return spark.createDataFrame(
+    return arrow_frame(
+        spark,
         rows,
         "dim int, loading double, eigenvalue double, "
         "explained_ratio double, residual_ok boolean, residual double",

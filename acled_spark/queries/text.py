@@ -18,6 +18,7 @@ from pyspark.sql.window import Window
 
 from acled_spark.queries.filters_q import SPLIT_TRAIN_MAX, hex_to_int_sql
 from acled_spark.registry import query
+from acled_spark.session import arrow_frame
 from acled_spark.tables import load
 
 # Stopword-ish markers (shared constant for Spark + oracle generation).
@@ -1922,9 +1923,7 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats = dlen.agg(
         F.count("*").alias("n_docs"), F.avg("dl").alias("avgdl")
     )
-    qterms = spark.createDataFrame(
-        list(_BM25_TERMS), "query_id int, term string"
-    )
+    qterms = arrow_frame(spark, _BM25_TERMS, "query_id int, term string")
     vocab = qterms.select(F.col("term").alias("w")).distinct()
     tf = (
         d.select("doc_id", F.explode("toks").alias("w"))

@@ -20,13 +20,24 @@ but every knob is the one you would set on a real cluster:
 - Delayed C2 in the driver JVM (``DRIVER_JIT_FLAGS``): a session of
   many short jobs over small frames spends more CPU in HotSpot's C2
   compiler than C2 code saves, so only really hot methods reach it.
+
+:func:`arrow_frame` is the one builder of frames from driver-side rows.
 """
 
 from __future__ import annotations
 
+import datetime
 import os
+from collections.abc import Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    MapType,
+    StructType,
+    TimestampType,
+)
 
 # Runtime (non-static) confs that parity-critical code depends on.  These are
 # also (re)applied by tables.configure() so queries behave identically when the
@@ -122,3 +133,65 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     return spark
+
+
+def _has_nested_timestamp(t: DataType) -> bool:
+    """True when a ``timestamp`` (session-local) sits inside ``t``."""
+    if isinstance(t, TimestampType):
+        return True
+    if isinstance(t, ArrayType):
+        return _has_nested_timestamp(t.elementType)
+    if isinstance(t, MapType):
+        return _has_nested_timestamp(t.keyType) or _has_nested_timestamp(t.valueType)
+    if isinstance(t, StructType):
+        return any(_has_nested_timestamp(f.dataType) for f in t.fields)
+    return False
+
+
+def arrow_frame(
+    spark: SparkSession, rows: Sequence[tuple], schema: StructType | str
+) -> DataFrame:
+    """Driver-side rows (tuples in ``schema``'s field order) -> a frame.
+
+    THE one way this library turns Python rows into a DataFrame.  The
+    rows travel as one ``pyarrow.Table`` typed by Spark's own
+    ``to_arrow_schema``, so the JVM keeps them as an RDD of Arrow
+    batches.  ``createDataFrame`` over a list plans a ``PythonRDD``
+    instead: every action over such a frame, however small, starts
+    ``pyspark.daemon`` workers to re-pickle its rows (SCALE.md
+    §arrow-frames).
+
+    A naive ``datetime`` in a top-level ``timestamp`` column is read as
+    local time, as ``createDataFrame`` over tuples reads it; a
+    ``timestamp`` nested in an array, map or struct is refused, since
+    Arrow would read it as UTC.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    if any(
+        _has_nested_timestamp(f.dataType)
+        for f in schema.fields
+        if not isinstance(f.dataType, TimestampType)
+    ):
+        raise ValueError(
+            f"arrow_frame: a timestamp nested in {schema.simpleString()} "
+            "has no local-time reading; pass it as a top-level column"
+        )
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows, strict=True)) or [()] * len(schema.fields)
+    arrays = []
+    for field, arrow_field, values in zip(
+        schema.fields, arrow_schema, columns, strict=True
+    ):
+        if isinstance(field.dataType, TimestampType):
+            # Arrow reads a datetime as UTC wall time, whatever its tzinfo
+            values = [
+                None if v is None else v.astimezone(datetime.timezone.utc)
+                for v in values
+            ]
+        arrays.append(pa.array(values, arrow_field.type))
+    table = pa.Table.from_arrays(arrays, schema=arrow_schema)
+    return spark.createDataFrame(table, schema=schema)

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from acled_spark.filters import FilterSpec
 from acled_spark.schema import ACLED_RAW_SCHEMA
+from acled_spark.session import arrow_frame
 
 # A page fetcher: (day, page_number, limit, extra_params) -> list of flat
 # string-valued records.  Production: OAuth HTTP GET; tests: synthetic.
@@ -166,20 +167,15 @@ def _rows_to_df(spark: SparkSession, rows: list[dict]) -> DataFrame:
     """Fetched records -> all-string raw frame (S3; one day is driver-
     sized by the source's own page cap).
 
-    The day travels as Arrow string columns, which the JVM keeps as a
-    fixed RDD of Arrow batches.  A list of tuples would instead land as
-    a ``PythonRDD``, so every action over the frame (checks, bronze
-    write, upsert, count) would re-pickle the whole day through a
-    Python worker."""
-    import pyarrow as pa
-
-    table = pa.table(
-        {
-            name: pa.array([_normalize_value(r, name) for r in rows], pa.string())
-            for name in ACLED_RAW_SCHEMA.fieldNames()
-        }
+    The day travels as Arrow string columns (:func:`arrow_frame`), so
+    no action over the frame (checks, bronze write, upsert, count)
+    re-pickles the day through a Python worker."""
+    names = ACLED_RAW_SCHEMA.fieldNames()
+    return arrow_frame(
+        spark,
+        [tuple([_normalize_value(r, n) for n in names]) for r in rows],
+        ACLED_RAW_SCHEMA,
     )
-    return spark.createDataFrame(table, schema=ACLED_RAW_SCHEMA)
 
 
 #: Region name -> ACLED region codes, mirroring the reference's region
@@ -265,8 +261,8 @@ def fetch_partition_range(
     if not days:
         # natural no-op (a caller wiring missing_partitions() output in
         # when nothing is missing) — repartition(0) would raise
-        return spark.createDataFrame([], schema_ddl)
-    seed = spark.createDataFrame(
-        [(d.isoformat(),) for d in days], "day string"
+        return arrow_frame(spark, [], schema_ddl)
+    seed = arrow_frame(
+        spark, [(d.isoformat(),) for d in days], "day string"
     ).repartition(min(len(days), 64), "day")
     return seed.mapInPandas(run_days, schema=schema_ddl)

@@ -53,7 +53,8 @@ def dot(a: Column, b: Column) -> Column:
 
 
 def dot_sql(a: str, b: str) -> str:
-    """DuckDB twin of :func:`dot` (aborts on unequal widths)."""
+    """DuckDB twin of :func:`dot`.  Where Spark gives NULL it aborts
+    instead: on unequal widths and on a NULL element."""
     return f"list_dot_product({a}, {b})"
 
 
@@ -66,13 +67,13 @@ def l2_norm(col: str | Column) -> Column:
 def l2_norm_sql(col: str) -> str:
     """DuckDB twin of :func:`l2_norm`: a fold, bit-identical to
     ``SQRT(list_dot_product(e, e))`` where both run.  The COALESCE maps
-    only the EMPTY list's NULL sum to Spark's 0.0; a NULL vector is
-    guarded out front and stays NULL, as ``aggregate(NULL, ...)`` does.
-    A NULL ELEMENT differs: the sum skips it where Spark's fold is
-    NULL."""
+    only the EMPTY list's NULL sum to Spark's 0.0.  The guard gives NULL
+    for a NULL vector (``len`` is NULL), as ``aggregate(NULL, ...)``
+    does, and for a NULL element (``list_count`` skips it), where the
+    sum would skip it but Spark's fold is NULL."""
     return (
-        f"CASE WHEN {col} IS NULL THEN NULL "
-        f"ELSE SQRT(COALESCE(list_aggregate("
+        f"CASE WHEN len({col}) = list_count({col}) "
+        f"THEN SQRT(COALESCE(list_aggregate("
         f"list_transform(CAST({col} AS DOUBLE[]), x -> x * x), 'sum'), 0.0)) END"
     )
 

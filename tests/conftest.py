@@ -110,3 +110,22 @@ def formatted_plan(spark, df, disable_broadcast: bool = False) -> str:
         return buf.getvalue()
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
+def python_leaves(df) -> list[str]:
+    """The lineage of each ``LogicalRDD`` leaf of ``df``'s analyzed plan
+    (subqueries included) that holds a ``PythonRDD``: a frame built from
+    Python rows whose every action starts ``pyspark.daemon`` workers.
+    Reads lineage only; ``queryExecution().toRdd()`` would run the
+    plan's AQE stages."""
+    found = []
+    todo = [df._jdf.queryExecution().analyzed()]
+    while todo:
+        node = todo.pop()
+        if node.getClass().getSimpleName() == "LogicalRDD":
+            lineage = node.rdd().toDebugString()
+            if "PythonRDD" in lineage:
+                found.append(lineage)
+        for seq in (node.children(), node.subqueries()):
+            todo.extend(seq.apply(i) for i in range(seq.size()))
+    return found

@@ -365,6 +365,7 @@ def test_day_frames_carry_no_python_stage(spark):
     Python worker, and its rows are exactly the normalized records, in
     fetch order, with NULLs and empty strings kept apart."""
     from acled_spark.source import _normalize_value, ingest_region
+    from tests.conftest import python_leaves
 
     day = date(2025, 1, 2)
     rows = [_mixed_row(i, day) for i in range(70)]
@@ -381,8 +382,7 @@ def test_day_frames_carry_no_python_stage(spark):
         ),
     }
     for name, df in frames.items():
-        lineage = df._jdf.queryExecution().toRdd().toDebugString()
-        assert "PythonRDD" not in lineage, f"{name}:\n{lineage}"
+        assert python_leaves(df) == [], name
         assert df.schema == ACLED_RAW_SCHEMA, name
         assert [tuple(r) for r in df.collect()] == want, name
 

@@ -4,6 +4,8 @@ ref ml.py:106-107,138-139), seeded training determinism, scoring analytics
 
 from __future__ import annotations
 
+import datetime
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -79,6 +81,33 @@ def test_label_encode_sorted_ids_and_unseen(spark):
         for r in label_encode_transform(serving, "c", mapping).collect()
     }
     assert got == {"m": 1, "new": -1}
+
+
+@pytest.mark.parametrize(
+    "ddl, seen, unseen",
+    [
+        ("c string", ["x", "m", "a"], "new"),
+        ("c int", [30, -2, 7], 8),
+        ("c date", [datetime.date(2024, 2, 29), datetime.date(1999, 1, 1)],
+         datetime.date(2024, 3, 1)),
+        ("c timestamp", [datetime.datetime(2024, 3, 10, 1, 30),
+                         datetime.datetime(2024, 3, 10, 3, 30)],
+         datetime.datetime(2024, 3, 10, 2, 30)),
+    ],
+    ids=["string", "int", "date", "timestamp"],
+)
+def test_label_encode_keeps_the_class_dtype(spark, ddl, seen, unseen):
+    """The map frame takes the fitted column's own dtype, so a class
+    matches only itself, whatever its type, and never an unseen value
+    that a cast would make equal."""
+    df = spark.createDataFrame([(v,) for v in seen], ddl)
+    mapping = label_encode_fit(df, "c")
+    assert list(mapping) == sorted(seen)
+    serving = spark.createDataFrame([(v,) for v in [*seen, unseen, None]], ddl)
+    out = label_encode_transform(serving, "c", mapping)
+    assert out.schema["c"].dataType == df.schema["c"].dataType
+    got = {r["c"]: r["c_label_encoded"] for r in out.collect()}
+    assert got == {**mapping, unseen: -1, None: -1}
 
 
 def test_distance_from_center_frozen_medians(spark):

@@ -13,7 +13,11 @@ regression after a Spark upgrade) cannot silently reintroduce:
 - unbounded scan duplication: a query re-reading its parquet inputs
   more than the known per-query bound means a shared pipeline got
   re-evaluated instead of reused (the class of regression the
-  localCheckpoint/exchange-reuse work exists to prevent).
+  localCheckpoint/exchange-reuse work exists to prevent);
+- a ``PythonRDD`` under a leaf: a frame built from Python rows with
+  ``createDataFrame`` over a list, so every action over it starts
+  ``pyspark.daemon`` workers (``session.arrow_frame`` is the one
+  builder; the same pin covers the library faces that build frames).
 
 Queries whose BUILDERS execute driver-side loops (star contraction,
 streaming certification, PCA, ANN fit) are exercised too — their
@@ -23,11 +27,16 @@ jobs are covered by their own plan pins).
 
 from __future__ import annotations
 
+import ast
+import inspect
+import pathlib
 import re
+from datetime import date
 
 import pytest
 
 from acled_spark.registry import all_specs
+from tests.conftest import python_leaves
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -65,9 +74,15 @@ def _final_plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-@pytest.mark.parametrize("name", sorted(all_specs()))
-def test_no_cartesian_and_bounded_scans(spark, name):
-    df = all_specs()[name].builder(spark, SF_DIR)
+@pytest.fixture(scope="module", params=sorted(all_specs()))
+def built(request, spark):
+    """(name, frame) of each registry query, built once for every gate
+    below; pytest runs the gates of one query, then drops its frame."""
+    return request.param, all_specs()[request.param].builder(spark, SF_DIR)
+
+
+def test_no_cartesian_and_bounded_scans(built):
+    name, df = built
     plan = _final_plan(df)
     assert "CartesianProduct" not in plan, (
         f"{name}: non-broadcast cartesian product in the physical plan"
@@ -78,3 +93,58 @@ def test_no_cartesian_and_bounded_scans(spark, name):
         f"{name}: {n_scans} parquet scans (bound {bound}) — a shared "
         "pipeline is being re-evaluated; reuse or checkpoint it"
     )
+
+
+def test_no_python_worker_under_a_leaf(built):
+    name, df = built
+    assert python_leaves(df) == [], name
+
+
+def test_library_faces_carry_no_python_leaf(spark):
+    """The frames the library builds from driver-side rows outside the
+    registry: IVF centroids, the label-encoder map, and the backfill
+    seed and its empty case (the fetched day has its own pin in
+    test_acled_pipeline.py)."""
+    from acled_spark.ann import build_ivf_index, centroid_frame, ivf_search
+    from acled_spark.ml import label_encode_transform
+    from acled_spark.source import fetch_partition_range
+    from acled_spark.tables import load
+    from tests.test_acled_pipeline import make_fetcher
+
+    emb = load(spark, SF_DIR, "embeddings")
+    index = build_ivf_index(emb, nlist=4, persist=False)
+    customer = load(spark, SF_DIR, "customer")
+    fetcher = make_fetcher(rows_per_day=5)
+    frames = {
+        "centroid_frame": centroid_frame(spark, index.model),
+        "ivf_search": ivf_search(index, emb.limit(3), top_k=2, nprobe=1),
+        "label_encode_transform": label_encode_transform(
+            customer, "c_mktsegment", {"BUILDING": 0, "MACHINERY": 1}
+        ),
+        "fetch_partition_range": fetch_partition_range(
+            spark, fetcher, [date(2025, 1, 2)]
+        ),
+        "fetch_partition_range_empty": fetch_partition_range(spark, fetcher, []),
+    }
+    for name, df in frames.items():
+        assert python_leaves(df) == [], name
+    assert frames["centroid_frame"].count() == 4
+
+
+def test_create_data_frame_only_in_arrow_frame():
+    """``createDataFrame`` appears in the package only inside
+    ``session.arrow_frame``: a new call site would plan its rows as a
+    ``PythonRDD`` again."""
+    from acled_spark.session import arrow_frame
+
+    pkg = pathlib.Path(inspect.getfile(arrow_frame)).parent
+    sites = [
+        (path.relative_to(pkg).as_posix(), node.lineno)
+        for path in sorted(pkg.rglob("*.py"))
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Attribute) and node.attr == "createDataFrame"
+    ]
+    body, start = inspect.getsourcelines(arrow_frame)
+    assert len(sites) == 1, sites
+    assert sites[0][0] == "session.py", sites
+    assert start <= sites[0][1] < start + len(body), sites

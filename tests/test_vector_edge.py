@@ -136,8 +136,8 @@ def test_zero_norm_vectors_excluded_not_fatal(spark, edge_dir):
 # (a, b) vector pairs for the kernel twins: zero, negative, huge
 # magnitude, an ill-conditioned sum whose value depends on the fold
 # order (3.0 left to right, 5.0 right to left, 4.0 pairwise), NULL and
-# empty.  Ragged widths only for the single-vector kernel: DuckDB's
-# list_dot_product aborts on unequal widths by design.
+# empty.  Ragged widths and a NULL element only for the single-vector
+# kernel: DuckDB's list_dot_product aborts on both by design.
 _CANCEL = [1.0, 1e16, -1e16, 3.0]
 _PAIRS = [
     ([0.0, 0.0, 0.0, 0.0], [1.0, 2.0, 3.0, 4.0]),
@@ -147,7 +147,12 @@ _PAIRS = [
     (None, [1.0, 2.0, 3.0, 4.0]),
     ([], []),
 ]
-_RAGGED = [([1e8, 0.5, -7.25], None), ([3.0], None), ([0.1] * 9, None)]
+_RAGGED = [
+    ([1e8, 0.5, -7.25], None),
+    ([3.0], None),
+    ([0.1] * 9, None),
+    ([1.0, None, 2.0], None),
+]
 
 
 @pytest.mark.parametrize("kernel", ["dot", "l2_norm", "cosine"])

@@ -8,9 +8,11 @@ checkpoints); that is inherent to their shape.
 
 Session counters are normalised out of the written plans so captures
 from two checkouts diff cleanly: expression ids (``#123`` -> ``#``),
-exchange plan ids (``plan_id=12108`` -> ``plan_id=``) and the
-fresh-name suffix of lambda variables (``lambda x_12`` -> ``lambda x_``),
-which depends on how many lambdas earlier builders made.
+exchange plan ids (``plan_id=12108`` -> ``plan_id=``), RDD ids
+(``MapPartitionsRDD[403]`` -> ``MapPartitionsRDD[]``, under a checkpointed
+or Arrow-built relation) and the fresh-name suffix of lambda variables
+(``lambda x_12`` -> ``lambda x_``), which depends on how many lambdas
+earlier builders made.
 A before/after comparison of the whole registry is then this command,
 run with the same suffix in each checkout, plus ``diff -r`` of the two
 ``plans/r15`` directories.
@@ -28,6 +30,7 @@ sys.path.insert(0, ".")
 def normalise(plan: str) -> str:
     plan = re.sub(r"#\d+", "#", plan)
     plan = re.sub(r"plan_id=\d+", "plan_id=", plan)
+    plan = re.sub(r"RDD\[\d+\]", "RDD[]", plan)
     return re.sub(r"lambda (\w+?)_\d+", r"lambda \1_", plan)
 
 
