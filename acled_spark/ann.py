@@ -300,7 +300,7 @@ def ivf_search(
 # (`_epoch-000000042`), never an in-place replace of it: the previous
 # fold's parquet stays on disk through the write, so a search running
 # against the superseded IvfIndex keeps its files (the old
-# fs_replace_dir delete-then-rename could FileNotFound it mid-fold),
+# delete-then-rename swap could FileNotFound it mid-fold),
 # and the commit point is the parquet job's own _SUCCESS marker — a
 # crash mid-write leaves an uncommitted directory that the next fold
 # simply overwrites, with no by-hand promotion step.  The `_` prefix
@@ -366,7 +366,7 @@ def _commit_durable_fold(
     maintainer (and any search against it) is STILL reading (r8
     review).  Nothing at or above the serving epoch is ever GC'd.
     """
-    from acled_spark.fsutil import fs_delete_dir, fs_list_dirs
+    from acled_spark.fsutil import fs_delete, fs_list_dirs
 
     if retain < 1:
         raise ValueError(f"retain must be >= 1, got {retain}")
@@ -388,7 +388,7 @@ def _commit_durable_fold(
         except ValueError:
             continue
         if n < cutoff:
-            fs_delete_dir(spark, f"{root.rstrip('/')}/{name}")
+            fs_delete(spark, f"{root.rstrip('/')}/{name}")
     return spark.read.parquet(_epoch_dir(root, nxt)), nxt
 
 
@@ -404,21 +404,17 @@ def gc_legacy_flat(spark, durable_path: str) -> int:
     every consumer has moved to an epoch-fold index (one maintainer
     fold + restart is enough).
     """
-    from acled_spark.fsutil import _fs_and_path
+    from acled_spark.fsutil import fs_delete, fs_list
 
     if not _committed_epochs(spark, durable_path):
         raise ValueError(
             f"no committed epoch fold under {durable_path}; refusing to "
             "delete the flat layout that is still the only copy"
         )
-    fs, jroot, _ = _fs_and_path(spark, durable_path)
-    removed = 0
-    for st in fs.listStatus(jroot):
-        if st.isFile():
-            if not fs.delete(st.getPath(), False):
-                raise IOError(f"could not delete {st.getPath()}")
-            removed += 1
-    return removed
+    files = [name for name, is_dir in fs_list(spark, durable_path) if not is_dir]
+    for name in files:
+        fs_delete(spark, f"{durable_path.rstrip('/')}/{name}")
+    return len(files)
 
 
 def load_ivf_index(
@@ -431,9 +427,10 @@ def load_ivf_index(
 
     Resolves the latest COMMITTED epoch fold under ``durable_path``;
     when none exists, falls back to the legacy flat layout — healing a
-    legacy ``._staging`` leftover first (promote-into-missing-root via
-    :func:`~acled_spark.fsutil.fs_try_promote_dir`, the same reader-safe
-    rule dedup_store uses), so a maintainer restarted after a crash in
+    legacy staging leftover first (promote-into-missing-root via
+    :func:`~acled_spark.fsutil.fs_try_promote_dir`, the reader-safe rule
+    of :func:`~acled_spark.fsutil.heal_dir`, minus the commit marker the
+    old swap never wrote), so a maintainer restarted after a crash in
     the OLD delete-then-rename swap window self-heals instead of
     failing on ``spark.read.parquet(durable_path)``.
 
@@ -442,7 +439,7 @@ def load_ivf_index(
     staleness baseline when the caller recorded it.
     """
     from acled_spark.fsutil import (
-        fs_exists, fs_list_data_files, fs_try_promote_dir,
+        fs_exists, fs_list_data_files, fs_try_promote_dir, staging_path,
     )
 
     committed = _committed_epochs(spark, durable_path)
@@ -454,8 +451,7 @@ def load_ivf_index(
             base_cost=base_cost,
             epoch=committed[-1],
         )
-    staging = durable_path.rstrip("/") + "._staging"
-    fs_try_promote_dir(spark, staging, durable_path)
+    fs_try_promote_dir(spark, staging_path(durable_path), durable_path)
     # Legacy flat layout needs actual VISIBLE data files, not bare
     # directory existence: a root holding only an uncommitted _epoch
     # partial (crash mid-FIRST-fold) would otherwise reach

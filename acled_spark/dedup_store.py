@@ -43,6 +43,7 @@ import threading
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from acled_spark.fsutil import commit_dir, fs_exists, heal_dir, staging_path
 from acled_spark.queries.dedup import incremental_classify, minhash_bands_spark
 from acled_spark.queries.text import fingerprint_spark
 
@@ -151,39 +152,47 @@ def _bands_path(root: str) -> str:
     return posixpath.join(root, "bands")
 
 
+def _heal(spark: SparkSession, root: str, writer: bool = False) -> None:
+    """Heal a :func:`retire_ids` that crashed inside its staged swap
+    (:func:`acled_spark.fsutil.heal_dir`).  Reads take the reader form,
+    which only fills a missing root; the write faces, serialized on the
+    per-root lock, take the writer form (``writer=True``), which
+    finishes a committed swap and discards uncommitted debris — an
+    append must land on the post-retire store, or the next retire's
+    heal would swap the stale staged snapshot over it.  The ``table:``
+    backend's overwrite is metastore-txn'd and needs no heal."""
+    if not _is_table(root):
+        heal_dir(spark, root, discard_uncommitted=writer)
+
+
 def store_exists(spark: SparkSession, root: str) -> bool:
     """True when a signature store is present (either backend).
 
-    A path backend counts as present when ``exact/`` exists OR a
-    committed retire staging does (the next read heals it into place);
-    a ``table:`` backend when the exact table is in the catalog.  Used
-    by callers (e.g. :class:`acled_spark.release.CorpusRelease`) to
-    fail fast with a clear bootstrap message instead of an opaque
-    parquet/table read error mid-pipeline.
+    A path backend counts as present when ``exact/`` exists after the
+    reader heal (a retire that crashed inside its swap leaves the store
+    in committed staging only); a ``table:`` backend when the exact
+    table is in the catalog.  Used by callers (e.g.
+    :class:`acled_spark.release.CorpusRelease`) to fail fast with a
+    clear bootstrap message instead of an opaque parquet/table read
+    error mid-pipeline.
     """
     if _is_table(root):
         return spark.catalog.tableExists(_table_names(root)[0])
-    from acled_spark.fsutil import fs_exists
-
-    if fs_exists(spark, _exact_path(root)):
-        return True
-    staging = _retire_staging(root)
-    return fs_exists(
-        spark, posixpath.join(staging, _COMMIT_MARKER)
-    ) and fs_exists(spark, _exact_path(staging))
+    _heal(spark, root)
+    return fs_exists(spark, _exact_path(root))
 
 
 def _read_exact(spark: SparkSession, root: str) -> DataFrame:
     if _is_table(root):
         return spark.table(_table_names(root)[0])
-    recover_store(spark, root)  # heal a crashed retire swap, if any
+    _heal(spark, root)
     return spark.read.parquet(_exact_path(root))
 
 
 def _read_bands(spark: SparkSession, root: str) -> DataFrame:
     if _is_table(root):
         return spark.table(_table_names(root)[1])
-    recover_store(spark, root)
+    _heal(spark, root)
     return spark.read.parquet(_bands_path(root))
 
 
@@ -234,11 +243,11 @@ def init_store(docs: DataFrame, root: str) -> None:
     NULL-text doc but one — they are carried through separately.
 
     As a store WRITE, this first heals any crashed retire staging
-    (writer-authoritative): bootstrapping root while a committed
-    staging dir sits beside it would be clobbered by the next
+    (writer form of :func:`_heal`): bootstrapping root while a
+    committed staging dir sits beside it would be clobbered by the next
     ``retire_ids`` entry heal.
     """
-    recover_store(docs.sparkSession, root, discard_uncommitted=True)
+    _heal(docs.sparkSession, root, writer=True)
     exact, _ = signatures(docs)
     canon_ids = (
         exact.filter(F.col("fingerprint").isNotNull())
@@ -406,117 +415,19 @@ def append_batch(
     growth exactly-once under at-least-once foreachBatch delivery.
 
     As a store WRITE this heals any crashed retire staging FIRST
-    (writer-authoritative, like :func:`retire_ids`): appending to root
-    while a committed staging sits beside it would be silently undone
-    when the next retire entry heal renames the stale staged tables
-    over root — every signature appended since the crash would vanish
-    (round-7 review).  Store writes (appends and retires) are
-    serialized by contract — a concurrent append during a live retire
-    is already a lost update, heal or no heal.
+    (writer form of :func:`_heal`, like :func:`retire_ids`): appending
+    to root while a committed staging sits beside it would be silently
+    undone when the next retire entry heal renames the stale staged
+    store over root — every signature appended since the crash would
+    vanish (round-7 review).
     """
-    recover_store(spark, root, discard_uncommitted=True)
+    _heal(spark, root, writer=True)
     exact_all, bands_all = _checkpointed_signatures(batch)
     if verdicts is None:
         verdicts = _classify(spark, exact_all, bands_all, root)
     return _append_signatures(
         spark, exact_all, bands_all, verdicts, root, survivors_only
     )
-
-
-def _retire_staging(root: str) -> str:
-    return root.rstrip("/") + "._retire_staging"
-
-
-_COMMIT_MARKER = "_COMMIT"
-
-
-def recover_store(
-    spark: SparkSession, root: str, *, discard_uncommitted: bool = False
-) -> bool:
-    """Repair a path-backend store after a crash mid-:func:`retire_ids`.
-
-    The retire swap is staged: the full replacement store is written to
-    a staging dir, a ``_COMMIT`` marker is written, then each table is
-    delete+renamed into place (Hadoop FS has no directory swap).  A
-    crash anywhere in the swap window leaves the staging dir behind;
-    this heals it.  How aggressively depends on who is calling:
-
-    - **Reader path** (``discard_uncommitted=False``, the default —
-      every store read): promote a committed staged table ONLY into a
-      slot whose root dir is MISSING (the crash left the store with a
-      deleted table), via :func:`acled_spark.fsutil.fs_try_promote_dir`.
-      Readers never delete a live root dir and never remove the staging
-      shell: a concurrent :func:`retire_ids` may be mid-swap on those
-      exact dirs, and a reader's delete+rename there loses a table to
-      the interleaving (ADVICE r6).  A committed staging next to a
-      fully intact root therefore serves the intact (pre-retire) store
-      until the writer's own entry call completes the swap — stale but
-      consistent, the normal read-during-swap view.
-    - **Writer path** (``discard_uncommitted=True`` — passed by the
-      store's WRITE faces on entry: :func:`retire_ids`,
-      :func:`append_batch` / :func:`process_batch`, :func:`init_store`;
-      store writes are serialized by contract, so the caller is THE
-      writer): the authoritative heal.  Committed staged tables
-      clobber their root slots (delete + rename), the emptied shell is
-      removed, and marker-less staging — necessarily a prior write's
-      crash debris — is discarded before the rebuild.  Appends must
-      heal first or their rows land on a root the next retire entry
-      heal replaces with the stale staged snapshot (round-7 review).
-
-    Called automatically by :func:`retire_ids` and by the store read
-    path whenever a staging dir exists, so a crashed retire heals on
-    the next store operation.  Returns True iff this call promoted at
-    least one staged table (shell-only cleanup returns False).
-    No-op for ``table:`` backends (their overwrite is metastore-txn'd).
-    """
-    from acled_spark.fsutil import fs_exists, fs_replace_dir, fs_try_promote_dir
-
-    if _is_table(root):
-        return False
-    staging = _retire_staging(root)
-    if not fs_exists(spark, staging):
-        return False
-    from acled_spark.fsutil import _fs_and_path
-
-    fs, jstaging, _ = _fs_and_path(spark, staging)
-    if fs_exists(spark, posixpath.join(staging, _COMMIT_MARKER)):
-        promoted = False
-        for sub in (_bands_path, _exact_path):
-            if discard_uncommitted:
-                if fs_exists(spark, sub(staging)):
-                    fs_replace_dir(spark, sub(staging), sub(root))
-                    promoted = True
-            else:
-                promoted |= fs_try_promote_dir(spark, sub(staging), sub(root))
-        if discard_uncommitted:
-            fs.delete(jstaging, True)
-        return promoted
-    if discard_uncommitted:
-        fs.delete(jstaging, True)
-    return False
-
-
-def _writer_promote(spark: SparkSession, src: str, dest: str) -> None:
-    """The writer's half of the committed-window swap: clobbering
-    delete+rename, tolerant of a concurrent reader's
-    :func:`recover_store` having completed the same promotion.  In the
-    committed window exactly one content is in flight (the staged
-    table), so ``src`` gone with ``dest`` present means a healer
-    already renamed the staged bytes into place — success by proxy.
-    """
-    from acled_spark.fsutil import fs_exists, fs_replace_dir
-
-    if not fs_exists(spark, src):
-        if fs_exists(spark, dest):
-            return  # a concurrent recover_store promoted it for us
-        raise IOError(f"staged table {src} missing and {dest} absent")
-    try:
-        fs_replace_dir(spark, src, dest)
-    except IOError:
-        # a reader's fs_try_promote_dir can steal the rename between
-        # our delete of dest and our rename — same staged content wins
-        if not (fs_exists(spark, dest) and not fs_exists(spark, src)):
-            raise
 
 
 @_single_writer(2)
@@ -553,31 +464,22 @@ def retire_ids(
     RELEASE-level maintenance op, not a per-micro-batch one: it
     rewrites the store minus the retired ids (signatures are ~100
     bytes/doc, so even a 100-TB corpus's store is tens of GB — one
-    bounded rewrite per release).  The path backend stages the rewrite,
-    marks it committed, then swaps directories; a crash in the swap
-    window is healed by :func:`recover_store` (run automatically on
-    the next store op).  The table backend rewrites via a
-    lineage-severed overwrite that restates the bucket spec.
-
-    Consistency windows, stated precisely: on the path backend a crash
-    BETWEEN the two table promotes leaves new-bands/old-exact visible
-    to READERS until the next store WRITE heals it (writer faces heal
-    on entry; readers only fill missing slots) — a changed doc
-    re-processed in that window is healed first by process_batch's
-    entry recover, so the id-reuse guard cannot trip on the stale
-    exact table.  The ``table:`` backend's two ``saveAsTable``
-    overwrites have the same window with metastore-txn'd per-table
-    writes but NO cross-table transaction; at production scale put the
-    store on a transactional table format (Delta/Iceberg) or accept
-    that a crash between the two overwrites needs a retire re-run
-    (replays are idempotent).
+    bounded rewrite per release).  The path backend stages the whole
+    store (both tables) beside root and swaps it in with ONE rename
+    (:func:`acled_spark.fsutil.commit_dir`), so readers see either the
+    old store or the new one; a crash in the swap heals on the next
+    store op.  The table backend rewrites via a lineage-severed
+    overwrite that restates the bucket spec; its two ``saveAsTable``
+    overwrites are metastore-txn'd per table but have NO cross-table
+    transaction, so a crash between them leaves new-bands/old-exact
+    until a retire re-run (replays are idempotent) — at production
+    scale put that store on a transactional table format
+    (Delta/Iceberg).
     """
-    from acled_spark.fsutil import _fs_and_path, fs_write_text
-
     # As the store's single writer, a leftover marker-less staging dir
     # is this function's own prior crash debris — safe to clear here
-    # (and ONLY here; the read path never discards, see recover_store).
-    recover_store(spark, root, discard_uncommitted=True)
+    # (and ONLY in the write faces; the read path never discards).
+    _heal(spark, root, writer=True)
     keys = ids.select("doc_id").distinct().localCheckpoint()
     if keys.count() == 0:
         # no-change release (steady state): skip the full store rewrite
@@ -622,16 +524,9 @@ def retire_ids(
     if _is_table(root):
         _write(kept_exact, kept_bands, root, mode="overwrite")
     else:
-        staging = _retire_staging(root)
+        staging = staging_path(root)
         _write(kept_exact, kept_bands, staging, mode="overwrite")
-        fs_write_text(
-            spark, posixpath.join(staging, _COMMIT_MARKER), "committed"
-        )
-        _writer_promote(spark, _bands_path(staging), _bands_path(root))
-        _writer_promote(spark, _exact_path(staging), _exact_path(root))
-        _fs_and_path(spark, staging)[0].delete(
-            _fs_and_path(spark, staging)[1], True
-        )  # drop the emptied staging shell
+        commit_dir(spark, staging, root)
     return before - kept_exact.count()
 
 
@@ -656,7 +551,7 @@ def process_batch(
     heal runs BEFORE classification so the verdicts are computed
     against the post-retire store, not the stale pre-swap one.
     """
-    recover_store(spark, root, discard_uncommitted=True)
+    _heal(spark, root, writer=True)
     exact_all, bands_all = _checkpointed_signatures(batch)
     # eager=False (r15): _append_signatures' keep_ids count is the
     # frame's first action and it runs BEFORE the store append, so the

@@ -26,6 +26,10 @@ import posixpath
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from acled_spark.fsutil import (
+    commit_dir, fs_exists, fs_read_text, fs_write_text, heal_dir, staging_path,
+)
+
 _EPOCH_MARKER = "_LAST_FOLDED_EPOCH"
 
 DEFAULT_BINS = 10
@@ -192,8 +196,6 @@ def init_reference(
     bin_counts(df, value_col, group_col, n_bins, width).write.mode(
         "overwrite"
     ).parquet(root)
-    from acled_spark.fsutil import fs_write_text
-
     fs_write_text(
         df.sparkSession,
         posixpath.join(root, _BIN_CONFIG_MARKER),
@@ -236,17 +238,12 @@ class DriftMonitor:
         self.update_reference = update_reference
         self.batches_scored = 0
 
-    def _staging(self) -> str:
-        return self.root.rstrip("/") + "._staging"
-
     def _check_reference_config(self, spark) -> None:
         """Fail fast when the persisted reference was built under a
         DIFFERENT (n_bins, width) than this monitor: the grids would
         disagree and bins past the monitor's grid silently drop out of
         the PSI totals (round-7 review).  References persisted before
         the sidecar existed skip the check (nothing to compare)."""
-        from acled_spark.fsutil import fs_exists, fs_read_text
-
         marker = posixpath.join(self.root, _BIN_CONFIG_MARKER)
         if not fs_exists(spark, marker):
             return
@@ -261,23 +258,15 @@ class DriftMonitor:
                 "mismatched grids silently bias PSI"
             )
 
-    def _recover_staging(self, spark) -> None:
-        """Promote a completed staging fold if a crash between the
-        reference delete and the rename left ``root`` missing.  When
-        ``root`` survived, any staging leftover is stale and the next
-        fold's ``mode("overwrite")`` simply replaces it."""
-        from acled_spark.fsutil import fs_exists, fs_replace_dir
-
-        if fs_exists(spark, self._staging()) and not fs_exists(spark, self.root):
-            fs_replace_dir(spark, self._staging(), self.root)
-
     def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
         # recovery runs BEFORE the idle-batch guard: a crash mid-swap
         # (root deleted, staging not yet renamed) followed by a quiet
         # stream would otherwise leave the reference missing for as
-        # long as no data arrives (round-7 review)
-        self._recover_staging(spark)
+        # long as no data arrives (round-7 review).  The reader form
+        # suffices: a stale staging next to an intact root is replaced
+        # by the next fold's mode("overwrite") write
+        heal_dir(spark, self.root)
         if batch_df.isEmpty():
             # idle trigger intervals hand foreachBatch zero-row batches;
             # scoring one would read EVERY reference group as maximally
@@ -301,8 +290,7 @@ class DriftMonitor:
         if self.on_scores is not None:
             self.on_scores(scores)
         if self.update_reference:
-            from acled_spark.fsutil import fs_replace_dir, fs_write_text
-
+            staging = staging_path(self.root)
             merged = (
                 old.unionByName(new)
                 .groupBy("group", "bin")
@@ -319,10 +307,10 @@ class DriftMonitor:
             # and a replayed epoch folding its counts a SECOND time
             # would permanently double-count those bins and bias every
             # future PSI low.
-            merged.write.mode("overwrite").parquet(self._staging())
+            merged.write.mode("overwrite").parquet(staging)
             fs_write_text(
                 spark,
-                posixpath.join(self._staging(), _EPOCH_MARKER),
+                posixpath.join(staging, _EPOCH_MARKER),
                 self._fold_stamp(epoch_id, new),
             )
             # the binning-config sidecar must ride the swap too — the
@@ -331,10 +319,10 @@ class DriftMonitor:
             # reference that has ever folded a batch
             fs_write_text(
                 spark,
-                posixpath.join(self._staging(), _BIN_CONFIG_MARKER),
+                posixpath.join(staging, _BIN_CONFIG_MARKER),
                 f"{self.n_bins}:{self.width!r}",
             )
-            fs_replace_dir(spark, self._staging(), self.root)
+            commit_dir(spark, staging, self.root)
         self.batches_scored += 1
 
     @staticmethod
@@ -356,8 +344,6 @@ class DriftMonitor:
     def _already_folded(self, spark, epoch_id: int, new_counts: DataFrame) -> bool:
         """True when the reference already contains exactly this fold
         (an at-least-once foreachBatch replay after a post-swap crash)."""
-        from acled_spark.fsutil import fs_exists, fs_read_text
-
         marker = posixpath.join(self.root, _EPOCH_MARKER)
         if not fs_exists(spark, marker):
             return False

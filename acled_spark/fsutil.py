@@ -1,16 +1,41 @@
-"""Small Hadoop-filesystem helpers shared by the sidecar writers.
+"""Small Hadoop-filesystem helpers shared by the sidecar writers and the
+live-directory swaps.
 
-Driver-side text IO against ANY Hadoop-supported scheme (file://, hdfs,
+Driver-side IO against ANY Hadoop-supported scheme (file://, hdfs,
 s3a, ...) for tiny artifacts that live NEXT TO datasets but are not
 datasets themselves — model metadata sidecars (ml/persist.py), export
 manifests (export.py).  py4j passes arrays by value, so a
 read-into-buffer loop can't work from Python; commons-io (on Spark's
 classpath) drains streams JVM-side in one call.
+
+Staged swap — the one protocol for replacing a live directory (the
+dedup store's retire, the drift reference fold, silver's whole-table
+delete).  Hadoop FS has no directory swap, so the replacement is
+written in full to :func:`staging_path` ``(dest)`` first, then
+:func:`commit_dir` writes the ``_COMMIT`` marker LAST (after every
+sidecar) and swaps: delete ``dest``, rename the staging dir into place.
+A crash leaves one of three states, and :func:`heal_dir` repairs each
+(the commit-record-then-replay design of Structured Streaming's
+exactly-once sinks):
+
+- staging without a marker: the write never committed.  Readers ignore
+  it; a single writer discards it.
+- committed staging next to an intact ``dest``: readers keep serving the
+  old ``dest`` (a writer may be about to delete it); a single writer
+  finishes the swap.
+- committed staging and ``dest`` missing (the crash fell between the
+  delete and the rename): anyone promotes the staging dir with a rename
+  that never deletes, so readers and the writer may race it safely.
 """
 
 from __future__ import annotations
 
+import posixpath
+
 from pyspark.sql import SparkSession
+
+_STAGING_SUFFIX = "._staging"
+_COMMIT = "_COMMIT"
 
 
 def _fs_and_path(spark: SparkSession, path: str):
@@ -42,35 +67,14 @@ def fs_exists(spark: SparkSession, path: str) -> bool:
     return fs.exists(jpath)
 
 
-def fs_replace_dir(spark: SparkSession, src: str, dest: str) -> None:
-    """Replace ``dest`` with the fully-written ``src`` (delete + rename).
-
-    Not atomic — Hadoop FS has no directory swap — but ``src`` is
-    complete before ``dest`` is touched, so a crash inside the window
-    loses nothing: ``dest`` is gone but ``src`` still holds the full
-    payload and a restart can promote it (see
-    :meth:`acled_spark.drift.DriftMonitor._recover_staging`).  A plain
-    ``mode("overwrite")`` write has the opposite failure shape: the old
-    data is deleted before the new data exists.
-    """
-    fs, jdest, jvm = _fs_and_path(spark, dest)
-    jsrc = jvm.org.apache.hadoop.fs.Path(src)
-    if fs.exists(jdest) and not fs.delete(jdest, True):
-        raise IOError(f"could not delete {dest}")
-    if not fs.rename(jsrc, jdest):
-        raise IOError(f"could not rename {src} -> {dest}")
-
-
 def fs_try_promote_dir(spark: SparkSession, src: str, dest: str) -> bool:
     """Rename ``src`` into ``dest`` ONLY when ``dest`` is absent.
 
-    The reader-safe half of :func:`fs_replace_dir`: it never deletes an
-    existing ``dest``, so a concurrent writer mid-swap cannot lose a
-    live table to a healing reader (ADVICE r6, dedup_store committed
-    window).  Peer-tolerant: ``src`` vanishing or ``dest`` appearing
-    between the checks and the rename means another process completed
-    the same promotion — that is success-by-proxy, not an error.
-    Returns True iff THIS call performed the rename.
+    Never deletes, so a concurrent writer mid-swap cannot lose a live
+    table to a healing reader.  Peer-tolerant: ``src`` vanishing or
+    ``dest`` appearing between the checks and the rename means another
+    process completed the same promotion — that is success-by-proxy,
+    not an error.  Returns True iff THIS call performed the rename.
     """
     fs, jdest, jvm = _fs_and_path(spark, dest)
     jsrc = jvm.org.apache.hadoop.fs.Path(src)
@@ -83,28 +87,85 @@ def fs_try_promote_dir(spark: SparkSession, src: str, dest: str) -> bool:
     raise IOError(f"could not rename {src} -> {dest}")
 
 
-def fs_list_dirs(spark: SparkSession, path: str) -> list[str]:
-    """Names of the immediate SUBDIRECTORIES of ``path`` (sorted) —
+def staging_path(dest: str) -> str:
+    """Where a staged replacement of ``dest`` is written (a sibling, so
+    the swap is a same-directory rename)."""
+    return dest.rstrip("/") + _STAGING_SUFFIX
+
+
+def _swap(spark: SparkSession, staging: str, dest: str) -> None:
+    """Delete ``dest``, rename the committed ``staging`` into place.
+
+    ``dest`` is checked before ``staging``: a reader promotes only into a
+    missing ``dest``, so a staging dir still present behind an existing
+    ``dest`` proves ``dest`` is the old copy and safe to delete.  A reader
+    that promotes after the delete has done the rename for us.
+    """
+    if fs_exists(spark, dest) and fs_exists(spark, staging):
+        fs_delete(spark, dest)
+    fs_try_promote_dir(spark, staging, dest)
+    if not fs_exists(spark, dest):
+        raise IOError(f"staged {staging} missing and {dest} absent")
+
+
+def commit_dir(spark: SparkSession, staging: str, dest: str) -> None:
+    """Commit the fully written ``staging`` dir and swap it in for
+    ``dest``: the ``_COMMIT`` marker is written last, after the data and
+    every sidecar, so a crash at any later point heals forward."""
+    fs_write_text(spark, posixpath.join(staging, _COMMIT), "committed")
+    _swap(spark, staging, dest)
+
+
+def heal_dir(
+    spark: SparkSession, dest: str, *, discard_uncommitted: bool = False
+) -> bool:
+    """Repair ``dest`` after a crash inside :func:`commit_dir`.
+
+    The reader form (default) promotes a committed staging dir only into
+    a MISSING ``dest`` and never deletes anything, so it is safe next to
+    a live writer.  The writer form (``discard_uncommitted=True``) is for
+    a caller that holds the only write access to ``dest``: a committed
+    staging dir replaces ``dest``, an uncommitted one is crash debris and
+    is deleted.  Returns True iff this call swapped a staging dir in.
+    """
+    staging = staging_path(dest)
+    if not fs_exists(spark, staging):
+        return False
+    committed = fs_exists(spark, posixpath.join(staging, _COMMIT))
+    if not discard_uncommitted:
+        return committed and fs_try_promote_dir(spark, staging, dest)
+    if not committed:
+        fs_delete(spark, staging)
+        return False
+    _swap(spark, staging, dest)
+    return True
+
+
+def fs_list(spark: SparkSession, path: str) -> list[tuple[str, bool]]:
+    """``(name, is_dir)`` of the immediate children of ``path``, sorted —
     including ``_``/``.``-prefixed ones, which Spark's readers hide but
-    our own maintenance code (epoch-fold GC in ann.py) must see.
-    Missing ``path`` is an empty listing, not an error."""
+    our own maintenance code (epoch-fold GC in ann.py, debris checks)
+    must see.  Missing ``path`` is an empty listing, not an error."""
     fs, jpath, _ = _fs_and_path(spark, path)
     if not fs.exists(jpath):
         return []
     return sorted(
-        st.getPath().getName()
-        for st in fs.listStatus(jpath)
-        if st.isDirectory()
+        (st.getPath().getName(), st.isDirectory()) for st in fs.listStatus(jpath)
     )
 
 
-def fs_delete_dir(spark: SparkSession, path: str) -> None:
-    """Recursively delete ``path`` if it exists (idempotent)."""
+def fs_list_dirs(spark: SparkSession, path: str) -> list[str]:
+    """Names of the immediate SUBDIRECTORIES of ``path`` (sorted,
+    hidden ones included)."""
+    return [name for name, is_dir in fs_list(spark, path) if is_dir]
+
+
+def fs_delete(spark: SparkSession, path: str) -> None:
+    """Recursively delete the file or directory ``path`` if it exists
+    (idempotent)."""
     fs, jpath, _ = _fs_and_path(spark, path)
     if fs.exists(jpath) and not fs.delete(jpath, True):
         raise IOError(f"could not delete {path}")
-
-
 def fs_qualified_path(spark: SparkSession, path: str) -> str:
     """The filesystem-resolved absolute (decoded) path of ``path`` —
     the prefix against which file URIs relativize."""

@@ -14,7 +14,6 @@ partitions are never read or written, so compaction can run rolling
 
 from __future__ import annotations
 
-import os
 from collections.abc import Sequence
 
 from pyspark.sql import SparkSession
@@ -26,17 +25,15 @@ HIVE_NULL_PART = "__HIVE_DEFAULT_PARTITION__"
 
 
 def partition_file_counts(
-    path: str, partition_col: str, spark: SparkSession | None = None
+    path: str, partition_col: str, spark: SparkSession
 ) -> dict[str, int]:
     """Data files per hive partition directory (driver-side listing —
     on object stores swap in the catalog/manifest listing).
 
-    With ``spark`` the listing goes through the Hadoop FileSystem API,
-    so scheme-qualified paths (``file://``, ``s3a://``, ``hdfs://``)
-    work — ``os.listdir`` returns nothing for those, and a compaction
-    given a URI target silently no-op'd forever (round-7 review; the
-    compactors always pass their session).  Without ``spark`` the
-    plain-local-path fallback remains for direct callers.
+    The listing goes through the Hadoop FileSystem API, so
+    scheme-qualified paths (``file://``, ``s3a://``, ``hdfs://``) work —
+    ``os.listdir`` returns nothing for those, and a compaction given a
+    URI target silently no-op'd forever (round-7 review).
 
     Keys are the partition VALUES: Hive percent-escapes special
     characters (':' '%' '=' ...) in dirnames, so entries are unescaped
@@ -47,41 +44,22 @@ def partition_file_counts(
     """
     from urllib.parse import unquote
 
-    out: dict[str, int] = {}
-    prefix = f"{partition_col}="
-    if spark is not None:
-        from acled_spark.fsutil import _fs_and_path, fs_exists
+    from acled_spark.fsutil import fs_list, fs_list_dirs
 
-        if not fs_exists(spark, path):
-            return out
-        fs, jpath, jvm = _fs_and_path(spark, path)
-        for st in fs.listStatus(jpath):
-            if not st.isDirectory():
-                continue
-            entry = st.getPath().getName()
-            if not entry.startswith(prefix):
-                continue
-            raw = entry[len(prefix):]
-            key = raw if raw == HIVE_NULL_PART else unquote(raw)
-            out[key] = sum(
-                1
-                for f in fs.listStatus(st.getPath())
-                if (name := f.getPath().getName()).endswith(".parquet")
-                and not name.startswith(("_", "."))
-            )
-        return out
-    if not os.path.isdir(path):
-        return out
-    for entry in sorted(os.listdir(path)):
-        if entry.startswith(prefix):
-            full = os.path.join(path, entry)
-            raw = entry[len(prefix):]
-            key = raw if raw == HIVE_NULL_PART else unquote(raw)
-            out[key] = sum(
-                1
-                for f in os.listdir(full)
-                if f.endswith(".parquet") and not f.startswith(("_", "."))
-            )
+    prefix = f"{partition_col}="
+    out: dict[str, int] = {}
+    for entry in fs_list_dirs(spark, path):
+        if not entry.startswith(prefix):
+            continue
+        raw = entry[len(prefix):]
+        key = raw if raw == HIVE_NULL_PART else unquote(raw)
+        out[key] = sum(
+            1
+            for name, is_dir in fs_list(spark, f"{path.rstrip('/')}/{entry}")
+            if not is_dir
+            and name.endswith(".parquet")
+            and not name.startswith(("_", "."))
+        )
     return out
 
 

@@ -11,10 +11,10 @@ them durable next to ``PipelineModel.save``:
     <path>/            MLlib PipelineModel directory (stages/, metadata/)
     <path>/package.json  the sidecar
 
-The sidecar is written through the Hadoop FileSystem API — same
-rationale as silver's ``_table_exists`` (silver.py:218): ``open()``
-would silently work on local paths and break on ``s3a://``/``hdfs://``
-model stores.  The JSON is tiny driver-side state; the model itself is
+The sidecar is written through the Hadoop FileSystem API
+(:mod:`acled_spark.fsutil`, like every filesystem touch in the
+package): ``open()`` would silently work on local paths and break on
+``s3a://``/``hdfs://`` model stores.  The JSON is tiny driver-side state; the model itself is
 saved/loaded by MLlib's own distributed writer.
 """
 

@@ -10,7 +10,6 @@ the materialization record; no sensor cursor to corrupt).
 
 from __future__ import annotations
 
-import os
 import re
 from collections.abc import Sequence
 from datetime import date, timedelta
@@ -27,33 +26,19 @@ from acled_spark.source import DEFAULT_PAGE_LIMIT, PageFetcher, ingest_day
 _PART_RE = re.compile(rf"^{re.escape(PARTITION_COL)}=(\d{{4}}-\d{{2}}-\d{{2}})$")
 
 
-def materialized_partitions(
-    bronze_path: str, spark: SparkSession | None = None
-) -> set[date]:
+def materialized_partitions(bronze_path: str, spark: SparkSession) -> set[date]:
     """Partition discovery from the store layout (ref sensors.py:196-224 —
     the S3 listing parse becomes a partition-dir listing).
 
-    With ``spark`` the listing goes through the Hadoop FS API, so
-    remote stores (s3a://, hdfs://, abfs://) work — ``os.listdir``
-    returns nothing for those URIs, which would make every candidate
-    look missing and re-ingest the full walk-back on every tick.
-    ``run_backfill``/``sensor_tick`` always route their session in; the
-    sparkless form stays for local-path convenience only.
+    The listing goes through the Hadoop FS API, so remote stores
+    (s3a://, hdfs://, abfs://) work — ``os.listdir`` returns nothing for
+    those URIs, which would make every candidate look missing and
+    re-ingest the full walk-back on every tick.
     """
-    names: list[str] = []
-    if spark is not None:
-        from acled_spark.fsutil import _fs_and_path
+    from acled_spark.fsutil import fs_list_dirs
 
-        fs, jpath, _ = _fs_and_path(spark, bronze_path)
-        if not fs.exists(jpath):
-            return set()
-        names = [st.getPath().getName() for st in fs.listStatus(jpath)]
-    else:
-        if not os.path.isdir(bronze_path):
-            return set()
-        names = os.listdir(bronze_path)
     out = set()
-    for entry in names:
+    for entry in fs_list_dirs(spark, bronze_path):
         m = _PART_RE.match(entry)
         if m:
             out.add(date.fromisoformat(m.group(1)))
@@ -74,9 +59,7 @@ def probe_available_days(
 
 
 def missing_partitions(
-    bronze_path: str,
-    candidates: Sequence[date],
-    spark: SparkSession | None = None,
+    bronze_path: str, candidates: Sequence[date], spark: SparkSession
 ) -> list[date]:
     """Diff candidates against materialized partitions (ref sensors.py:85-131)."""
     done = materialized_partitions(bronze_path, spark)

@@ -26,6 +26,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from acled_spark.fsutil import (
+    commit_dir, fs_delete, fs_exists, fs_list, fs_list_dirs, heal_dir,
+    staging_path,
+)
+
 _SRC_COL = "__src_priority"
 _RN_COL = "__merge_rn"
 
@@ -230,7 +235,14 @@ def upsert_partitioned(
     partition's pre-batch rows are irreplaceable should snapshot
     touched partitions first or move the table to a transactional
     format.
+
+    A whole-table :func:`delete_keys` that crashed inside its swap
+    leaves the table only in its committed staging dir; the entry heal
+    promotes it, where the bootstrap branch below would otherwise
+    rebuild the table from this batch alone and drop every other
+    partition.
     """
+    heal_dir(spark, target_path)
     keys = [key] if isinstance(key, str) else list(key)
     if table_format not in ("auto", "delta", "parquet"):
         raise ValueError(f"unknown table_format: {table_format!r}")
@@ -336,6 +348,7 @@ def delete_keys(
     (works on any FileSystem implementation, not just local disk).
     Returns the number of rows deleted.
     """
+    heal_dir(spark, target_path)  # a crashed whole-table swap, if any
     keys = [key] if isinstance(key, str) else list(key)
     if _has_delta_log(spark, target_path):
         # reading a Delta table as raw parquet resurrects removed row
@@ -396,33 +409,48 @@ def delete_keys(
                 spark._jvm.org.apache.spark.sql.catalyst.catalog
                 .ExternalCatalogUtils
             )
-            from acled_spark.fsutil import fs_delete_dir
             from acled_spark.maintenance import HIVE_NULL_PART
 
             for p in emptied:
                 dirname = (
                     HIVE_NULL_PART if p is None else esc.escapePathName(str(p))
                 )
-                # fs_delete_dir raises on a False (non-raising) delete
+                # fs_delete raises on a False (non-raising) delete
                 # (r8 lens review): silently ignoring it returned a
                 # deleted-count while tombstoned rows stayed readable on
                 # disk — on the right-to-be-forgotten path
-                fs_delete_dir(
-                    spark, f"{target_path}/{partition_col}={dirname}"
-                )
+                fs_delete(spark, f"{target_path}/{partition_col}={dirname}")
     else:
         # whole-table rewrite: stage first, then swap — a direct
         # mode("overwrite") deletes the old table BEFORE the new data
         # exists, so a crash mid-write destroys the table with `kept`
         # living only in localCheckpoint blocks that die with the app
-        # (r7 review; fs_replace_dir's window instead leaves the staged
-        # copy recoverable)
-        from acled_spark.fsutil import fs_replace_dir
-
-        staging = target_path.rstrip("/") + "._delete_staging"
-        kept.write.mode("overwrite").parquet(staging)
-        fs_replace_dir(spark, staging, target_path)
+        # (r7 review).  A crash inside the swap is healed by the next
+        # upsert_partitioned or delete_keys.  The rewrite keeps the
+        # table's partition layout: a flat rewrite of a partitioned
+        # table hides it from the reader once the next upsert adds a
+        # partition directory beside the flat files.
+        staging = staging_path(target_path)
+        (
+            kept.write.mode("overwrite")
+            .partitionBy(*_partition_cols(spark, target_path))
+            .parquet(staging)
+        )
+        commit_dir(spark, staging, target_path)
     return deleted
+
+
+def _partition_cols(spark: SparkSession, path: str) -> list[str]:
+    """Hive partition columns of the table at ``path``, outermost first,
+    read off its first chain of ``col=value`` directories."""
+    cols = []
+    while dirs := [
+        d for d in fs_list_dirs(spark, path)
+        if "=" in d and not d.startswith(("_", "."))
+    ]:
+        cols.append(dirs[0].split("=", 1)[0])
+        path = f"{path.rstrip('/')}/{dirs[0]}"
+    return cols
 
 
 def _has_delta_log(spark: SparkSession, path: str) -> bool:
@@ -430,8 +458,6 @@ def _has_delta_log(spark: SparkSession, path: str) -> bool:
     that keeps the parquet-path writers (:func:`upsert_partitioned`'s
     fallback branch, :func:`delete_keys`) from corrupting a Delta table
     by rewriting its data files behind the log's back."""
-    from acled_spark.fsutil import fs_exists
-
     return fs_exists(spark, path.rstrip("/") + "/_delta_log")
 
 
@@ -443,18 +469,9 @@ def _table_exists(spark: SparkSession, path: str) -> bool:
     ``os.path`` would return False for ``s3a://``/``hdfs://`` URIs and
     the bootstrap branch would then overwrite instead of merging.
     """
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(conf)
-    if not fs.exists(jpath):
-        return False
     # '.'-prefixed entries are crash debris, not data ('.spark-staging-*'
     # from a died dynamic overwrite, '.crc' sidecars): counting them made
     # a retry take the MERGE branch against a dataless directory and
     # fail on schema inference forever instead of re-bootstrapping (r8
     # lens review; same filter fsutil.fs_list_data_files applies).
-    return any(
-        not status.getPath().getName().startswith(("_", "."))
-        for status in fs.listStatus(jpath)
-    )
+    return any(not name.startswith(("_", ".")) for name, _ in fs_list(spark, path))

@@ -5,6 +5,7 @@ order-insensitive value comparison of Spark result vs DuckDB oracle).
 
 from __future__ import annotations
 
+import contextlib
 import datetime
 import math
 import os
@@ -129,3 +130,27 @@ def python_leaves(df) -> list[str]:
         for seq in (node.children(), node.subqueries()):
             todo.extend(seq.apply(i) for i in range(seq.size()))
     return found
+
+
+#: The fsutil function each crash point of ``commit_dir`` dies in.
+_COMMIT_STEPS = {
+    "marker": "fs_write_text",  # staging written, no commit marker
+    "delete": "fs_delete",  # committed, dest intact
+    "rename": "fs_try_promote_dir",  # committed, dest deleted
+}
+
+
+@contextlib.contextmanager
+def commit_crash(step: str):
+    """Kill every ``fsutil.commit_dir`` inside the block at ``step`` (a
+    key of ``_COMMIT_STEPS``), leaving on disk exactly the state a
+    process crash there leaves.  The block must reach the crash."""
+    from acled_spark import fsutil
+
+    def crash(*args, **kwargs):
+        raise OSError(f"simulated crash at the {step} step")
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(fsutil, _COMMIT_STEPS[step], crash)
+        with pytest.raises(OSError, match="simulated crash"):
+            yield

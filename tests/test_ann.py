@@ -636,9 +636,10 @@ def test_load_ivf_index_heals_legacy_staging(spark, index, tmp_path):
     `root._staging` complete and root missing — load_ivf_index must
     promote it (reader-safe: only into a MISSING root) and serve it."""
     from acled_spark.ann import load_ivf_index
+    from acled_spark.fsutil import staging_path
 
     root = str(tmp_path / "legacy_root")
-    index.assigned.limit(7).write.parquet(root + "._staging")
+    index.assigned.limit(7).write.parquet(staging_path(root))
     idx = load_ivf_index(spark, root, index.model)
     assert idx.assigned.count() == 7
 

@@ -2,7 +2,7 @@
 against epoch N run on a REAL reader thread while the maintainer folds
 to N+1 and the GC pass collects expired folds.  The epoch-versioned
 layout's whole purpose is that an in-flight search never loses its
-files (the old fs_replace_dir delete-then-rename could FileNotFound a
+files (the old delete-then-rename swap could FileNotFound a
 reader of the superseded index mid-scan) — this file pins that under
 actual thread-level concurrency, plus the GC clamp: nothing at or
 above the SERVING epoch is ever collected, even when crash-orphan

@@ -400,19 +400,17 @@ def test_append_heals_committed_staging_before_writing(spark, store, tmp_path):
     retire_ids entry heal silently destroys them."""
     import os
 
-    from acled_spark.dedup_store import (
-        _COMMIT_MARKER,
-        _retire_staging,
-        process_batch,
-        recover_store,
-    )
+    from acled_spark.dedup_store import process_batch, retire_ids
+    from acled_spark.fsutil import heal_dir, staging_path
+    from tests.conftest import commit_crash
 
     root, corpus = store
-    # simulate a retire that staged + committed but crashed pre-swap:
-    # the staged store drops docs >= 30
-    staging = _retire_staging(root)
-    init_store(corpus.filter(F.col("doc_id") < 30), staging)
-    open(os.path.join(staging, _COMMIT_MARKER), "w").write("committed")
+    # a retire that staged + committed but crashed pre-swap: the staged
+    # store drops docs >= 30
+    staging = staging_path(root)
+    with commit_crash("delete"):
+        retire_ids(spark, corpus.filter(F.col("doc_id") >= 30), root)
+    assert os.path.exists(staging) and os.path.exists(root)
 
     batch = _mk_batch(spark, [(5001, "entirely fresh append text payload",
                                "en", "web", 33)])
@@ -421,7 +419,7 @@ def test_append_heals_committed_staging_before_writing(spark, store, tmp_path):
     assert not os.path.exists(staging)  # writer healed on entry
     # a later writer-entry heal (what the next retire_ids runs first)
     # must NOT undo the append
-    recover_store(spark, root, discard_uncommitted=True)
+    heal_dir(spark, root, discard_uncommitted=True)
     # the doc's own replay self-matches -> not a dup (see
     # test_replay_of_own_id_is_not_exact_dup)
     v = check_batch(spark, batch, root).collect()[0]
@@ -504,12 +502,13 @@ def test_retire_empty_id_set_is_a_cheap_noop(spark, store, tmp_path):
     import os
 
     from acled_spark.dedup_store import retire_ids
+    from acled_spark.fsutil import staging_path
 
     root, corpus = store
     empty = spark.createDataFrame([], "doc_id long")
     before = check_batch(spark, corpus.limit(5), root).count()
     assert retire_ids(spark, empty, root) == 0
-    assert not os.path.exists(root + "._retire_staging")  # no swap walked
+    assert not os.path.exists(staging_path(root))  # no swap walked
     assert check_batch(spark, corpus.limit(5), root).count() == before
 
 

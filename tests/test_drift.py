@@ -120,14 +120,21 @@ def test_staging_recovery_after_crash(spark, tmp_path):
     be recoverable: the next batch promotes the completed staging fold."""
     import os
 
+    from acled_spark.fsutil import staging_path
+    from tests.conftest import commit_crash
+
     ref, batch = _halves(spark)
     root = str(tmp_path / "ref")
     init_reference(ref, root)
     mon = DriftMonitor(root, update_reference=True)
-    mon(batch, epoch_id=0)
-    total = spark.read.parquet(root).agg(F.sum("n")).collect()[0][0]
-    # simulate the crash window: reference deleted, staging complete
-    os.rename(root, root + "._staging")
+    # the crash window: reference deleted, committed staging complete
+    with commit_crash("rename"):
+        mon(batch, epoch_id=0)
+    assert not os.path.exists(root)
+    total = (
+        spark.read.parquet(staging_path(root)).agg(F.sum("n")).collect()[0][0]
+    )
+    assert total == ref.count() + batch.count()
     fired = []
     mon2 = DriftMonitor(root, on_scores=fired.append, update_reference=True)
     mon2(batch, epoch_id=1)
@@ -282,12 +289,16 @@ def test_crash_recovery_heals_even_when_stream_is_idle(spark, tmp_path):
     reference missing until data happens to arrive."""
     import os
 
-    ref, _ = _halves(spark)
+    from tests.conftest import commit_crash
+
+    ref, batch = _halves(spark)
     root = str(tmp_path / "ref")
     init_reference(ref, root)
-    os.rename(root, root + "._staging")  # crash window: root gone
     mon = DriftMonitor(root, update_reference=True)
-    mon(ref.filter(F.lit(False)), epoch_id=0)  # idle batch
+    with commit_crash("rename"):  # crash window: root gone
+        mon(batch, epoch_id=0)
+    assert not os.path.exists(root)
+    mon(ref.filter(F.lit(False)), epoch_id=1)  # idle batch
     assert mon.batches_scored == 0  # still skipped scoring
     assert os.path.exists(root)  # but the reference was healed
 

@@ -35,7 +35,7 @@ def _fragmented_store(spark, tmp_path) -> str:
 
 def test_compaction_reduces_files_preserves_data(spark, tmp_path):
     path = _fragmented_store(spark, tmp_path)
-    before_counts = partition_file_counts(path, "day")
+    before_counts = partition_file_counts(path, "day", spark)
     assert all(n >= 4 for n in before_counts.values()), before_counts
     before_data = sorted(
         tuple(r) for r in spark.read.parquet(path).collect()
@@ -43,7 +43,7 @@ def test_compaction_reduces_files_preserves_data(spark, tmp_path):
 
     rewritten = compact_partitions(spark, path, "day")
     assert set(rewritten) == set(before_counts)
-    after_counts = partition_file_counts(path, "day")
+    after_counts = partition_file_counts(path, "day", spark)
     assert all(n == 1 for n in after_counts.values()), after_counts
     after_data = sorted(tuple(r) for r in spark.read.parquet(path).collect())
     assert after_data == before_data
@@ -54,9 +54,9 @@ def test_compaction_reduces_files_preserves_data(spark, tmp_path):
 
 def test_selective_compaction_leaves_other_partitions(spark, tmp_path):
     path = _fragmented_store(spark, tmp_path)
-    before = partition_file_counts(path, "day")
+    before = partition_file_counts(path, "day", spark)
     compact_partitions(spark, path, "day", partitions=["2024-01-05"])
-    after = partition_file_counts(path, "day")
+    after = partition_file_counts(path, "day", spark)
     assert after["2024-01-05"] == 1
     assert after["2024-01-06"] == before["2024-01-06"]  # untouched
     assert after["2024-01-07"] == before["2024-01-07"]
@@ -82,10 +82,10 @@ def test_compaction_with_sort_cols_clusters_rows(spark, tmp_path):
     ).filter(F.col("day").isin(["2024-01-05", "2024-01-06"]))
     # fragment: 4 files per partition
     ev.repartition(4).write.partitionBy("day").parquet(path)
-    assert all(n > 1 for n in partition_file_counts(path, "day").values())
+    assert all(n > 1 for n in partition_file_counts(path, "day", spark).values())
 
     compact_partitions(spark, path, "day", sort_cols=["user_id"])
-    assert all(n == 1 for n in partition_file_counts(path, "day").values())
+    assert all(n == 1 for n in partition_file_counts(path, "day", spark).values())
     out = spark.read.parquet(path)
     assert out.count() == ev.count()
     # within each file, user_id must be nondecreasing
@@ -216,7 +216,7 @@ def test_zorder_compaction_is_idempotent(spark, tmp_path):
         spark, path, "day", zorder_cols=["user_id", "value"],
         files_per_partition=1,
     )
-    counts = partition_file_counts(path, "day")
+    counts = partition_file_counts(path, "day", spark)
     assert all(n <= 1 for n in counts.values()), counts
     assert compact_partitions_zorder(
         spark, path, "day", zorder_cols=["user_id", "value"],

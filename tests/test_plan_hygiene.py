@@ -148,3 +148,50 @@ def test_create_data_frame_only_in_arrow_frame():
     assert len(sites) == 1, sites
     assert sites[0][0] == "session.py", sites
     assert start <= sites[0][1] < start + len(body), sites
+
+
+def test_filesystem_internals_only_in_fsutil():
+    """The Hadoop filesystem handle (``_fs_and_path``,
+    ``hadoopConfiguration``), the staging suffix and the commit marker
+    are named only in ``fsutil.py``: every live-directory replace goes
+    through its one staged swap (``commit_dir``/``heal_dir``), and every
+    other module reaches the filesystem through its public helpers.
+    Identifiers and string literals count; docstrings do not."""
+    from acled_spark import fsutil
+
+    tokens = (
+        "_fs_and_path", "hadoopConfiguration", fsutil._STAGING_SUFFIX,
+        fsutil._COMMIT,
+    )
+    pkg = pathlib.Path(inspect.getfile(fsutil)).parent
+    hits = {}
+    for path in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        docstrings = {
+            id(node.body[0].value)
+            for node in ast.walk(tree)
+            if isinstance(
+                node,
+                (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef),
+            )
+            and node.body
+            and isinstance(node.body[0], ast.Expr)
+            and isinstance(node.body[0].value, ast.Constant)
+        }
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Name):
+                text = node.id
+            elif isinstance(node, ast.Attribute):
+                text = node.attr
+            elif isinstance(node, ast.alias):
+                text = node.name
+            elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+                text = "" if id(node) in docstrings else node.value
+            else:
+                continue
+            for token in tokens:
+                if token in text:
+                    hits.setdefault(token, set()).add(
+                        path.relative_to(pkg).as_posix()
+                    )
+    assert hits == {token: {"fsutil.py"} for token in tokens}, hits

@@ -157,6 +157,7 @@ def test_retire_ids_store_roundtrip(spark, tmp_path):
     """retire_ids drops exactly the named ids from BOTH tables and the
     staged swap leaves a readable store (no leftover staging dir)."""
     from acled_spark.dedup_store import _read_bands, _read_exact
+    from acled_spark.fsutil import staging_path
 
     docs = load(spark, SF_DIR, "documents").select(*DOC_COLS).limit(50)
     store = str(tmp_path / "s")
@@ -174,7 +175,7 @@ def test_retire_ids_store_roundtrip(spark, tmp_path):
     assert _read_exact(spark, store).count() == n0 - n_retired
     left = _read_bands(spark, store).join(ids, "doc_id", "left_semi")
     assert left.count() == 0
-    assert not os.path.exists(store + "._retire_staging")
+    assert not os.path.exists(staging_path(store))
 
     # retiring already-absent ids is a no-op (idempotent release replay)
     assert retire_ids(spark, ids, store) == 0
@@ -278,70 +279,70 @@ def test_retire_ids_rekeys_orphaned_fingerprints(spark, tmp_path):
 
 
 def test_recover_store_promotes_committed_staging_only(spark, tmp_path):
-    """Crash-window healing, reader vs writer contracts (ADVICE r5+r6):
+    """Crash-window healing, reader vs writer contracts (ADVICE r5+r6).
+    The retire swaps the whole store root in with one rename; each crash
+    state is planted by killing the swap at that step:
 
     - committed staging next to an INTACT root: readers do NOT clobber
       (a concurrent retire_ids may be mid-swap on those dirs) — only
       the writer's entry call completes the swap;
-    - committed staging with a root table MISSING (crash between the
-      swap's delete and rename): the next read heals just that slot;
+    - committed staging with the root MISSING (crash between the swap's
+      delete and rename): the next read promotes it;
     - uncommitted staging: readers leave it alone, the writer's entry
       call discards its own crash debris."""
-    from acled_spark.dedup_store import (
-        _COMMIT_MARKER,
-        _read_exact,
-        _retire_staging,
-        recover_store,
-    )
+    from acled_spark.dedup_store import _read_exact
+    from acled_spark.fsutil import heal_dir, staging_path
+    from tests.conftest import commit_crash
 
     # limit(30) takes the file's natural row order, so doc_id < 10 rows
-    # are present and the >= 10 filter actually shrinks the corpus
+    # are present and retiring them actually shrinks the store
     docs = load(spark, SF_DIR, "documents").select(*DOC_COLS).limit(30)
     store = str(tmp_path / "s")
+    staging = staging_path(store)
     init_store(docs, store)
     n0 = _read_exact(spark, store).count()
 
     # crash AFTER the staging write + commit marker but BEFORE any
     # swap: root is fully intact, so READERS must not touch anything —
     # the writer's delete+rename may be about to run on those dirs
-    smaller = docs.filter(F.col("doc_id") >= 10)
-    staging = _retire_staging(store)
-    init_store(smaller, staging)
-    open(os.path.join(staging, _COMMIT_MARKER), "w").write("committed")
+    with commit_crash("delete"):
+        retire_ids(spark, docs.filter(F.col("doc_id") < 10), store)
     n_staged = spark.read.parquet(os.path.join(staging, "exact")).count()
-    assert recover_store(spark, store) is False  # no promotion by reader
-    assert os.path.exists(staging)  # shell retained for the writer
+    assert heal_dir(spark, store) is False  # no promotion by reader
+    assert os.path.exists(staging)  # staging retained for the writer
     assert _read_exact(spark, store).count() == n0  # intact root served
 
-    # crash INSIDE the swap: root/exact was deleted, its staged
-    # replacement not yet renamed — the next read promotes exactly the
-    # missing slot (rename only, no deletes) and leaves bands alone
-    import shutil
-
-    shutil.rmtree(os.path.join(store, "exact"))
-    assert _read_exact(spark, store).count() == n_staged < n0
-    assert os.path.exists(os.path.join(store, "bands"))  # untouched
-    assert os.path.exists(staging)  # readers never remove the shell
-
-    # the writer's entry call finishes the job: promotes any remaining
-    # staged table (bands here) and removes the emptied shell
-    assert recover_store(spark, store, discard_uncommitted=True) is True
+    # the writer's entry call finishes the job: the staged store
+    # replaces root and no staging is left behind
+    assert heal_dir(spark, store, discard_uncommitted=True) is True
     assert not os.path.exists(staging)
-    n_bands = spark.read.parquet(os.path.join(store, "bands")).count()
-    assert n_bands > 0
+    assert _read_exact(spark, store).count() == n_staged < n0
+
+    # crash INSIDE the swap: root was deleted, its staged replacement
+    # not yet renamed — the next read promotes the whole store (rename
+    # only, no deletes), both tables at once
+    with commit_crash("rename"):
+        retire_ids(spark, docs.filter(F.col("doc_id") < 15), store)
+    assert not os.path.exists(store)
+    n_promoted = _read_exact(spark, store).count()
+    assert n_promoted < n_staged
+    assert os.path.exists(os.path.join(store, "bands"))
+    assert not os.path.exists(staging)
+    assert heal_dir(spark, store, discard_uncommitted=True) is False
 
     # an UNCOMMITTED staging dir (in-progress or crashed write): the
     # read path must NOT touch it — a concurrent retirer may still be
     # writing — and the store serves the intact root tables
-    init_store(docs.limit(5), staging)  # no marker
-    assert recover_store(spark, store) is False
+    with commit_crash("marker"):
+        retire_ids(spark, docs.filter(F.col("doc_id") < 20), store)
+    assert heal_dir(spark, store) is False
     assert os.path.exists(staging)  # reader left it alone
-    assert _read_exact(spark, store).count() == n_staged  # unchanged
+    assert _read_exact(spark, store).count() == n_promoted  # unchanged
 
     # only the writer's own entry call clears its crash debris
-    assert recover_store(spark, store, discard_uncommitted=True) is False
+    assert heal_dir(spark, store, discard_uncommitted=True) is False
     assert not os.path.exists(staging)
-    assert _read_exact(spark, store).count() == n_staged
+    assert _read_exact(spark, store).count() == n_promoted
 
 
 def test_corpus_release_api_matches_manual_composition(spark, tmp_path):

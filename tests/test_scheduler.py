@@ -43,13 +43,13 @@ def test_backfill_materializes_only_missing(spark, tmp_path):
 
     done = run_backfill(spark, fetcher, bronze, days, limit=50)
     assert done == days
-    assert materialized_partitions(bronze) == set(days)
+    assert materialized_partitions(bronze, spark) == set(days)
 
     # second tick: nothing missing -> no work
     assert run_backfill(spark, fetcher, bronze, days, limit=50) == []
     # a new day appears -> only it is materialized
     new = date(2025, 1, 5)
-    assert missing_partitions(bronze, days + [new]) == [new]
+    assert missing_partitions(bronze, days + [new], spark) == [new]
     assert run_backfill(spark, fetcher, bronze, days + [new], limit=50) == [new]
     assert spark.read.parquet(bronze).count() == 30 * 4
 
@@ -63,7 +63,7 @@ def test_sensor_tick_end_to_end(spark, tmp_path):
     )
     # probed 4 days back, one unavailable -> three materialized
     assert done == [date(2025, 1, 7), date(2025, 1, 9), date(2025, 1, 10)]
-    assert materialized_partitions(bronze) == set(done)
+    assert materialized_partitions(bronze, spark) == set(done)
 
 
 @pytest.mark.slow  # ~9 s train+persist (VERDICT r14 #1)
@@ -172,7 +172,7 @@ def test_sensor_tick_skips_probing_materialized_days(spark, tmp_path):
     bronze = os.path.join(str(tmp_path), "bronze")
     fetcher = _gapped_fetcher(set())
     sensor_tick(spark, fetcher, bronze, today=date(2025, 1, 10), days_back=3)
-    assert len(materialized_partitions(bronze)) == 3
+    assert len(materialized_partitions(bronze, spark)) == 3
 
     probes = []
 

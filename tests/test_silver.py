@@ -510,3 +510,110 @@ def test_table_exists_ignores_crash_debris(spark, tmp_path):
     ).limit(50).localCheckpoint()
     upsert_partitioned(spark, ev, target, key="event_id", partition_col="day")
     assert spark.read.parquet(target).count() == 50
+
+
+def test_whole_table_delete_crash_heals_before_the_next_write(spark, tmp_path):
+    """A crash inside delete_keys' whole-table swap (table deleted, its
+    committed staging not yet renamed) must not cost the table: the next
+    upsert_partitioned heals first and keeps every pre-delete partition
+    outside its batch, where it used to bootstrap the table from the
+    batch alone.  delete_keys on the healed table works."""
+    from acled_spark.fsutil import staging_path
+    from acled_spark.silver import delete_keys
+    from tests.conftest import commit_crash
+
+    target = os.path.join(str(tmp_path), "silver")
+    ev = _events_with_day(spark)
+    days = ["2024-01-05", "2024-01-06", "2024-01-07"]
+    for d in days[:2]:
+        upsert_partitioned(
+            spark, ev.filter(F.col("day") == d), target, key="event_id",
+            partition_col="day",
+        )
+    want = {d: ev.filter(F.col("day") == d).count() for d in days}
+    victims = (
+        ev.filter(F.col("day") == days[0]).select("event_id")
+        .orderBy("event_id").limit(3)
+    )
+    with commit_crash("rename"):
+        delete_keys(spark, target, victims, key="event_id")
+    assert not os.path.exists(target)
+    assert os.path.exists(staging_path(target))
+    want[days[0]] -= 3
+
+    upsert_partitioned(
+        spark, ev.filter(F.col("day") == days[2]), target, key="event_id",
+        partition_col="day",
+    )
+    out = spark.read.parquet(target)
+    got = {str(r["day"]): r["count"] for r in out.groupBy("day").count().collect()}
+    assert got == want
+    assert out.join(victims, "event_id", "left_semi").count() == 0
+    assert not os.path.exists(staging_path(target))
+
+    more = (
+        ev.filter(F.col("day") == days[1]).select("event_id")
+        .orderBy("event_id").limit(2)
+    )
+    assert delete_keys(spark, target, more, key="event_id") == 2
+    assert spark.read.parquet(target).count() == sum(want.values()) - 2
+
+
+@pytest.mark.parametrize("reader_at", ["before_delete", "after_delete"])
+def test_commit_dir_and_a_healing_reader_commute(
+    spark, tmp_path, monkeypatch, reader_at
+):
+    """Silver has no writer lock, so upsert_partitioned's entry heal can
+    land anywhere inside a whole-table delete's swap.  A reader healing
+    before the delete leaves the live table alone; one healing between
+    the delete and the rename promotes the committed staging itself, and
+    the writer takes that as its own rename.  Either order ends with the
+    staged copy in place and no error on either thread."""
+    import threading
+
+    from acled_spark import fsutil
+
+    dest = str(tmp_path / "t")
+    staging = fsutil.staging_path(dest)
+    spark.range(3).write.parquet(dest)
+    spark.range(5).write.parquet(staging)
+    reader_go, reader_done = threading.Event(), threading.Event()
+    real_delete = fsutil.fs_delete
+
+    def delete_around_reader(spark_, path):
+        if reader_at == "after_delete":
+            real_delete(spark_, path)
+        reader_go.set()
+        assert reader_done.wait(120), "reader hung"
+        if reader_at == "before_delete":
+            real_delete(spark_, path)
+
+    monkeypatch.setattr(fsutil, "fs_delete", delete_around_reader)
+    healed, errs = [], []
+
+    def reader():
+        try:
+            assert reader_go.wait(120), "writer never reached the delete"
+            healed.append(fsutil.heal_dir(spark, dest))
+        except Exception as exc:  # noqa: BLE001 — surfaced via assert
+            errs.append(exc)
+        finally:
+            reader_done.set()
+
+    def writer():
+        try:
+            fsutil.commit_dir(spark, staging, dest)
+        except Exception as exc:  # noqa: BLE001 — surfaced via assert
+            errs.append(exc)
+            reader_go.set()
+
+    threads = [threading.Thread(target=f, daemon=True) for f in (reader, writer)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+    assert not any(t.is_alive() for t in threads), "thread hung"
+    assert errs == [], errs
+    assert healed == [reader_at == "after_delete"]
+    assert spark.read.parquet(dest).count() == 5
+    assert not os.path.exists(staging)
