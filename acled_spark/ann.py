@@ -23,8 +23,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from acled_spark.fsutil import (
+    fs_delete, fs_exists, fs_list_dirs, read_stamp, write_stamp,
+)
 from acled_spark.session import arrow_frame
 from acled_spark.silver import merge_updates
+from acled_spark.streaming import EpochSink
 from acled_spark.vector import as_double, cosine, dot, l2_norm, sq_dist
 
 SEED = 42
@@ -36,7 +40,7 @@ class IvfIndex:
     assigned: DataFrame  # vec_id, embedding (array), cell
     base_cost: float | None = None  # mean squared centroid distance at fit
     #: the committed durable fold this index serves from (None for
-    #: in-memory / legacy-flat indexes) — the GC clamp in
+    #: in-memory indexes) — the GC clamp in
     #: _commit_durable_fold needs it so a replayed fold after a crash
     #: can never delete the epoch still being served (r8 review)
     epoch: int | None = None
@@ -303,11 +307,7 @@ def ivf_search(
 # delete-then-rename swap could FileNotFound it mid-fold),
 # and the commit point is the parquet job's own _SUCCESS marker — a
 # crash mid-write leaves an uncommitted directory that the next fold
-# simply overwrites, with no by-hand promotion step.  The `_` prefix
-# makes Spark's readers HIDE the epoch dirs from a listing of
-# durable_path itself, so a legacy flat-layout index still serving from
-# the root can never double-read new folds (both behaviors verified:
-# explicit-path reads of `_`-dirs work; parent reads skip them).
+# simply overwrites, with no by-hand promotion step.
 # IVF_DURABLE_RETAIN committed folds are kept (current + previous by
 # default — enough for any search in flight against the immediately
 # superseded index); older ones are GC'd after each commit.
@@ -333,8 +333,6 @@ def _epoch_dir(root: str, n: int) -> str:
 def _committed_epochs(spark, root: str) -> list[int]:
     """Epoch numbers under ``root`` whose parquet write COMMITTED
     (the _SUCCESS marker exists), sorted ascending."""
-    from acled_spark.fsutil import fs_exists, fs_list_dirs
-
     out = []
     for name in fs_list_dirs(spark, root):
         if not name.startswith(_EPOCH_PREFIX):
@@ -366,8 +364,6 @@ def _commit_durable_fold(
     maintainer (and any search against it) is STILL reading (r8
     review).  Nothing at or above the serving epoch is ever GC'd.
     """
-    from acled_spark.fsutil import fs_delete, fs_list_dirs
-
     if retain < 1:
         raise ValueError(f"retain must be >= 1, got {retain}")
     committed = _committed_epochs(spark, root)
@@ -382,7 +378,7 @@ def _commit_durable_fold(
         cutoff = min(cutoff, serving_epoch)
     for name in fs_list_dirs(spark, root):
         if not name.startswith(_EPOCH_PREFIX):
-            continue  # legacy flat files / foreign dirs are not ours to GC
+            continue  # foreign dirs are not ours to GC
         try:
             n = int(name[len(_EPOCH_PREFIX):])
         except ValueError:
@@ -390,31 +386,6 @@ def _commit_durable_fold(
         if n < cutoff:
             fs_delete(spark, f"{root.rstrip('/')}/{name}")
     return spark.read.parquet(_epoch_dir(root, nxt)), nxt
-
-
-def gc_legacy_flat(spark, durable_path: str) -> int:
-    """Delete the superseded LEGACY flat-layout files at the root of
-    ``durable_path`` once at least one committed epoch fold exists
-    (r8 review: the epoch GC deliberately skips non-epoch entries, so
-    a migrated deployment otherwise carries a corpus-sized dead copy
-    forever).  Returns the number of top-level files removed.
-
-    NOT called automatically: an in-process index loaded from the
-    legacy layout may still be serving those files — run this after
-    every consumer has moved to an epoch-fold index (one maintainer
-    fold + restart is enough).
-    """
-    from acled_spark.fsutil import fs_delete, fs_list
-
-    if not _committed_epochs(spark, durable_path):
-        raise ValueError(
-            f"no committed epoch fold under {durable_path}; refusing to "
-            "delete the flat layout that is still the only copy"
-        )
-    files = [name for name, is_dir in fs_list(spark, durable_path) if not is_dir]
-    for name in files:
-        fs_delete(spark, f"{durable_path.rstrip('/')}/{name}")
-    return len(files)
 
 
 def load_ivf_index(
@@ -425,50 +396,25 @@ def load_ivf_index(
 ) -> IvfIndex:
     """Recover a durable IVF index after a restart (ADVICE r7).
 
-    Resolves the latest COMMITTED epoch fold under ``durable_path``;
-    when none exists, falls back to the legacy flat layout — healing a
-    legacy staging leftover first (promote-into-missing-root via
-    :func:`~acled_spark.fsutil.fs_try_promote_dir`, the reader-safe rule
-    of :func:`~acled_spark.fsutil.heal_dir`, minus the commit marker the
-    old swap never wrote), so a maintainer restarted after a crash in
-    the OLD delete-then-rename swap window self-heals instead of
-    failing on ``spark.read.parquet(durable_path)``.
+    Resolves the latest COMMITTED epoch fold under ``durable_path``
+    (an uncommitted partial left by a crash mid-fold is ignored); with
+    none, raises ``FileNotFoundError``, the rebuild-from-scratch signal.
 
     ``model`` is the frozen quantizer (persist/restore it with
     ml/persist.py next to the assignment); ``base_cost`` restores the
     staleness baseline when the caller recorded it.
     """
-    from acled_spark.fsutil import (
-        fs_exists, fs_list_data_files, fs_try_promote_dir, staging_path,
-    )
-
     committed = _committed_epochs(spark, durable_path)
-    if committed:
-        assigned = spark.read.parquet(_epoch_dir(durable_path, committed[-1]))
-        return IvfIndex(
-            model=model,
-            assigned=assigned,
-            base_cost=base_cost,
-            epoch=committed[-1],
+    if not committed:
+        raise FileNotFoundError(
+            f"no committed IVF fold under {durable_path} (no _epoch-* with "
+            "_SUCCESS)"
         )
-    fs_try_promote_dir(spark, staging_path(durable_path), durable_path)
-    # Legacy flat layout needs actual VISIBLE data files, not bare
-    # directory existence: a root holding only an uncommitted _epoch
-    # partial (crash mid-FIRST-fold) would otherwise reach
-    # read.parquet and die with an unable-to-infer-schema
-    # AnalysisException instead of the documented FileNotFoundError
-    # the rebuild-from-scratch path catches (r8 review).
-    if fs_exists(spark, durable_path) and fs_list_data_files(
-        spark, durable_path
-    ):
-        return IvfIndex(
-            model=model,
-            assigned=spark.read.parquet(durable_path),
-            base_cost=base_cost,
-        )
-    raise FileNotFoundError(
-        f"no committed IVF fold under {durable_path} (no _epoch-* with "
-        "_SUCCESS, no legacy flat layout, no recoverable staging)"
+    return IvfIndex(
+        model=model,
+        assigned=spark.read.parquet(_epoch_dir(durable_path, committed[-1])),
+        base_cost=base_cost,
+        epoch=committed[-1],
     )
 
 
@@ -644,7 +590,7 @@ def ivf_staleness(index: IvfIndex, vec_col: str = "embedding") -> dict:
     }
 
 
-class IvfMaintainer:
+class IvfMaintainer(EpochSink):
     """``foreachBatch`` face for streaming vector upserts.
 
     Wraps a mutable index reference so a Structured Streaming sink can
@@ -665,8 +611,12 @@ class IvfMaintainer:
     upserts unrecoverable.  With it, each fold commits an epoch
     subdirectory (previous fold retained for in-flight searches) and
     executor loss costs a re-read.  After a restart, reconstruct with
-    :meth:`resume` — it resolves the latest committed fold and heals
-    legacy staging leftovers (ADVICE r7).
+    :meth:`resume` — it resolves the latest committed fold (ADVICE r7).
+
+    A replayed epoch adds no fold: the batch stamp is kept on the
+    maintainer and, durable, in the fold's ``_epoch-N/`` (written after
+    its ``_SUCCESS``; read back from the serving fold, so it survives
+    :meth:`resume`).  A crash between the two refolds that epoch once.
     """
 
     @classmethod
@@ -681,8 +631,8 @@ class IvfMaintainer:
     ) -> "IvfMaintainer":
         """Rebuild the maintainer from its durable state after a
         restart: :func:`load_ivf_index` resolves the latest committed
-        epoch fold (or heals/reads the legacy layout), so a maintainer
-        that crashed mid-fold comes back without manual promotion."""
+        epoch fold, so a maintainer that crashed mid-fold comes back
+        without manual promotion, serving the stamp of its last fold."""
         return cls(
             load_ivf_index(spark, durable_path, model, base_cost=base_cost),
             vec_col=vec_col,
@@ -706,16 +656,14 @@ class IvfMaintainer:
         #: runs spans fewer than `retain - 1` trigger intervals (see
         #: the IVF_DURABLE_RETAIN note)
         self.retain = retain
-        self.batches_applied = 0
+        self._stamp: str | None = None
 
-    def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            # idle trigger intervals hand foreachBatch zero-row batches;
-            # folding one would still run transform + anti-join + a
-            # full-index localCheckpoint copy — a complete index
-            # rematerialization per empty interval (round-7 review;
-            # same guard as DriftMonitor / streaming._merge_batch)
-            return
+    def last_stamp(self, spark) -> str | None:
+        if self.durable_path is None or self.index.epoch is None:
+            return self._stamp
+        return read_stamp(spark, _epoch_dir(self.durable_path, self.index.epoch))
+
+    def fold(self, batch_df: DataFrame, stamp: str) -> None:
         superseded = self.index
         self.index = ivf_upsert(
             self.index,
@@ -738,7 +686,13 @@ class IvfMaintainer:
             # checkpoint-backed and stay on the r7 rule (ContextCleaner
             # frees the weak-ref'd RDD blocks once unreachable).
             superseded.unpersist()
-        self.batches_applied += 1
+        self._stamp = stamp
+        if self.durable_path is not None and self.index.epoch is not None:
+            write_stamp(
+                batch_df.sparkSession,
+                _epoch_dir(self.durable_path, self.index.epoch),
+                stamp,
+            )
 
     def staleness(self) -> dict:
         return ivf_staleness(self.index, self.vec_col)

@@ -46,6 +46,7 @@ from pyspark.sql import functions as F
 from acled_spark.fsutil import commit_dir, fs_exists, heal_dir, staging_path
 from acled_spark.queries.dedup import incremental_classify, minhash_bands_spark
 from acled_spark.queries.text import fingerprint_spark
+from acled_spark.streaming import EpochSink
 
 
 #: ``root`` accepts two backends: a filesystem path (two plain parquet
@@ -569,7 +570,7 @@ def process_batch(
     return verdicts, n
 
 
-class DedupMaintainer:
+class DedupMaintainer(EpochSink):
     """``foreachBatch`` face for streaming ingest dedup — the dedup
     analog of :class:`acled_spark.ann.IvfMaintainer`.
 
@@ -591,22 +592,19 @@ class DedupMaintainer:
     post-append crash — where the batch's own survivor is now in the
     store — reports byte-identical verdict rows to the original
     delivery, and an epoch-keyed ``on_verdicts`` sink can overwrite
-    idempotently.
+    idempotently, so the face keeps no stamp.
     """
 
     def __init__(self, root: str, on_verdicts=None):
         self.root = root
         self.on_verdicts = on_verdicts
-        self.batches_applied = 0
         self.docs_appended = 0
 
-    def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def fold(self, batch_df: DataFrame, stamp: str) -> None:
         # process_batch computes the batch signatures ONCE and shares
         # them across the verdict joins, the conflict check, and the
         # append — the policy hook sees the same materialized verdicts
-        verdicts, n = process_batch(spark, batch_df, self.root)
+        verdicts, n = process_batch(batch_df.sparkSession, batch_df, self.root)
         if self.on_verdicts is not None:
             self.on_verdicts(verdicts)
         self.docs_appended += n
-        self.batches_applied += 1

@@ -8,12 +8,15 @@ this module is the PRODUCTION shape around the same arithmetic:
   rows, regardless of corpus size);
 - :func:`psi_scores` computes per-group PSI between two such sketches —
   pure arithmetic on tiny frames, no rescan of either period;
-- :class:`DriftMonitor` is the ``foreachBatch`` face (the drift analog
-  of :class:`acled_spark.dedup_store.DedupMaintainer` and
+- :class:`DriftMonitor` is the ``foreachBatch`` face (an
+  :class:`acled_spark.streaming.EpochSink`, like
+  :class:`acled_spark.dedup_store.DedupMaintainer` and
   :class:`acled_spark.ann.IvfMaintainer`): each micro-batch is scored
   against the persisted reference counts, scores go to a policy hook
   (alert, log, trigger retrain), and the reference can optionally
-  absorb the batch so the monitor tracks a moving baseline.
+  absorb the batch so the monitor tracks a moving baseline.  A fold
+  commits the batch's stamp as the reference's ``_COMMIT`` marker, so
+  a replayed epoch is neither scored nor folded twice.
 
 Scale: a batch is scanned once into its bin sketch; the reference
 parquet is |groups|·bins rows.  Nothing else moves.
@@ -27,10 +30,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from acled_spark.fsutil import (
-    commit_dir, fs_exists, fs_read_text, fs_write_text, heal_dir, staging_path,
+    commit_dir, fs_exists, fs_read_text, fs_write_text, heal_dir, read_stamp,
+    staging_path,
 )
-
-_EPOCH_MARKER = "_LAST_FOLDED_EPOCH"
+from acled_spark.streaming import EpochSink
 
 DEFAULT_BINS = 10
 DEFAULT_WIDTH = 50.0
@@ -203,7 +206,7 @@ def init_reference(
     )
 
 
-class DriftMonitor:
+class DriftMonitor(EpochSink):
     """``foreachBatch`` face: score each micro-batch's distribution
     against the persisted reference sketch::
 
@@ -216,7 +219,9 @@ class DriftMonitor:
     fold into the reference after scoring, so the baseline tracks the
     stream (drift then means "new batch vs everything seen", the
     moving-baseline policy); default keeps the reference frozen (drift
-    means "vs the blessed baseline", the release-gate policy).
+    means "vs the blessed baseline", the release-gate policy).  An idle
+    (empty) batch is skipped: its sketch would read every reference
+    group as maximally drifted (n_new_t=0 → uniform p_new).
     """
 
     def __init__(
@@ -236,7 +241,6 @@ class DriftMonitor:
         self.width = width
         self.on_scores = on_scores
         self.update_reference = update_reference
-        self.batches_scored = 0
 
     def _check_reference_config(self, spark) -> None:
         """Fail fast when the persisted reference was built under a
@@ -258,33 +262,26 @@ class DriftMonitor:
                 "mismatched grids silently bias PSI"
             )
 
-    def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        # recovery runs BEFORE the idle-batch guard: a crash mid-swap
-        # (root deleted, staging not yet renamed) followed by a quiet
-        # stream would otherwise leave the reference missing for as
-        # long as no data arrives (round-7 review).  The reader form
-        # suffices: a stale staging next to an intact root is replaced
-        # by the next fold's mode("overwrite") write
+    def heal(self, spark) -> None:
+        # The reader form suffices: a stale staging next to an intact
+        # root is replaced by the next fold's mode("overwrite") write
         heal_dir(spark, self.root)
-        if batch_df.isEmpty():
-            # idle trigger intervals hand foreachBatch zero-row batches;
-            # scoring one would read EVERY reference group as maximally
-            # drifted (n_new_t=0 → uniform p_new) and page on no data
-            return
+
+    def last_stamp(self, spark) -> str | None:
+        # a replayed epoch after a post-fold crash: the reference already
+        # ABSORBED the batch, so scoring it again would compare the batch
+        # against a baseline containing itself — PSI reads near-zero and
+        # an epoch-keyed alert sink would overwrite the original (true)
+        # reading with a spurious all-clear (r7 review).  A frozen
+        # reference commits nothing, so every delivery scores.
+        return read_stamp(spark, self.root) if self.update_reference else None
+
+    def fold(self, batch_df: DataFrame, stamp: str) -> None:
+        spark = batch_df.sparkSession
         self._check_reference_config(spark)
         new = bin_counts(
             batch_df, self.value_col, self.group_col, self.n_bins, self.width
         ).localCheckpoint()  # one batch scan, shared by score + fold
-        if self.update_reference and self._already_folded(spark, epoch_id, new):
-            # replayed epoch after a post-fold crash: the reference
-            # already ABSORBED this batch, so scoring now would compare
-            # the batch against a baseline containing itself — PSI reads
-            # near-zero and an epoch-keyed alert sink would overwrite
-            # the original (true) reading with a spurious all-clear
-            # (r7 review).  The original delivery scored and folded;
-            # a replay owes nothing.
-            return
         old = spark.read.parquet(self.root)
         scores = psi_scores(old, new, self.n_bins).localCheckpoint()
         if self.on_scores is not None:
@@ -301,18 +298,12 @@ class DriftMonitor:
             # stage-then-swap: a crash mid-fold must never destroy the
             # accumulated baseline (an in-place overwrite deletes the
             # old reference before the new one is committed).  The
-            # epoch marker is written INTO the staging dir (underscore
-            # files are invisible to the parquet reader) so it swaps in
+            # stamp is the staging dir's _COMMIT marker, so it swaps in
             # atomically with the data: foreachBatch is at-least-once,
             # and a replayed epoch folding its counts a SECOND time
             # would permanently double-count those bins and bias every
             # future PSI low.
             merged.write.mode("overwrite").parquet(staging)
-            fs_write_text(
-                spark,
-                posixpath.join(staging, _EPOCH_MARKER),
-                self._fold_stamp(epoch_id, new),
-            )
             # the binning-config sidecar must ride the swap too — the
             # staging dir replaces root WHOLESALE, and losing the
             # record would disable the grid-mismatch check for every
@@ -322,31 +313,4 @@ class DriftMonitor:
                 posixpath.join(staging, _BIN_CONFIG_MARKER),
                 f"{self.n_bins}:{self.width!r}",
             )
-            commit_dir(spark, staging, self.root)
-        self.batches_scored += 1
-
-    @staticmethod
-    def _fold_stamp(epoch_id: int, new_counts: DataFrame) -> str:
-        """Identity of one fold: epoch id + a digest of the batch's bin
-        sketch.  The digest disambiguates a REPLAY of the same batch
-        from a fresh stream whose epoch ids restarted (new checkpoint
-        dir) and coincidentally collide — bare epoch equality would
-        silently drop that legitimate first fold from the baseline."""
-        import hashlib
-
-        rows = sorted(
-            (str(r["group"]), int(r["bin"]), int(r["n"]))
-            for r in new_counts.collect()  # |groups|·bins rows — tiny
-        )
-        digest = hashlib.md5(repr(rows).encode()).hexdigest()
-        return f"{epoch_id}:{digest}"
-
-    def _already_folded(self, spark, epoch_id: int, new_counts: DataFrame) -> bool:
-        """True when the reference already contains exactly this fold
-        (an at-least-once foreachBatch replay after a post-swap crash)."""
-        marker = posixpath.join(self.root, _EPOCH_MARKER)
-        if not fs_exists(spark, marker):
-            return False
-        return fs_read_text(spark, marker).strip() == self._fold_stamp(
-            epoch_id, new_counts
-        )
+            commit_dir(spark, staging, self.root, stamp)

@@ -108,11 +108,24 @@ def _swap(spark: SparkSession, staging: str, dest: str) -> None:
         raise IOError(f"staged {staging} missing and {dest} absent")
 
 
-def commit_dir(spark: SparkSession, staging: str, dest: str) -> None:
+def write_stamp(spark: SparkSession, path: str, stamp: str) -> None:
+    """Write ``stamp`` as the dir ``path``'s ``_COMMIT`` marker."""
+    fs_write_text(spark, posixpath.join(path, _COMMIT), stamp)
+
+
+def read_stamp(spark: SparkSession, path: str) -> str | None:
+    """The dir ``path``'s ``_COMMIT`` marker text; None without one."""
+    marker = posixpath.join(path, _COMMIT)
+    return fs_read_text(spark, marker) if fs_exists(spark, marker) else None
+
+
+def commit_dir(
+    spark: SparkSession, staging: str, dest: str, stamp: str = "committed"
+) -> None:
     """Commit the fully written ``staging`` dir and swap it in for
-    ``dest``: the ``_COMMIT`` marker is written last, after the data and
-    every sidecar, so a crash at any later point heals forward."""
-    fs_write_text(spark, posixpath.join(staging, _COMMIT), "committed")
+    ``dest``: the ``_COMMIT`` marker (holding ``stamp``) is written last,
+    after the data and every sidecar, so a crash later heals forward."""
+    write_stamp(spark, staging, stamp)
     _swap(spark, staging, dest)
 
 
@@ -166,6 +179,8 @@ def fs_delete(spark: SparkSession, path: str) -> None:
     fs, jpath, _ = _fs_and_path(spark, path)
     if fs.exists(jpath) and not fs.delete(jpath, True):
         raise IOError(f"could not delete {path}")
+
+
 def fs_qualified_path(spark: SparkSession, path: str) -> str:
     """The filesystem-resolved absolute (decoded) path of ``path`` —
     the prefix against which file URIs relativize."""

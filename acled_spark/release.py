@@ -106,10 +106,11 @@ class CorpusRelease:
 
         With ``fold_reference=True``, ``epoch_id`` is REQUIRED and must
         be unique per release (a release sequence number / tag hash):
-        the drift baseline's replay gate keys on ``(epoch_id, bin
-        digest)``, so two releases sharing the default id whose deltas
-        happen to sketch identically would misread the second fold as
-        an at-least-once replay and silently skip it.
+        outside a stream it is the whole batch stamp the drift
+        baseline's replay gate compares (see
+        :class:`~acled_spark.streaming.EpochSink`), so two releases
+        sharing an id would misread the second fold as an at-least-once
+        replay and silently skip it.
         """
         from acled_spark.dedup_store import process_batch, retire_ids, store_exists
         from acled_spark.queries.cdc import snapshot_diff

@@ -12,6 +12,10 @@ re-expression:
 - PK upsert       -> ``foreachBatch`` + :func:`acled_spark.silver.
   upsert_partitioned` (stateless MERGE, unbounded lateness — exactly
   the reference's replay contract, T4);
+- every ``foreachBatch`` sink -> an :class:`EpochSink`, which spells
+  the idle skip and the replay rule once (*Structured Streaming*'s
+  recipe: an at-least-once source plus a sink made idempotent by the
+  epoch it commits);
 - tumbling daily windows with watermarks for the stateful-agg variant
   the reference approximates with calendar partitions (T3).
 
@@ -28,6 +32,60 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
 from acled_spark.silver import upsert_partitioned
+
+
+class EpochSink:
+    """Base of every ``foreachBatch`` face.  ``__call__`` is the one
+    per-batch order: :meth:`heal`, skip an empty (idle) batch, skip a
+    batch whose stamp equals :meth:`last_stamp` (an at-least-once
+    replay), :meth:`fold`, count ``batches_applied``.
+
+    The stamp is ``f"{query_id}:{epoch_id}"``; the query id (local
+    property ``sql.streaming.queryId``) survives a restart from the same
+    checkpoint, so a fresh checkpoint's epoch 0 never matches an old
+    one.  Outside a stream it is ``epoch_id`` alone, kept unique by the
+    caller.
+    """
+
+    batches_applied = 0
+
+    def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
+        spark = batch_df.sparkSession
+        self.heal(spark)
+        if batch_df.isEmpty():
+            return
+        query_id = spark.sparkContext.getLocalProperty("sql.streaming.queryId")
+        stamp = str(epoch_id) if query_id is None else f"{query_id}:{epoch_id}"
+        if stamp == self.last_stamp(spark):
+            return
+        self.fold(batch_df, stamp)
+        self.batches_applied += 1
+
+    def heal(self, spark: SparkSession) -> None:
+        """Crash repair; runs before the idle skip, so a quiet stream heals."""
+
+    def last_stamp(self, spark: SparkSession) -> str | None:
+        """The last committed stamp; None (fold every batch) by default."""
+        return None
+
+    def fold(self, batch_df: DataFrame, stamp: str) -> None:
+        """Apply the batch, committing ``stamp`` with it if stamps are kept."""
+        raise NotImplementedError
+
+
+class _UpsertSink(EpochSink):
+    """:func:`start_upsert_stream`'s face: the keyed MERGE is idempotent."""
+
+    def __init__(self, *args, **kwargs):
+        self.args, self.kwargs = args, kwargs
+
+    def fold(self, batch_df: DataFrame, stamp: str) -> None:
+        # The batch's own session, not the closed-over driver session:
+        # foreachBatch may hand the callback a cloned session whose conf
+        # scoping must not leak into (or depend on) the outer one.
+        upsert_partitioned(
+            batch_df.sparkSession, batch_df, *self.args, **self.kwargs
+        )
 
 
 def read_file_stream(
@@ -90,19 +148,11 @@ def start_upsert_stream(
         spark, source_dir, schema, max_files_per_trigger=max_files_per_trigger
     )
 
-    def _merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        # The batch's own session, not the closed-over driver session:
-        # foreachBatch may hand the callback a cloned session whose conf
-        # scoping must not leak into (or depend on) the outer one.
-        upsert_partitioned(
-            batch_df.sparkSession, batch_df, target_path, key, partition_col,
-            order_col, table_format=table_format,
-        )
-
+    sink = _UpsertSink(
+        target_path, key, partition_col, order_col, table_format=table_format
+    )
     return (
-        stream.writeStream.foreachBatch(_merge_batch)
+        stream.writeStream.foreachBatch(sink)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()

@@ -631,34 +631,66 @@ def test_ivf_maintainer_resume_from_durable(spark, index, tmp_path):
     assert revived.index.assigned.count() == n + 4
 
 
-def test_load_ivf_index_heals_legacy_staging(spark, index, tmp_path):
-    """Legacy-layout recovery: a crash in the OLD swap window left
-    `root._staging` complete and root missing — load_ivf_index must
-    promote it (reader-safe: only into a MISSING root) and serve it."""
-    from acled_spark.ann import load_ivf_index
-    from acled_spark.fsutil import staging_path
-
-    root = str(tmp_path / "legacy_root")
-    index.assigned.limit(7).write.parquet(staging_path(root))
-    idx = load_ivf_index(spark, root, index.model)
-    assert idx.assigned.count() == 7
-
-    # nothing at all -> a loud, named error
-    with pytest.raises(FileNotFoundError, match="no committed IVF fold"):
-        load_ivf_index(spark, str(tmp_path / "absent"), index.model)
-
-    # r8 review: a root holding ONLY an uncommitted epoch partial
-    # (crash mid-FIRST-fold) must raise the same documented
-    # FileNotFoundError — not leak Spark's unable-to-infer-schema
-    # AnalysisException past the rebuild-from-scratch catch
+def test_load_ivf_index_without_committed_fold_raises(spark, index, tmp_path):
+    """No committed epoch fold -> the documented FileNotFoundError the
+    rebuild-from-scratch path catches, also when the root holds only an
+    uncommitted epoch partial (crash mid-FIRST-fold), which must not
+    leak Spark's unable-to-infer-schema AnalysisException (r8 review)."""
     import os
 
-    from acled_spark.ann import _epoch_dir
+    from acled_spark.ann import _epoch_dir, load_ivf_index
 
+    with pytest.raises(FileNotFoundError, match="no committed IVF fold"):
+        load_ivf_index(spark, str(tmp_path / "absent"), index.model)
     partial_root = str(tmp_path / "partial_only")
     os.makedirs(_epoch_dir(partial_root, 0))
     with pytest.raises(FileNotFoundError, match="no committed IVF fold"):
         load_ivf_index(spark, partial_root, index.model)
+
+
+def test_ivf_maintainer_replayed_epoch_adds_no_fold(spark, index):
+    """foreachBatch is at-least-once: a replay of the epoch the
+    in-memory maintainer just folded is a no-op (the same index object,
+    not a refold of the same rows); the next epoch folds."""
+    from acled_spark.ann import IvfMaintainer
+
+    maint = IvfMaintainer(index)
+    batch = index.assigned.orderBy("vec_id").limit(2).select(
+        (F.col("vec_id") + 100_000).alias("vec_id"), "embedding"
+    )
+    maint(batch, epoch_id=4)
+    folded = maint.index
+    maint(batch, epoch_id=4)
+    assert maint.index is folded and maint.batches_applied == 1
+    maint(batch, epoch_id=5)
+    assert maint.index is not folded and maint.batches_applied == 2
+
+
+def test_ivf_durable_replay_adds_no_epoch_across_resume(spark, index, tmp_path):
+    """The durable stamp rides in the serving fold, so a replay is a
+    no-op in the folding process AND after resume(): no new _epoch-N."""
+    from acled_spark.ann import _committed_epochs, IvfMaintainer
+
+    durable = str(tmp_path / "ivf_root")
+    maint = IvfMaintainer(index, durable_path=durable)
+    batch = index.assigned.orderBy("vec_id").limit(2).select(
+        (F.col("vec_id") + 100_000).alias("vec_id"), "embedding"
+    )
+    maint(batch, epoch_id=0)
+    folded = maint.index
+    maint(batch, epoch_id=0)
+    assert maint.index is folded
+    assert _committed_epochs(spark, durable) == [0]
+
+    revived = IvfMaintainer.resume(
+        spark, index.model, durable, base_cost=index.base_cost
+    )
+    served = revived.index
+    revived(batch, epoch_id=0)
+    assert revived.index is served and revived.batches_applied == 0
+    assert _committed_epochs(spark, durable) == [0]
+    revived(batch, epoch_id=1)
+    assert _committed_epochs(spark, durable) == [0, 1]
 
 
 def test_ivf_gc_never_deletes_the_serving_epoch(spark, index, tmp_path):
@@ -720,34 +752,6 @@ def test_ivf_maintainer_releases_initial_build_cache(spark, tmp_path):
     assert not idx.assigned.storageLevel.useMemory  # released on fold 1
     # the superseded index still ANSWERS (recompute, not failure)
     assert idx.assigned.count() > 0
-
-
-def test_gc_legacy_flat_removes_only_root_files(spark, index, tmp_path):
-    """Legacy-flat migration debris: gc_legacy_flat deletes root-level
-    files once an epoch fold exists, never before, and never touches
-    the epoch dirs."""
-    from pyspark.sql import functions as F
-
-    from acled_spark.ann import (
-        _committed_epochs, gc_legacy_flat, IvfMaintainer, load_ivf_index,
-    )
-
-    root = str(tmp_path / "legacy_root")
-    index.assigned.limit(5).coalesce(1).write.parquet(root)  # legacy layout
-    with pytest.raises(ValueError, match="refusing"):
-        gc_legacy_flat(spark, root)  # no epoch fold yet — the only copy
-
-    maint = IvfMaintainer(
-        load_ivf_index(spark, root, index.model), durable_path=root
-    )
-    batch = index.assigned.orderBy("vec_id").limit(2).select(
-        (F.col("vec_id") + 100_000).alias("vec_id"), "embedding"
-    )
-    maint(batch, epoch_id=0)
-    removed = gc_legacy_flat(spark, root)
-    assert removed > 0
-    assert _committed_epochs(spark, root) == [0]   # epoch dirs untouched
-    assert maint.index.assigned.count() == 7       # still served from epoch
 
 
 def test_ivf_retain_window_is_a_knob(spark, index, tmp_path):

@@ -220,6 +220,27 @@ def test_dedup_maintainer_foreach_batch_face(spark, store):
     assert spark.read.parquet(f"{root}/exact").count() == n0 + 2
 
 
+def test_dedup_maintainer_idle_batch_runs_one_job(spark, store):
+    """An idle trigger interval's zero-row batch costs the emptiness
+    probe alone: no verdicts reach the policy hook, no signature pass
+    or store read runs (one Spark job in all)."""
+    from acled_spark.dedup_store import DedupMaintainer
+
+    root, corpus = store
+    seen = []
+    maint = DedupMaintainer(root, on_verdicts=seen.append)
+    sc = spark.sparkContext
+    group = "dedup-idle-batch"
+    sc.setJobGroup(group, "idle batch probe")
+    try:
+        maint(corpus.filter(F.col("doc_id") < 0), epoch_id=0)
+    finally:
+        sc.setJobGroup("", "")
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert seen == [] and maint.batches_applied == 0
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
 def test_append_raises_on_id_reuse_with_different_text(spark, store):
     """A batch doc_id already in the store with DIFFERENT text is an
     upstream identity bug: silently dropping it would leave the new

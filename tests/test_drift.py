@@ -33,7 +33,7 @@ def test_same_distribution_scores_stable(spark, tmp_path):
     mon_scores = []
     mon = DriftMonitor(root, on_scores=lambda s: mon_scores.append(s.collect()))
     mon(batch, epoch_id=0)
-    assert mon.batches_scored == 1
+    assert mon.batches_applied == 1
     rows = {r["group"]: r for r in mon_scores[0]}
     assert set(rows) == {"click", "error", "purchase", "signup", "view"}
     assert all(not r["drifted"] for r in rows.values())
@@ -78,7 +78,7 @@ def test_moving_baseline_folds_batch_counts(spark, tmp_path):
     assert folded.agg(F.sum("n")).collect()[0][0] == n_ref + batch.count()
     # a replay of the same batch against the GROWN reference still scores
     mon(batch, epoch_id=1)
-    assert mon.batches_scored == 2
+    assert mon.batches_applied == 2
 
 
 def test_null_group_counts_merge_and_score(spark):
@@ -110,7 +110,7 @@ def test_empty_batch_is_skipped(spark, tmp_path):
     fired = []
     mon = DriftMonitor(root, on_scores=fired.append, update_reference=True)
     mon(ref.filter(F.lit(False)), epoch_id=0)
-    assert fired == [] and mon.batches_scored == 0
+    assert fired == [] and mon.batches_applied == 0
     # reference untouched by the skipped fold
     assert spark.read.parquet(root).agg(F.sum("n")).collect()[0][0] == ref.count()
 
@@ -186,6 +186,38 @@ def test_drift_monitor_over_real_stream(spark, tmp_path):
     assert len(fired) == 1
 
 
+def test_fresh_checkpoint_epoch_zero_still_folds(spark, tmp_path):
+    """A stream started on a FRESH checkpoint dir numbers its epochs
+    from 0 again.  Its epoch 0 is a new query's batch, not a replay of
+    the old query's epoch 0, so it scores and folds even when its
+    counts equal the first one's: the stamp keys on Spark's query id
+    plus the epoch id."""
+    base = spark.createDataFrame(
+        [("a", float(v)) for v in (10, 60, 110, 160)],
+        "event_type string, value double",
+    )
+    root = str(tmp_path / "ref")
+    init_reference(base, root)
+    batch = spark.createDataFrame(
+        [("a", 10.0), ("a", 60.0)], "event_type string, value double"
+    )
+    fired = []
+    mon = DriftMonitor(root, update_reference=True, on_scores=fired.append)
+    for run in ("one", "two"):
+        src = str(tmp_path / f"src-{run}")
+        batch.write.parquet(src)
+        q = (
+            spark.readStream.schema(batch.schema).parquet(src)
+            .writeStream.foreachBatch(mon)
+            .option("checkpointLocation", str(tmp_path / f"ckpt-{run}"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+    assert len(fired) == 2 and mon.batches_applied == 2
+    assert spark.read.parquet(root).agg(F.sum("n")).collect()[0][0] == 8
+
+
 def test_moving_baseline_fold_is_epoch_idempotent(spark, tmp_path):
     """foreachBatch is at-least-once: a replayed epoch must NOT fold its
     counts into the reference a second time (double-counted bins would
@@ -247,7 +279,7 @@ def test_mismatched_binning_config_raises(spark, tmp_path):
     # matching config scores fine
     ok = DriftMonitor(root, n_bins=20)
     ok(batch, epoch_id=0)
-    assert ok.batches_scored == 1
+    assert ok.batches_applied == 1
 
 
 def test_psi_scores_rejects_out_of_grid_bins(spark):
@@ -299,7 +331,7 @@ def test_crash_recovery_heals_even_when_stream_is_idle(spark, tmp_path):
         mon(batch, epoch_id=0)
     assert not os.path.exists(root)
     mon(ref.filter(F.lit(False)), epoch_id=1)  # idle batch
-    assert mon.batches_scored == 0  # still skipped scoring
+    assert mon.batches_applied == 0  # still skipped scoring
     assert os.path.exists(root)  # but the reference was healed
 
 

@@ -195,3 +195,43 @@ def test_filesystem_internals_only_in_fsutil():
                         path.relative_to(pkg).as_posix()
                     )
     assert hits == {token: {"fsutil.py"} for token in tokens}, hits
+
+
+def test_foreach_batch_rule_only_in_streaming():
+    """Every ``foreachBatch`` face subclasses ``EpochSink`` and writes
+    only its hooks: the idle skip (``batch_df.isEmpty()``), the replay
+    check (the one ``last_stamp`` call) and the stamp's query id are
+    spelled only in ``streaming.py``, and drift's old epoch sidecar is
+    gone."""
+    from acled_spark import streaming
+    from acled_spark.ann import IvfMaintainer
+    from acled_spark.dedup_store import DedupMaintainer
+    from acled_spark.drift import DriftMonitor
+
+    for face in (DriftMonitor, IvfMaintainer, DedupMaintainer, streaming._UpsertSink):
+        assert issubclass(face, streaming.EpochSink), face
+        assert "__call__" not in vars(face), face
+    pkg = pathlib.Path(inspect.getfile(streaming)).parent
+    hits = {}
+    for path in sorted(pkg.rglob("*.py")):
+        text = path.read_text()
+        found = {
+            token for token in
+            ("sql.streaming.queryId", "_EPOCH_MARKER", "_LAST_FOLDED_EPOCH")
+            if token in text
+        }
+        for node in ast.walk(ast.parse(text)):
+            if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+                attr, owner = node.func.attr, node.func.value
+                if attr == "last_stamp" or (
+                    attr == "isEmpty"
+                    and isinstance(owner, ast.Name)
+                    and owner.id == "batch_df"
+                ):
+                    found.add(attr)
+        for token in found:
+            hits.setdefault(token, set()).add(path.relative_to(pkg).as_posix())
+    assert hits == {
+        token: {"streaming.py"}
+        for token in ("sql.streaming.queryId", "last_stamp", "isEmpty")
+    }, hits

@@ -117,7 +117,7 @@ def test_incremental_release_end_to_end(spark, tmp_path):
         on_scores=lambda s: captured.append(s.collect()),
     )
     mon(delta, epoch_id=0)
-    assert mon.batches_scored == 1
+    assert mon.batches_applied == 1
     scores = {r["group"]: r for r in captured[0]}
     assert scores  # every source that appears in either side is scored
     for r in scores.values():

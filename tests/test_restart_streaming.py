@@ -140,7 +140,7 @@ def test_drift_monitor_exactly_once_across_crash_restart(spark, tmp_path):
     assert len(fired2) == 1
     folded = spark.read.parquet(root).agg(F.sum("n")).collect()[0][0]
     assert folded == n_base + batch_a.count() + batch_b.count()
-    assert mon2.batches_scored == 1
+    assert mon2.batches_applied == 1
 
 
 # --- DedupMaintainer ---------------------------------------------------------
